@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -18,28 +17,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     def selected = only match {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None        => SparkEntry.queries
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosFlag, "true")
-      // NOT set: mapreduce.fileoutputcommitter.algorithm.version=2 —
-      // measured ~1.8x SLOWER on the persisted-artifact writers here
-      // (dedup_ledger_build 5.0 -> 9.0 s, ann_index_build 2.5 -> 3.5 s
-      // at sf0.1): on this local fs the v1 job-commit rename pass is
-      // cheap and v2's per-task direct commits serialize against the
-      // many tiny partition directories. Revisit only with an object
-      // store profile.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogHygiene.quietBoundedWindowWarn()
+    val spark = Session.local()
 
     for (warmDir <- Seq("/root/testdata/sf0.001", sfDir))
       selected.foreach { case (_, fn) =>

@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Dev sweep: measured ANN recall (vs brute-force top-5) across IVF
   * probe configurations, at each SF dir given. Used to pick the floors
@@ -10,10 +10,7 @@ import graft.operators.Similarity
   */
 object RecallSweep {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     // SWEEP_ONLY=filtered (comma-separable: ivf,lsh,pq,ivfpq,filtered,
     // neardup) restricts to named sections while re-measuring one
     // operating point
@@ -23,7 +20,7 @@ object RecallSweep {
                else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
     for (dir <- dirs) {
       val prepped = Similarity.prep(
-        spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding")
+        Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
       val queries = prepped.filter(col("id") % 50 === 0)
       val brute = Similarity.knnBrute(queries, prepped, k = 5)
         .select(col("q_id"), col("n_id")).cache()
@@ -89,7 +86,7 @@ object RecallSweep {
       // paying.
       if (want("filtered")) {
         val preppedL = Similarity.prep(
-          spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+          Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
           keep = Seq("label"))
         val queriesL = preppedL.filter(col("id") % 50 === 0)
         val bruteF = Similarity.knnBruteFiltered(queriesL, preppedL, k = 5,
@@ -129,7 +126,7 @@ object RecallSweep {
       // clears the floor at EVERY SF with recall still over its floor
       for (mh <- Seq(1, 2, 3)) {
         val sh = graft.operators.Dedup.simhashNearDups(
-          spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
+          Tables.read(spark, dir, "documents"), "doc_id", "text",
           maxHamming = mh).select(col("a_id"), col("b_id"))
         val nFound = sh.count()
         val shHit = sh.join(truth, Seq("a_id", "b_id"), "left_semi").count()

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Dev harness for the 10× scale probe (SCALING.md): builds an sf1-size
   * corpus by replicating the sf0.1 tables 10× with disjoint key spaces,
@@ -41,12 +42,7 @@ object ScaleProbe {
     "dedup_canonical", "dedup_edit", "langid_confusion", "emb_pq")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosFlag, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val src = "/root/testdata/sf0.1"
     val out = "target/scaledata/sf1"
 
@@ -55,7 +51,7 @@ object ScaleProbe {
     // every sub-linearity ratio is measured on a corrupted corpus. One
     // cheap max() per table, checked before any replication runs.
     def assertOffsetClear(table: String, idCol: String, offset: Long): Unit = {
-      val mx = spark.read.parquet(s"$src/$table.parquet")
+      val mx = Tables.read(spark, src, table)
         .agg(max(col(idCol).cast("long"))).head.getLong(0)
       require(mx < offset,
         s"replica offset unsound: max($table.$idCol)=$mx >= offset=$offset")
@@ -75,7 +71,7 @@ object ScaleProbe {
     if (!new java.io.File(s"$out/documents.parquet").exists()) {
       val reps = spark.range(0, 10).select(col("id").as("rep"))
       def replicate(table: String, tf: DataFrame => DataFrame): Unit =
-        tf(spark.read.parquet(s"$src/$table.parquet").crossJoin(reps))
+        tf(Tables.read(spark, src, table).crossJoin(reps))
           .write.mode("overwrite").parquet(s"$out/$table.parquet")
       replicate("documents", df => df.select(
         (col("doc_id") + col("rep") * 1000000L).as("doc_id"),
@@ -99,7 +95,7 @@ object ScaleProbe {
     // existence check so a pre-existing sf1 corpus gains the table
     if (!new java.io.File(s"$out/orders.parquet").exists()) {
       val reps = spark.range(0, 10).select(col("id").as("rep"))
-      spark.read.parquet(s"$src/orders.parquet").crossJoin(reps)
+      Tables.read(spark, src, "orders").crossJoin(reps)
         .withColumn("o_orderkey", col("o_orderkey") + col("rep") * 1000000000L)
         .withColumn("o_custkey", col("o_custkey") + col("rep") * 10000000L)
         .drop("rep")
@@ -112,7 +108,7 @@ object ScaleProbe {
     // span so the days-sized frames stay fixed while the stream is 10×
     if (!new java.io.File(s"$out/events.parquet").exists()) {
       val reps = spark.range(0, 10).select(col("id").as("rep"))
-      spark.read.parquet(s"$src/events.parquet").crossJoin(reps)
+      Tables.read(spark, src, "events").crossJoin(reps)
         .withColumn("event_id", col("event_id") + col("rep") * 1000000000L)
         .withColumn("user_id", col("user_id") + col("rep") * 10000000L)
         .drop("rep")
@@ -123,7 +119,7 @@ object ScaleProbe {
     // labels unchanged so the centroid bank stays label-count-sized
     if (!new java.io.File(s"$out/embeddings.parquet").exists()) {
       val reps = spark.range(0, 10).select(col("id").as("rep"))
-      spark.read.parquet(s"$src/embeddings.parquet").crossJoin(reps)
+      Tables.read(spark, src, "embeddings").crossJoin(reps)
         .withColumn("vec_id", col("vec_id") + col("rep") * 1000000L)
         .drop("rep")
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
@@ -150,7 +146,7 @@ object ScaleProbe {
       val out10 = "target/scaledata/sf10"
       if (!new java.io.File(s"$out10/documents.parquet").exists()) {
         val reps = spark.range(0, 100).select(col("id").as("rep"))
-        spark.read.parquet(s"$src/documents.parquet").crossJoin(reps)
+        Tables.read(spark, src, "documents").crossJoin(reps)
           .select(
             (col("doc_id") + col("rep") * 1000000L).as("doc_id"),
             when(col("rep") === 0, col("text")).otherwise(
@@ -159,7 +155,7 @@ object ScaleProbe {
             col("lang"), col("source"))
           .withColumn("n_chars", length(col("text")).cast("long"))
           .write.mode("overwrite").parquet(s"$out10/documents.parquet")
-        spark.read.parquet(s"$src/orders.parquet").crossJoin(reps)
+        Tables.read(spark, src, "orders").crossJoin(reps)
           .withColumn("o_orderkey", col("o_orderkey") + col("rep") * 1000000000L)
           .withColumn("o_custkey", col("o_custkey") + col("rep") * 10000000L)
           .drop("rep")
@@ -195,7 +191,7 @@ object ScaleProbe {
       val out10 = "target/scaledata/sf10"
       if (!new java.io.File(s"$out10/embeddings.parquet").exists()) {
         val reps = spark.range(0, 100).select(col("id").as("rep"))
-        spark.read.parquet(s"$src/embeddings.parquet").crossJoin(reps)
+        Tables.read(spark, src, "embeddings").crossJoin(reps)
           .withColumn("vec_id", col("vec_id") + col("rep") * 1000000L)
           .drop("rep")
           .write.mode("overwrite").parquet(s"$out10/embeddings.parquet")
@@ -233,7 +229,7 @@ object ScaleProbe {
       import graft.queries.ScaleQueries
       val pred = col("id") % ScaleQueries.PqQueryMod === 0 && col("id") < 1000000L
       val prepped = graft.operators.Similarity.prep(
-        spark.read.parquet(s"$out/embeddings.parquet"), "vec_id", "embedding")
+        Tables.read(spark, out, "embeddings"), "vec_id", "embedding")
       val queries = prepped.filter(pred)
       val brute = graft.operators.Similarity.knnBrute(queries, prepped,
           k = ScaleQueries.PqK)
@@ -325,7 +321,7 @@ object ScaleProbe {
       val out10 = "target/scaledata/sf10"
       if (!new java.io.File(s"$out10/documents.parquet").exists()) {
         val reps = spark.range(0, 100).select(col("id").as("rep"))
-        spark.read.parquet(s"$src/documents.parquet").crossJoin(reps)
+        Tables.read(spark, src, "documents").crossJoin(reps)
           .select(
             (col("doc_id") + col("rep") * 1000000L).as("doc_id"),
             when(col("rep") === 0, col("text")).otherwise(
@@ -461,7 +457,7 @@ object ScaleProbe {
       val out10 = "target/scaledata/sf10"
       if (!new java.io.File(s"$out10/documents.parquet").exists()) {
         val reps = spark.range(0, 100).select(col("id").as("rep"))
-        spark.read.parquet(s"$src/documents.parquet").crossJoin(reps)
+        Tables.read(spark, src, "documents").crossJoin(reps)
           .select(
             (col("doc_id") + col("rep") * 1000000L).as("doc_id"),
             when(col("rep") === 0, col("text")).otherwise(
@@ -484,7 +480,7 @@ object ScaleProbe {
       // measurements the same shape, so the ratios isolate the operator.
       def layout32(srcDir: String, dstDir: String): String = {
         if (!new java.io.File(s"$dstDir/documents.parquet").exists())
-          spark.read.parquet(s"$srcDir/documents.parquet")
+          Tables.read(spark, srcDir, "documents")
             .repartition(32)
             .write.mode("overwrite").parquet(s"$dstDir/documents.parquet")
         dstDir
@@ -567,7 +563,7 @@ object ScaleProbe {
       import graft.operators.Similarity
       val pred = col("id") % ScaleQueries.PqQueryMod === 0 && col("id") < 1000000L
       val prepped = Similarity.prep(
-        spark.read.parquet(s"$out/embeddings.parquet"), "vec_id", "embedding")
+        Tables.read(spark, out, "embeddings"), "vec_id", "embedding")
       val queries = prepped.filter(pred)
       val tau = ScaleQueries.RangeTau
       val qv = broadcast(queries.select(col("id").as("q_id"),
@@ -651,7 +647,7 @@ object ScaleProbe {
       val out10 = "target/scaledata/sf10"
       if (!new java.io.File(s"$out10/embeddings.parquet").exists()) {
         val reps = spark.range(0, 100).select(col("id").as("rep"))
-        spark.read.parquet(s"$src/embeddings.parquet").crossJoin(reps)
+        Tables.read(spark, src, "embeddings").crossJoin(reps)
           .withColumn("vec_id", col("vec_id") + col("rep") * 1000000L)
           .drop("rep")
           .write.mode("overwrite").parquet(s"$out10/embeddings.parquet")
@@ -659,7 +655,7 @@ object ScaleProbe {
       }
       for ((dir, k) <- Seq((src, 16), (out, 50), (out10, 160))) {
         val prepped = Similarity.prep(
-          spark.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding")
+          Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
         def run(): DataFrame = {
           val cent = Similarity.kmeansCentroids(prepped, k = k, iters = 1)
           Similarity.semDedup(prepped, cent, tau = 0.35)
@@ -704,14 +700,14 @@ object ScaleProbe {
       assertOffsetClear("customer", "c_custkey", 10000000L)
       if (!new java.io.File(s"$out/customer.parquet").exists()) {
         val reps = spark.range(0, 10).select(col("id").as("rep"))
-        spark.read.parquet(s"$src/customer.parquet").crossJoin(reps)
+        Tables.read(spark, src, "customer").crossJoin(reps)
           .withColumn("c_custkey", col("c_custkey") + col("rep") * 10000000L)
           .drop("rep")
           .write.mode("overwrite").parquet(s"$out/customer.parquet")
         println("GENERATED sf1 customer")
       }
       if (!new java.io.File(s"$out/nation.parquet").exists())
-        spark.read.parquet(s"$src/nation.parquet")
+        Tables.read(spark, src, "nation")
           .write.mode("overwrite").parquet(s"$out/nation.parquet")
       for (q <- Seq("enrol_plan", "enrol_audit")) {
         val t01 = timeQ(q, src)
@@ -752,7 +748,7 @@ object ScaleProbe {
           s"$d missing — run `ScaleProbe quality` first")
       import graft.functions.{RepScanKernels, RepScanSuiteKernels}
       def oldScan(dir: String): DataFrame = {
-        val df = spark.read.parquet(s"$dir/documents.parquet")
+        val df = Tables.read(spark, dir, "documents")
           .select("doc_id", "text")
           .withColumn("__t", split(trim(col("text")), "\\s+"))
         df.select(col("doc_id") +:
@@ -761,7 +757,7 @@ object ScaleProbe {
             RepScanKernels.repScanCol(col("__t"), n).as(s"sc$n")): _*)
       }
       def newScan(dir: String): DataFrame = {
-        val df = spark.read.parquet(s"$dir/documents.parquet")
+        val df = Tables.read(spark, dir, "documents")
           .select(col("doc_id"),
             RepScanSuiteKernels.repScanSuiteCol(col("text")).as("__su"))
         df.select(col("doc_id") +:

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
@@ -82,15 +82,4 @@ object MailSource {
     }
     projected.filter(length(col("email")) > 0)
   }
-
-  def normalizeTyped(df: DataFrame)(implicit spark: SparkSession): Dataset[MailUser] = {
-    import spark.implicits._
-    normalize(df).as[MailUser]
-  }
-
-  /** CSV entry point matching the reference's reader (`app.py:279-289`):
-    * header row, UTF-8.
-    */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("encoding", "UTF-8").csv(path)
 }

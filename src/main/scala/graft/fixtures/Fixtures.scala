@@ -2,6 +2,7 @@ package graft.fixtures
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Deterministic roster / mail-CSV stand-ins synthesized from the driver's
   * read-only TPC-H-ish parquet (FIXTURES.md §5). Each synthesis exists
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Fixtures {
 
   def customer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/customer.parquet")
+    Tables.read(spark, dir, "customer")
 
   // ---------------------------------------------------------------- roster
 

@@ -10,7 +10,7 @@ import graft.sources.Tables
   * JSON extraction, fuzzy string matching, and the salted two-phase
   * aggregation pattern for skewed keys.
   */
-object AdvancedQueries {
+object AdvancedQueries extends QueryModule {
 
   /** As-of join: each purchase event matched to the user's most recent
     * strictly-earlier event of any type, via the union + carry-forward

@@ -18,10 +18,7 @@ import graft.sources.Tables
   *  - every query's final ORDER BY is only for oracle determinism and is
   *    a top-level sort of an already-reduced (small) result.
   */
-object AnalyticsQueries {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+object AnalyticsQueries extends QueryModule {
 
   // ---------------------------------------------------------- aggregation
 
@@ -29,7 +26,7 @@ object AnalyticsQueries {
     * keys, map-side partial aggregation does nearly all the work.
     */
   def q1PricingSummary(spark: SparkSession, dir: String): DataFrame = {
-    val l = t(spark, dir, "lineitem")
+    val l = Tables.read(spark, dir, "lineitem")
     val discPrice = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
     val charge    = discPrice * (lit(1.0) + col("l_tax"))
     l.groupBy("l_returnflag", "l_linestatus")
@@ -57,7 +54,7 @@ object AnalyticsQueries {
 
   /** Grouped order stats incl. exact distinct customers per group. */
   def aggOrderStats(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Tables.read(spark, dir, "orders")
       .groupBy("o_orderstatus", "o_orderpriority")
       .agg(
         count(lit(1)).as("n_orders"),
@@ -87,10 +84,10 @@ object AnalyticsQueries {
     * side before the join so the scan reads only what it needs.
     */
   def q3TopRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val c = t(spark, dir, "customer")
+    val c = Tables.read(spark, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-    val o = t(spark, dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    val l = t(spark, dir, "lineitem")
+    val o = Tables.read(spark, dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    val l = Tables.read(spark, dir, "lineitem")
       .select(col("l_orderkey"),
         dec(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
     c.join(o, col("c_custkey") === col("o_custkey"))
@@ -119,14 +116,14 @@ object AnalyticsQueries {
     * already-reduced aggregate.
     */
   def q10ReturnedItems(spark: SparkSession, dir: String): DataFrame = {
-    val n = broadcast(t(spark, dir, "nation").select("n_nationkey", "n_name"))
-    val c = t(spark, dir, "customer")
+    val n = broadcast(Tables.read(spark, dir, "nation").select("n_nationkey", "n_name"))
+    val c = Tables.read(spark, dir, "customer")
       .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
-    val o = t(spark, dir, "orders")
+    val o = Tables.read(spark, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
       .select("o_orderkey", "o_custkey")
-    val l = t(spark, dir, "lineitem").filter(col("l_returnflag") === "R")
+    val l = Tables.read(spark, dir, "lineitem").filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"),
         dec(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
     c.join(o, col("c_custkey") === col("o_custkey"))
@@ -156,10 +153,10 @@ object AnalyticsQueries {
     * canonical small-dim pattern; fact-fact joins shuffle on their keys.
     */
   def q5NationRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val n = broadcast(t(spark, dir, "nation").select("n_nationkey", "n_name"))
-    val c = t(spark, dir, "customer").select("c_custkey", "c_nationkey")
-    val o = t(spark, dir, "orders").select("o_orderkey", "o_custkey")
-    val l = t(spark, dir, "lineitem")
+    val n = broadcast(Tables.read(spark, dir, "nation").select("n_nationkey", "n_name"))
+    val c = Tables.read(spark, dir, "customer").select("c_custkey", "c_nationkey")
+    val o = Tables.read(spark, dir, "orders").select("o_orderkey", "o_custkey")
+    val l = Tables.read(spark, dir, "lineitem")
       .select(col("l_orderkey"),
         dec(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
     l.join(o, col("l_orderkey") === col("o_orderkey"))
@@ -184,8 +181,8 @@ object AnalyticsQueries {
     * The status filter keeps the result non-degenerate at every sf.
     */
   def joinAnti(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "customer")
-      .join(t(spark, dir, "orders").filter(col("o_orderstatus") === "O"),
+    Tables.read(spark, dir, "customer")
+      .join(Tables.read(spark, dir, "orders").filter(col("o_orderstatus") === "O"),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
@@ -198,8 +195,8 @@ object AnalyticsQueries {
 
   /** Left-semi: customers with at least one order. */
   def joinSemi(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "customer")
-      .join(t(spark, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
+    Tables.read(spark, dir, "customer")
+      .join(Tables.read(spark, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
 
@@ -212,8 +209,8 @@ object AnalyticsQueries {
     * with open orders.
     */
   def setExcept(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "customer").select(col("c_custkey").as("custkey"))
-      .except(t(spark, dir, "orders").filter(col("o_orderstatus") === "O")
+    Tables.read(spark, dir, "customer").select(col("c_custkey").as("custkey"))
+      .except(Tables.read(spark, dir, "orders").filter(col("o_orderstatus") === "O")
         .select(col("o_custkey").as("custkey")))
       .orderBy("custkey")
 
@@ -228,7 +225,7 @@ object AnalyticsQueries {
   /** Top-3 orders per customer — keyed window, shuffles once on custkey. */
   def windowTopk(spark: SparkSession, dir: String): DataFrame =
     topKPerGroup(
-      t(spark, dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
+      Tables.read(spark, dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice"),
       Seq("o_custkey"), col("o_totalprice"), col("o_orderkey"), 3)
       .orderBy("o_custkey", "rk")
 
@@ -321,7 +318,7 @@ object AnalyticsQueries {
     * groups of three columns.
     */
   def q6Forecast(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Tables.read(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= "1995-01-01" && col("l_shipdate") < "1996-01-01" &&
         col("l_discount") >= 0.02 && col("l_discount") <= 0.04 && col("l_quantity") < 24)
       .agg(sumExact(col("l_extendedprice") * col("l_discount")).as("revenue"),
@@ -339,12 +336,12 @@ object AnalyticsQueries {
     * qualifying keys rejoin (never the full fact×fact).
     */
   def q18BigOrders(spark: SparkSession, dir: String): DataFrame = {
-    val li = t(spark, dir, "lineitem")
+    val li = Tables.read(spark, dir, "lineitem")
     val big = li.groupBy("l_orderkey")
       .agg(sumExact(col("l_quantity")).as("total_qty"))
       .filter(col("total_qty") > 300)
-    big.join(t(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
+    big.join(Tables.read(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.read(spark, dir, "customer"), col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         col("o_orderdate").cast("date").cast("string").as("o_day"), col("total_qty"))
       .orderBy(col("total_qty").desc, col("o_orderkey"))

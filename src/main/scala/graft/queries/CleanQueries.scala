@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
+import graft.sources.Tables
 
 /** The two published document-cleaning rule-sets every pretraining corpus
   * build runs alongside the repetition suite ([[QualityQueries]]):
@@ -22,10 +23,7 @@ import graft.operators.TextAnalysis
   * presentation sort. Both families run at parquet-scan speed at any
   * corpus size and column-prune to (doc_id, text).
   */
-object CleanQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object CleanQueries extends QueryModule {
 
   // ------------------------------------------------ Gopher quality suite
 
@@ -113,7 +111,7 @@ object CleanQueries {
   }
 
   def gqSignals(spark: SparkSession, dir: String): DataFrame =
-    withGqSignals(docs(spark, dir).select("doc_id", "text"), "text")
+    withGqSignals(Tables.read(spark, dir, "documents").select("doc_id", "text"), "text")
       .drop("text")
       .orderBy("doc_id")
 
@@ -175,7 +173,7 @@ object CleanQueries {
   }
 
   def gqFilter(spark: SparkSession, dir: String): DataFrame =
-    withGqSignals(docs(spark, dir).select("doc_id", "text"), "text")
+    withGqSignals(Tables.read(spark, dir, "documents").select("doc_id", "text"), "text")
       .select(col("doc_id") +: gqVerdictCols: _*)
       .orderBy("doc_id")
 
@@ -213,7 +211,7 @@ object CleanQueries {
     * corpus-sized side at 100 TB; the chain has no rendezvous at all.
     */
   def gopherFilter(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select("doc_id", "text")
+    val d = Tables.read(spark, dir, "documents").select("doc_id", "text")
     val joined = QualityQueries
       .withRepSignals(withGqSignals(d, "text"), "text")
       .drop("text")
@@ -341,7 +339,7 @@ object CleanQueries {
   }
 
   def c4Clean(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select("doc_id", "text")
+    val d = Tables.read(spark, dir, "documents").select("doc_id", "text")
     val t = TextAnalysis.wordTokens(col("text"))
     val nl0 = floor((size(col("__t")) + 5) / 6).cast("int")
     // planted base lines: 6-token slices, terminal '.' unless (id+j)%4=0

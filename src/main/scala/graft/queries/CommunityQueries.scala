@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Materialize
+import graft.sources.Tables
 
 /** Community/mixture operators: synchronous label propagation over the
   * co-purchase graph, temperature-scaled source mixture weights,
@@ -11,10 +12,7 @@ import graft.operators.Materialize
   * ordering — the "how do I weight, calibrate, and order what I kept"
   * stage of a corpus pipeline.
   */
-object CommunityQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object CommunityQueries extends QueryModule {
 
   // ----------------------------------------------- label propagation
 
@@ -38,7 +36,7 @@ object CommunityQueries {
     * step.
     */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
-    labelPropOn(spark.read.parquet(s"$dir/lineitem.parquet")
+    labelPropOn(Tables.read(spark, dir, "lineitem")
       .filter(col("l_quantity") >= 45))
 
   /** [[labelProp]] core over an (l_orderkey, l_partkey) co-purchase
@@ -143,7 +141,7 @@ object CommunityQueries {
     * final ratios are rounded to 6.
     */
   def mixWeights(spark: SparkSession, dir: String): DataFrame = {
-    val cnt = docs(spark, dir).groupBy("source")
+    val cnt = Tables.read(spark, dir, "documents").groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
       .withColumn("p", pow(col("n_docs").cast("double"), lit(MixAlpha)))
     val tot = cnt.agg(sum("p").as("tot"))
@@ -183,7 +181,7 @@ object CommunityQueries {
     * data).
     */
   def quantileNorm(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val ws = Window.partitionBy("source").orderBy("n_chars", "doc_id")
     val ranked = d
       .withColumn("r", row_number().over(ws).cast("long"))
@@ -244,7 +242,7 @@ object CommunityQueries {
     val b = least(col("n_chars") / lit(CurrWidth), lit(CurrBuckets - 1)).cast("long")
     val h = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
     val wb = Window.partitionBy("bucket").orderBy("h", "doc_id")
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), b.as("bucket"), h.as("h"))
       .withColumn("rk", row_number().over(wb).cast("long"))
       .select("doc_id", "bucket", "rk")
@@ -284,7 +282,7 @@ object CommunityQueries {
     * monotone non-increasing.
     */
   def kCore(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.read(spark, dir, "lineitem")
       .filter(col("l_quantity") >= 45)
     val perOrder = li.groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
     val oriented = perOrder
@@ -346,7 +344,7 @@ object CommunityQueries {
     * sentinel to disagree on).
     */
   def bfsHops(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.read(spark, dir, "lineitem")
       .filter(col("l_quantity") >= 45)
     val perOrder = li.groupBy("l_orderkey")
       .agg(collect_set(col("l_partkey")).as("ps"))
@@ -401,7 +399,7 @@ object CommunityQueries {
     * mirror).
     */
   private def bulkEdges(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.read(spark, dir, "lineitem")
       .filter(col("l_quantity") >= 45)
     val perOrder = li.groupBy("l_orderkey")
       .agg(collect_set(col("l_partkey")).as("ps"))

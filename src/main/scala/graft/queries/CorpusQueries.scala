@@ -17,10 +17,7 @@ import graft.sources.Tables
   * generation is always an equi-join on a derived key, iteration state
   * is a keyed frame, and no driver-side data collects anywhere.
   */
-object CorpusQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object CorpusQueries extends QueryModule {
 
   // -------------------------------------------------------- dup spans
 
@@ -52,7 +49,7 @@ object CorpusQueries {
     // re-partitions everything anyway, so the extra exchange only adds
     // cost — unlike winnowFingerprints, whose consumers aggregate the
     // fingerprints without a second corpus-wide shuffle
-    val toks = docs(spark, dir)
+    val toks = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.wordTokens(col("text")).as("t"))
       .select(col("doc_id"), size(col("t")).cast("long").as("n_tok"), col("t"))
     // md5 window hashes (engine-portable); short docs contribute their
@@ -145,7 +142,7 @@ object CorpusQueries {
     */
   def dedupPrefix(spark: SparkSession, dir: String): DataFrame =
     prefixPairsFromGrams(
-      Materialize(Dedup.explodedNgrams(docs(spark, dir), "doc_id", "text", n = 3)))
+      Materialize(Dedup.explodedNgrams(Tables.read(spark, dir, "documents"), "doc_id", "text", n = 3)))
       .orderBy("a_id", "b_id")
 
   /** The PPJoin body over an already-materialized gram frame — shared
@@ -318,7 +315,7 @@ object CorpusQueries {
 
   def dedupContainment(spark: SparkSession, dir: String): DataFrame =
     containmentPairsFromGrams(
-      Materialize(Dedup.explodedNgrams(docs(spark, dir), "doc_id", "text", n = 3)))
+      Materialize(Dedup.explodedNgrams(Tables.read(spark, dir, "documents"), "doc_id", "text", n = 3)))
       .orderBy("a_id", "b_id")
 
   /** Candidate + verify body over an already-materialized gram frame —
@@ -329,10 +326,9 @@ object CorpusQueries {
     // verify via ROW-LOCAL array_intersect over per-doc gram arrays
     // (A/B'd under the bench methodology vs the old explode-join-
     // aggregate verify — cands⋈grams⋈grams then a pair-count aggregate:
-    // 3.73 s → 2.43 s at sf0.1, identical rows; `AbContain` keeps both
-    // shapes runnable). One aggregation builds the arrays (sz longs per
-    // doc — linear in the gram frame), then each candidate pair is two
-    // hash-joins and a codegen'd intersect, no per-pair shuffle rows.
+    // 3.73 s → 2.43 s at sf0.1, identical rows). One aggregation builds
+    // the arrays (sz longs per doc — linear in the gram frame), then each
+    // candidate pair is two hash-joins and a codegen'd intersect, no per-pair shuffle rows.
     val arrs = grams.groupBy("id")
       .agg(sort_array(collect_list(col("gh"))).as("gs"), count(lit(1)).as("sz"))
     cands
@@ -404,7 +400,7 @@ object CorpusQueries {
     */
   def sourceMinhashSim(spark: SparkSession, dir: String): DataFrame = {
     val grams = Materialize(
-      Dedup.explodedNgrams(docs(spark, dir), "doc_id", "text", n = 3,
+      Dedup.explodedNgrams(Tables.read(spark, dir, "documents"), "doc_id", "text", n = 3,
           keep = Seq("source"))
         .select(col("source"), col("gh")).distinct())
     val sigs = Dedup.minhashSignatures(
@@ -484,8 +480,8 @@ object CorpusQueries {
     * and reuse that partitioning across all iterations.
     */
   def pagerank(spark: SparkSession, dir: String): DataFrame =
-    pagerankOn(spark.read.parquet(s"$dir/lineitem.parquet"),
-      spark.read.parquet(s"$dir/part.parquet").select(col("p_partkey").as("node")))
+    pagerankOn(Tables.read(spark, dir, "lineitem"),
+      Tables.read(spark, dir, "part").select(col("p_partkey").as("node")))
 
   /** [[pagerank]] core over an (l_orderkey, l_partkey) co-purchase frame
     * and a (node) universe — factored so `GraphSkewSpec` can plant a
@@ -593,7 +589,7 @@ object CorpusQueries {
     * more than |vocab|² keys regardless of corpus size.
     */
   def bpePairs(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(TextAnalysis.wordTokens(lower(col("text"))).as("t"))
       // guard: sequence(1, 0) would generate a DESCENDING range
       .filter(size(col("t")) >= 2)
@@ -685,7 +681,7 @@ object CorpusQueries {
   }
 
   def bpeMerges(spark: SparkSession, dir: String): DataFrame =
-    bpeMergesFrom(docs(spark, dir)
+    bpeMergesFrom(Tables.read(spark, dir, "documents")
       .select(explode(TextAnalysis.wordTokens(lower(col("text")))).as("w")))
 
   /** Per-document subword statistics under the trained BPE vocab: join
@@ -698,7 +694,7 @@ object CorpusQueries {
     * except for the final per-doc aggregation.
     */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val dw = docs(spark, dir).select(col("doc_id"),
+    val dw = Tables.read(spark, dir, "documents").select(col("doc_id"),
         explode(TextAnalysis.wordTokens(lower(col("text")))).as("w"))
       .filter(col("w") =!= "")
     val vocab = bpeTrainFrom(dw.select("w"))._1
@@ -756,7 +752,7 @@ object CorpusQueries {
     * TOTAL order (freq desc, w) so the limit is deterministic.
     */
   def bpeSegment(spark: SparkSession, dir: String): DataFrame = {
-    val dw = docs(spark, dir).select(col("doc_id"),
+    val dw = Tables.read(spark, dir, "documents").select(col("doc_id"),
         explode(TextAnalysis.wordTokens(lower(col("text")))).as("w"))
       .filter(col("w") =!= "")
     val vocab = bpeTrainFrom(dw.select("w"))._1
@@ -826,7 +822,7 @@ object CorpusQueries {
     * (≤ [[UgTopV]] rows), so no corpus growth can OOM the collect.
     */
   private def unigramWordFreqs(spark: SparkSession, dir: String): Map[String, Long] =
-    boundedUnigramVocab(docs(spark, dir)
+    boundedUnigramVocab(Tables.read(spark, dir, "documents")
       .select(explode(TextAnalysis.wordTokens(lower(col("text")))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("f")))
@@ -881,7 +877,7 @@ object CorpusQueries {
     val np = wf.keys.toSeq.sorted
       .map(w => (w, graft.operators.UnigramLm.viterbi(w, m.logp).length.toLong))
       .toDF("w", "n_pieces")
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), explode(TextAnalysis.wordTokens(lower(col("text")))).as("w"))
       .filter(col("w") =!= "")
       .join(broadcast(np), "w")
@@ -1036,7 +1032,7 @@ object CorpusQueries {
     */
   def tokenizerCompare(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val dw = docs(spark, dir)
+    val dw = Tables.read(spark, dir, "documents")
       .select(col("source"), explode(TextAnalysis.wordTokens(lower(col("text")))).as("w"))
       .filter(col("w") =!= "")
     val bpe = bpeTrainFrom(dw.select("w"))._1
@@ -1095,7 +1091,7 @@ object CorpusQueries {
     * extra passes scan (source, n_chars) only, never the text.
     */
   def outlierMad(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("source"), col("n_chars"))
+    val d = Tables.read(spark, dir, "documents").select(col("source"), col("n_chars"))
     val med = d.groupBy("source").agg(expr("percentile(n_chars, 0.5)").as("med"))
     val mad = d.join(med, "source")
       .groupBy(col("source"), col("med"))
@@ -1173,7 +1169,7 @@ object CorpusQueries {
     import TextAnalysis._
     val toks = wordTokens(lower(col("text")))
     val w = Window.partitionBy(fingerprint(col("text")))
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("source"),
         size(wordTokens(col("text"))).cast("long").as("n_tok"),
         qualityScore(col("text")).as("q"),
@@ -1296,7 +1292,7 @@ object CorpusQueries {
   }
 
   def dedupConsensus(spark: SparkSession, dir: String): DataFrame =
-    dedupConsensusOn(docs(spark, dir))
+    dedupConsensusOn(Tables.read(spark, dir, "documents"))
 
   val dedupConsensusSql: String = s"""
     WITH RECURSIVE edges AS (
@@ -1362,7 +1358,7 @@ object CorpusQueries {
   }
 
   def dedupConsensusKeepBest(spark: SparkSession, dir: String): DataFrame =
-    dedupConsensusKeepBestOn(docs(spark, dir))
+    dedupConsensusKeepBestOn(Tables.read(spark, dir, "documents"))
 
   val dedupConsensusKeepBestSql: String = s"""
     WITH RECURSIVE edges AS (

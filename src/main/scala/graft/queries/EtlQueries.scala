@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.{MailSource, MoodleConfig, MoodleNormalize, RenderMail}
 import graft.fixtures.Fixtures
 import graft.oracle.Duck
+import graft.sources.Tables
 
 /** Core reference-parity queries (SURVEY.md §2.1-§2.6): the Moodle
   * normalization pipeline, the three mail-source dialects, template
@@ -14,7 +15,7 @@ import graft.oracle.Duck
   * All ORDER BYs are on unique ASCII keys so row order (and therefore the
   * driver's hash) is deterministic in both engines.
   */
-object EtlQueries {
+object EtlQueries extends QueryModule {
 
   /** Password pattern exercising 3 of the 4 placeholders and giving every
     * row a unique `contrasena` (rut is unique), which downstream queries
@@ -96,12 +97,12 @@ object EtlQueries {
   private def enrolCustkey = split(col("rut"), "-").getItem(0).cast("long")
 
   private def enrolLedger(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/orders.parquet")
+    Tables.read(spark, dir, "orders")
       .select(col("o_custkey").cast("long").as("custkey"),
         (col("o_orderkey").cast("long") % EnrolCourses).as("course_id"))
 
   private def enrolCatalog(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/nation.parquet")
+    Tables.read(spark, dir, "nation")
       .filter(col("n_nationkey") < EnrolCatalog)
       .select(col("n_nationkey").cast("long").as("course_id"),
         col("n_name").as("course"),

@@ -16,10 +16,7 @@ import graft.sources.Tables
   * discrete order statistics); each emitted double is ONE agreed
   * expression over them, rounded for display.
   */
-object ExperimentQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object ExperimentQueries extends QueryModule {
 
   // -------------------------------------------------------- topic drift
 
@@ -158,7 +155,7 @@ object ExperimentQueries {
     // rank-weighted sum in DECIMAL(38,0) (HUGEINT in the oracle):
     // Σ r·x grows ~ n²·x/2 per source, which crosses 2⁶³ near a billion
     // docs — a long sum would THROW under Spark 4's default ANSI mode
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .withColumn("r", row_number().over(w).cast("long"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("s"),
@@ -321,7 +318,7 @@ object ExperimentQueries {
     * |sources|·B rows.
     */
   def bootstrapCi(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val u = (conv(substring(md5(concat_ws("_", col("doc_id"), col("rep"))), 1, 8), 16, 10)
       .cast("double") + lit(0.5)) / lit(4294967296.0)
     // inverse-CDF Poisson(1): P(0)=.3679, P(<=1)=.7358, P(<=2)=.9197, P(<=3)=.9810
@@ -339,7 +336,7 @@ object ExperimentQueries {
     val banded = reps
       .withColumn("rk", row_number().over(wr).cast("long"))
       .withColumn("b", count(lit(1)).over(Window.partitionBy("source")))
-    val base = docs(spark, dir).groupBy("source")
+    val base = Tables.read(spark, dir, "documents").groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("s"))
     base.join(
         banded.groupBy("source").agg(
@@ -401,7 +398,7 @@ object ExperimentQueries {
     * division. Tie-corrected by construction.
     */
   def aucScore(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
       .select(col("n_chars").as("v"), (col("lang") === "en").cast("long").as("y"))
     val hist = d.groupBy("v").agg(count(lit(1)).as("c"), sum("y").as("pos"))
       .withColumn("hi", sum("c").over(
@@ -446,7 +443,7 @@ object ExperimentQueries {
     * window over distinct values.
     */
   def ksBySource(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("source"), col("n_chars").as("v"))
+    val d = Tables.read(spark, dir, "documents").select(col("source"), col("n_chars").as("v"))
     val bySrc = d.groupBy("source", "v").agg(count(lit(1)).as("c"))
     val byVal = d.groupBy("v").agg(count(lit(1)).as("ct"))
     val tot = d.agg(count(lit(1)).as("n"))
@@ -524,7 +521,7 @@ object ExperimentQueries {
     import graft.operators.TextAnalysis.wordTokens
     val dec = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(38, 0))
     val toks = wordTokens(col("text"))
-    val base = docs(spark, dir).select(
+    val base = Tables.read(spark, dir, "documents").select(
       dec(col("n_chars")).as("c"),
       dec(size(toks).cast("long")).as("t"),
       dec(size(array_distinct(toks)).cast("long")).as("u"))
@@ -654,7 +651,7 @@ object ExperimentQueries {
     // digits hold any N < 2⁶³; the 9-digit fractional snap (the part that
     // buys partition-order independence) is unchanged.
     val dec9: Column => Column = _.cast(DecimalType(28, 9))
-    val o = docs(spark, dir).groupBy("lang", "source").agg(count(lit(1)).as("o"))
+    val o = Tables.read(spark, dir, "documents").groupBy("lang", "source").agg(count(lit(1)).as("o"))
     val r = o.groupBy("lang").agg(sum(col("o")).as("r"))
     val c = o.groupBy("source").agg(sum(col("o")).as("c"))
     val n = o.agg(sum(col("o")).as("n"))

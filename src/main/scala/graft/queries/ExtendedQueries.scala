@@ -13,10 +13,7 @@ import graft.sources.Tables
   * moment statistics, the bucketed range join, the bounded top-k
   * aggregate, near-dup clustering, and the pure-SQL engine surface.
   */
-object ExtendedQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object ExtendedQueries extends QueryModule {
 
   /** GROUPING SETS with explicitly chosen combinations (finer than CUBE:
     * only the rollups a report actually needs get computed).
@@ -261,7 +258,7 @@ object ExtendedQueries {
     * a recursive CTE.
     */
   def dupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     // materialize the (md5-heavy) winnow ONCE: a self-join of the raw plan
     // would recompute every fingerprint twice. Right side rebuilt with
     // plain aliased selects (fresh exprIds) — .as("a")/.as("b") over a
@@ -370,7 +367,7 @@ object ExtendedQueries {
     * row_number.
     */
   def clusterRep(spark: SparkSession, dir: String): DataFrame = {
-    val quality = docs(spark, dir).select(col("doc_id"),
+    val quality = Tables.read(spark, dir, "documents").select(col("doc_id"),
       graft.operators.TextAnalysis.qualityScore(col("text")).as("quality"))
     dupClusters(spark, dir).join(quality, "doc_id")
       .groupBy("cluster_id")
@@ -571,7 +568,7 @@ object ExtendedQueries {
     */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
     val hh = udaf(new graft.functions.HeavyHittersAgg(64), Encoders.STRING)
-    val toks = docs(spark, dir)
+    val toks = Tables.read(spark, dir, "documents")
       .select(col("source"), explode(TextAnalysis.wordTokens(col("text"))).as("w"))
     val sk = toks.groupBy("source")
       .agg(hh(col("w")).as("h"), count(lit(1)).as("n"))

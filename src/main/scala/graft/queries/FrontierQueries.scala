@@ -16,10 +16,7 @@ import graft.sources.Tables
   * that makes pre-aggregation possible at all — daily sketches union to
   * months without re-reading raw data.
   */
-object FrontierQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object FrontierQueries extends QueryModule {
 
   // -------------------------------------------------------- pareto front
 
@@ -149,7 +146,7 @@ object FrontierQueries {
   def sampleWeighted(spark: SparkSession, dir: String): DataFrame = {
     val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("double") + lit(0.5)) / lit(4294967296.0)
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .withColumn("key", round(pow(u, lit(1.0) / col("n_chars").cast("double")), 12))
       .orderBy(col("key").desc, col("doc_id"))
       .limit(WSampleK)

@@ -18,10 +18,7 @@ import graft.sources.Tables
   * inequality in pure integers; the distribution distance cross-
   * multiplies counts before the single final division).
   */
-object InsightQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object InsightQueries extends QueryModule {
 
   // ----------------------------------------------------- triangle count
 
@@ -47,7 +44,7 @@ object InsightQueries {
     // edge-build shape): one aggregation exchange instead of reshuffling
     // both sides of an orderkey self-join, and collect_set absorbs the
     // (order, part) dedup
-    val perOrder = spark.read.parquet(s"$dir/lineitem.parquet")
+    val perOrder = Tables.read(spark, dir, "lineitem")
       .filter(col("l_quantity") >= 45)
       .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
     val und = Materialize(perOrder
@@ -107,7 +104,7 @@ object InsightQueries {
     * (driver union-find under the gate, distributed min-label above).
     */
   def entityResolve(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.read.parquet(s"$dir/supplier.parquet")
+    val s = Tables.read(spark, dir, "supplier")
       .select(col("s_suppkey"), col("s_name"),
         expr("substring(s_name, 1, length(s_name) - 2)").as("blk"))
     val right = s.select(col("s_suppkey").as("bkey"), col("s_name").as("bname"),
@@ -256,7 +253,7 @@ object InsightQueries {
     * global sort.
     */
   def vocabEncode(spark: SparkSession, dir: String): DataFrame = {
-    val toks = docs(spark, dir)
+    val toks = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.wordTokens(lower(col("text"))).as("t"))
     val tf = toks.select(explode(col("t")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
@@ -306,7 +303,7 @@ object InsightQueries {
     * corpus size (counts aggregate map-side first).
     */
   def sourceSimilarity(spark: SparkSession, dir: String): DataFrame = {
-    val toks = docs(spark, dir)
+    val toks = Tables.read(spark, dir, "documents")
       .select(col("source"), explode(TextAnalysis.wordTokens(lower(col("text")))).as("tok"))
     val cnt = toks.groupBy("source", "tok").agg(count(lit(1)).as("c"))
     val totals = toks.groupBy("source").agg(count(lit(1)).as("nt"))
@@ -368,7 +365,7 @@ object InsightQueries {
     * integer arithmetic), so the query is scale-free.
     */
   def zorderSkip(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.read(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
     val bounds = li.agg(max("l_partkey").as("mx"))
     def report(layout: String, bucket: org.apache.spark.sql.Column): DataFrame =
@@ -442,7 +439,7 @@ object InsightQueries {
     * cross-engine total with the (x, y) tiebreak.
     */
   def linkPredict(spark: SparkSession, dir: String): DataFrame = {
-    val perOrder = spark.read.parquet(s"$dir/lineitem.parquet")
+    val perOrder = Tables.read(spark, dir, "lineitem")
       .filter(col("l_quantity") >= 45)
       .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
     val und = Materialize(perOrder
@@ -528,7 +525,7 @@ object InsightQueries {
     * self-join ever materializes.
     */
   def freqTriples(spark: SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.read(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"))
     val freq1 = li.groupBy("l_partkey")
       .agg(countDistinct("l_orderkey").as("ic"))
@@ -598,7 +595,7 @@ object InsightQueries {
     */
   def clusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
     val dec: Column => Column = _.cast(DecimalType(38, 0))
-    val perOrder = spark.read.parquet(s"$dir/lineitem.parquet")
+    val perOrder = Tables.read(spark, dir, "lineitem")
       .filter(col("l_quantity") >= 45)
       .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
     val und = Materialize(perOrder
@@ -676,9 +673,9 @@ object InsightQueries {
 
   def hitsRank(spark: SparkSession, dir: String): DataFrame = {
     val dec: Column => Column = _.cast(DecimalType(38, 0))
-    val e = Materialize(spark.read.parquet(s"$dir/orders.parquet")
+    val e = Materialize(Tables.read(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
-      .join(spark.read.parquet(s"$dir/lineitem.parquet")
+      .join(Tables.read(spark, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))

@@ -9,7 +9,7 @@ import graft.sources.Tables
   * (A1), set-union roster merge, hierarchical rollup, approximate
   * distinct, and calendar bucketing.
   */
-object MiscQueries {
+object MiscQueries extends QueryModule {
 
   /** W2 — head-N preview, first 8 columns, deterministic order. The
     * reference caps at 50 rows × 8 cols (`app.py:766-784`); LIMIT over an

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Materialize, TextAnalysis}
+import graft.sources.Tables
 
 /** Training-data pipeline operators (the 100 TB curation surface):
   * overlapping chunking, token-budget sharding, PII scrubbing,
@@ -13,10 +14,7 @@ import graft.operators.{Dedup, Materialize, TextAnalysis}
   * bit-identically; every explode feeds a codegen'd aggregate (no
   * interpreted higher-order lambdas on the hot path).
   */
-object PipelineQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object PipelineQueries extends QueryModule {
 
   val ChunkSize = 64
   val ChunkStride = 48
@@ -27,7 +25,7 @@ object PipelineQueries {
     * identical plumbing).
     */
   def textChunk(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.wordTokens(col("text")).as("t"))
       .select(col("doc_id"), col("t"),
         explode(sequence(lit(1), size(col("t")), lit(ChunkStride))).as("start"))
@@ -57,7 +55,7 @@ object PipelineQueries {
   def packBatches(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(TextAnalysis.wordTokens(col("text"))).cast("long").as("n_tok"))
       .withColumn("cum", sum("n_tok").over(w))
@@ -108,7 +106,7 @@ object PipelineQueries {
     packOffsetFrame(spark, dir).orderBy("doc_id")
 
   private def packOffsetFrame(spark: SparkSession, dir: String): DataFrame = {
-    val toks = docs(spark, dir)
+    val toks = Tables.read(spark, dir, "documents")
       .select(col("doc_id"),
         size(TextAnalysis.wordTokens(col("text"))).cast("long").as("n_tok"))
     graft.operators.Relational
@@ -215,7 +213,7 @@ object PipelineQueries {
     val enriched = when(col("doc_id") % 3 === 0,
       concat(col("text"), lit(" contact: user"), col("doc_id").cast("string"),
         lit("@example.com ph 12345678901"))).otherwise(col("text"))
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), enriched.as("t2"))
       .select(col("doc_id"),
         size(regexp_extract_all(col("t2"), lit(EmailRe), lit(0))).cast("long").as("n_emails"),
@@ -261,7 +259,7 @@ object PipelineQueries {
 
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     def grams(d: DataFrame): DataFrame = contamGrams(d)
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val evalGrams = grams(d.filter(col("doc_id") % 97 === 0)).select("gh").distinct()
     val train = d.filter(col("doc_id") % 97 =!= 0)
     val contaminated = grams(train)
@@ -304,7 +302,7 @@ object PipelineQueries {
     * span explode and one chunk-keyed aggregate.
     */
   def deconChunks(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val evalGrams = contamGrams(d.filter(col("doc_id") % 97 === 0))
       .select("gh").distinct()
     val bad = contamGrams(d.filter(col("doc_id") % 97 =!= 0))
@@ -379,7 +377,7 @@ object PipelineQueries {
     */
   def deconSpans(spark: SparkSession, dir: String): DataFrame = {
     val fps = TextAnalysis
-      .winnowFingerprints(docs(spark, dir), "doc_id", "text", n = 3, w = 4)
+      .winnowFingerprints(Tables.read(spark, dir, "documents"), "doc_id", "text", n = 3, w = 4)
       .select(col("id"), col("fp").as("gh"))
     val capped = Materialize(Dedup.capGramDocFreq(fps, maxDocFreq = 20))
     val sizes = capped.groupBy("id").agg(count(lit(1)).as("nf"))
@@ -430,7 +428,7 @@ object PipelineQueries {
     * gram of every document through an aggregation exchange).
     */
   def repetitionRatio(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id") +: repetitionCols(col("text")): _*)
       .orderBy("doc_id")
 
@@ -478,7 +476,7 @@ object PipelineQueries {
     */
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis._
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     // lowered tokens, exactly like the standalone lang_id operator (the
     // oracle lowercases too — raw-case scoring would silently diverge on
     // any mixed-case corpus)
@@ -529,7 +527,7 @@ object PipelineQueries {
     * flag rather than silently dropping, so the gate is observable.
     */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val batch = d.filter(col("source") === "src19")
       .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
     val ledger = d.filter(col("source") =!= "src19")
@@ -596,7 +594,7 @@ object PipelineQueries {
     */
   def gateAttribution(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis._
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val toks = wordTokens(lower(col("text")))
     val w = Window.partitionBy(md5(col("text").cast("binary")))
     // contingency-cells trick (the curation_funnel depth-histogram
@@ -670,7 +668,7 @@ object PipelineQueries {
   def splitAssign(spark: SparkSession, dir: String): DataFrame = {
     val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long") % 100
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("source"),
         when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
           .as("split"))
@@ -699,7 +697,7 @@ object PipelineQueries {
     */
   def chunkDedup(spark: SparkSession, dir: String): DataFrame = {
     val chunks = textChunk(spark, dir)
-      .join(docs(spark, dir).select(col("doc_id"), col("source")), "doc_id")
+      .join(Tables.read(spark, dir, "documents").select(col("doc_id"), col("source")), "doc_id")
     val w = Window.partitionBy(col("chunk_md5"))
       .orderBy(col("doc_id"), col("chunk_idx"))
     chunks
@@ -741,8 +739,8 @@ object PipelineQueries {
     // Safe because the per-fp set is bounded by the (small) source count,
     // never by the corpus.
     val sfp = graft.operators.TextAnalysis
-      .winnowFingerprints(docs(spark, dir), "doc_id", "text", n = 3, w = 4)
-      .join(docs(spark, dir).select(col("doc_id").as("id"), col("source")), "id")
+      .winnowFingerprints(Tables.read(spark, dir, "documents"), "doc_id", "text", n = 3, w = 4)
+      .join(Tables.read(spark, dir, "documents").select(col("doc_id").as("id"), col("source")), "id")
       .select("source", "fp").distinct()
     val ss = sort_array(collect_set(col("source")))
     val pairs = flatten(transform(col("ss"), (a, i) =>
@@ -786,7 +784,7 @@ object PipelineQueries {
     val w = when(col("source") === "src0", 40.0)
       .when(col("source").isin("src1", "src2"), 20.0)
       .otherwise(1.0)
-    val counts = docs(spark, dir).groupBy("source")
+    val counts = Tables.read(spark, dir, "documents").groupBy("source")
       .agg(count(lit(1)).as("n")).withColumn("w", w)
     val totalW = counts.agg(sum("w").as("total_w"))
     val rates = counts.crossJoin(broadcast(totalW))
@@ -794,7 +792,7 @@ object PipelineQueries {
         least(lit(1.0), budget * col("w") / (col("total_w") * col("n"))).as("rate"))
     val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long") % 10000
-    docs(spark, dir).select("doc_id", "source", "n_chars")
+    Tables.read(spark, dir, "documents").select("doc_id", "source", "n_chars")
       .join(broadcast(rates), col("source") === col("r_source"))
       .filter(bucket < floor(col("rate") * 10000))
       .select("doc_id", "source", "n_chars")
@@ -828,7 +826,7 @@ object PipelineQueries {
   def sampleQuota(spark: SparkSession, dir: String): DataFrame = {
     val wq = Window.partitionBy("source")
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    docs(spark, dir).select("doc_id", "source")
+    Tables.read(spark, dir, "documents").select("doc_id", "source")
       .withColumn("rk", row_number().over(wq).cast("long"))
       .filter(col("rk") <= 5)
       .orderBy("source", "rk")
@@ -864,7 +862,7 @@ object PipelineQueries {
     * reassembly aggregation. No self-join, no pair blow-up.
     */
   def dedupRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val chunks = docs(spark, dir)
+    val chunks = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), split(btrim(col("text")), "\\s+").as("t"))
       .select(col("doc_id"),
         explode(sequence(lit(0),
@@ -933,7 +931,7 @@ object PipelineQueries {
   def bloomPrefilter(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graftshim.GraftShim
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val evalGrams = contamGrams(d.filter(col("doc_id") % 97 === 0))
       .select("gh").distinct()
     val nEval = evalGrams.count()
@@ -1004,7 +1002,7 @@ object PipelineQueries {
     */
   def mixTemperature(spark: SparkSession, dir: String): DataFrame = {
     val dec9: Column => Column = _.cast(org.apache.spark.sql.types.DecimalType(18, 9))
-    val n = docs(spark, dir).groupBy("source").agg(count(lit(1)).as("n_docs"))
+    val n = Tables.read(spark, dir, "documents").groupBy("source").agg(count(lit(1)).as("n_docs"))
       .select(col("source"), col("n_docs"),
         dec9(sqrt(col("n_docs").cast("double"))).as("w05"),
         dec9(sqrt(sqrt(col("n_docs").cast("double")))).as("w025"))
@@ -1056,7 +1054,7 @@ object PipelineQueries {
     val dec: Column => Column = _.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     val w = Window.orderBy(col("cap"), col("source"))
     val all = Window.partitionBy()
-    val caps = docs(spark, dir).groupBy("source")
+    val caps = Tables.read(spark, dir, "documents").groupBy("source")
       .agg(sum(col("n_chars")).as("cap"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("prefix", sum(col("cap")).over(
@@ -1134,7 +1132,7 @@ object PipelineQueries {
     */
   def shardPlan(spark: SparkSession, dir: String): DataFrame = {
     val ranked = graft.operators.Relational.globalRank(
-      docs(spark, dir).select(col("doc_id"), col("n_chars")),
+      Tables.read(spark, dir, "documents").select(col("doc_id"), col("n_chars")),
       Seq(col("n_chars").desc, col("doc_id")))
     val s = ranked
       .select(when(expr(s"(rk div $ShardK) % 2") === 0, col("rk") % ShardK)

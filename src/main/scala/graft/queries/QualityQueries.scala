@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
+import graft.sources.Tables
 
 /** Repetition-quality signals and the span-level dedup REWRITE — the two
   * document-hygiene operators every large-scale pretraining pipeline runs
@@ -26,10 +27,7 @@ import graft.operators.TextAnalysis
   *     md5 window key would swap to xxhash64 exactly like the
   *     dedup_minhash / dedup_minhash_md5 split.
   */
-object QualityQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object QualityQueries extends QueryModule {
 
   // ------------------------------------------------- repetition signals
 
@@ -154,7 +152,7 @@ object QualityQueries {
   }
 
   def repSignals(spark: SparkSession, dir: String): DataFrame =
-    withRepSignals(docs(spark, dir).select("doc_id", "text"), "text")
+    withRepSignals(Tables.read(spark, dir, "documents").select("doc_id", "text"), "text")
       .drop("text")
       .orderBy("doc_id")
 
@@ -287,7 +285,7 @@ object QualityQueries {
     * projection end-to-end — no shuffle but the presentation sort.
     */
   def repPara(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select("doc_id", "text")
+    val d = Tables.read(spark, dir, "documents").select("doc_id", "text")
     val withT = d.select(col("doc_id"),
       TextAnalysis.wordTokens(col("text")).as("t"))
       .withColumn("h", floor(size(col("t")) / 2).cast("int"))
@@ -372,7 +370,7 @@ object QualityQueries {
     * interval merge, per-doc span list, row-local HOF strip — no pair join.
     */
   def spanDedupText(spark: SparkSession, dir: String): DataFrame =
-    spanDedupCore(docs(spark, dir).select("doc_id", "text"))
+    spanDedupCore(Tables.read(spark, dir, "documents").select("doc_id", "text"))
       .select(col("doc_id"), col("n_tok"),
         (col("n_tok") - col("kept_tok")).as("n_removed"), col("kept_fp"))
       .orderBy("doc_id")
@@ -498,7 +496,7 @@ object QualityQueries {
     * nothing here adds a join over data.
     */
   def hygieneFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val d0 = docs(spark, dir).select("doc_id", "text")
+    val d0 = Tables.read(spark, dir, "documents").select("doc_id", "text")
     val s0 = d0.agg(
       count(lit(1)).as("docs0"),
       sum(size(TextAnalysis.wordTokens(col("text"))).cast("long")).as("toks0"))

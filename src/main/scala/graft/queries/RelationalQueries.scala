@@ -9,7 +9,7 @@ import graft.sources.Tables
 /** Second relational batch: outer joins, CUBE, INTERSECT, ordered string
   * aggregation, sliding-frame averages, and lead/lag deltas.
   */
-object RelationalQueries {
+object RelationalQueries extends QueryModule {
 
   /** Left outer join with null-side aggregation: every customer, with
     * 0-counts for the order-less (null-extension semantics).

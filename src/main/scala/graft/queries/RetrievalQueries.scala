@@ -5,6 +5,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Relational, TextAnalysis}
+import graft.sources.Tables
 
 /** Retrieval-stack operators over the documents corpus: BM25 keyword
   * scoring, reciprocal-rank fusion of two candidate lists, unigram-LM
@@ -24,13 +25,7 @@ import graft.operators.{Relational, TextAnalysis}
   * (per-doc log-prob sums) — rounded to 4 decimals so the ±1e-12
   * accumulation-order jitter cannot reach the compared value.
   */
-object RetrievalQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
-  private def embs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+object RetrievalQueries extends QueryModule {
 
   private def toks(d: DataFrame): DataFrame =
     d.select(col("doc_id"), explode(TextAnalysis.wordTokens(lower(col("text")))).as("term"))
@@ -88,7 +83,7 @@ object RetrievalQueries {
   }
 
   def bm25Score(spark: SparkSession, dir: String): DataFrame =
-    bm25(docs(spark, dir), QueryTerms, topK = 50)
+    bm25(Tables.read(spark, dir, "documents"), QueryTerms, topK = 50)
       .select((col("doc_id") +: round(col("raw"), 6).as("bm25") +:
         QueryTerms.map(q => col(s"tf_$q"))): _*)
       .orderBy("doc_id")
@@ -148,14 +143,14 @@ object RetrievalQueries {
     * rounding below is display-width only).
     */
   def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val listA = d
       .withColumn("ra", row_number().over(
         Window.orderBy(col("n_chars").desc, col("doc_id"))).cast("long"))
       .filter(col("ra") <= RrfDepth)
       .select(col("doc_id"), col("ra"))
     import graft.functions.VectorKernels.dotProduct
-    val e = embs(spark, dir).select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.read(spark, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     val qv = e.filter(col("vec_id") === 0)
       .select(col("v").as("qv"))
     val cos = e.crossJoin(broadcast(qv))
@@ -212,7 +207,7 @@ object RetrievalQueries {
     * the (doc_id) aggregation itself.
     */
   def docLogprob(spark: SparkSession, dir: String): DataFrame = {
-    val t = toks(docs(spark, dir))
+    val t = toks(Tables.read(spark, dir, "documents"))
     val cnt = t.groupBy("term").agg(count(lit(1)).as("n"))
     val total = cnt.agg(sum("n").as("t_tokens"))
     t.join(broadcast(cnt), "term")
@@ -257,7 +252,7 @@ object RetrievalQueries {
   val LmSalt = 8
 
   def docLogprob2(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.wordTokens(lower(col("text"))).as("t"))
       .filter(size(col("t")) >= 2)
     val bi = d.select(col("doc_id"), explode(expr(
@@ -265,7 +260,7 @@ object RetrievalQueries {
       .as("p"))
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
     val cab = bi.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-    val ca = toks(docs(spark, dir)).groupBy("term").agg(count(lit(1)).as("c_a"))
+    val ca = toks(Tables.read(spark, dir, "documents")).groupBy("term").agg(count(lit(1)).as("c_a"))
     // hub-proof bigram join: a boilerplate bigram ("of the" at corpus
     // scale) would otherwise land its whole token stream on one SMJ
     // reducer, and AQE's skew split can't fire here (QuerySkewSpec)
@@ -312,7 +307,7 @@ object RetrievalQueries {
     */
   def docLogprobInterp(spark: SparkSession, dir: String): DataFrame = {
     val dec: Column => Column = _.cast(DecimalType(38, 0))
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.wordTokens(lower(col("text"))).as("t"))
       .filter(size(col("t")) >= 2)
     val bi = d.select(col("doc_id"), explode(expr(
@@ -320,7 +315,7 @@ object RetrievalQueries {
       .as("p"))
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
     val cab = bi.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-    val uni = toks(docs(spark, dir)).groupBy("term").agg(count(lit(1)).as("c"))
+    val uni = toks(Tables.read(spark, dir, "documents")).groupBy("term").agg(count(lit(1)).as("c"))
     val n = uni.agg(sum("c").as("n"))
     val lnMix = log(
       (dec(lit(7)) * dec(col("c_ab")) * dec(col("n"))
@@ -377,7 +372,7 @@ object RetrievalQueries {
     * 4-decimal round. Both LM frames are vocabulary-sized broadcasts.
     */
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val t = toks(d)
     val all = t.groupBy("term").agg(count(lit(1)).as("na"))
     val allStats = all.agg(sum("na").as("ta"), count(lit(1)).as("v"))
@@ -456,7 +451,7 @@ object RetrievalQueries {
     * TakeOrderedAndProject.
     */
   def skipgramPairs(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
       .select(TextAnalysis.wordTokens(lower(col("text"))).as("t"))
       .filter(size(col("t")) >= 2)
     // offsets 1..W on the ordered side only: (t[i], t[i+o]) covers every
@@ -493,7 +488,7 @@ object RetrievalQueries {
     SELECT a, b, n FROM c ORDER BY a, b"""
 
   def pmiBigrams(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
       .select(TextAnalysis.wordTokens(lower(col("text"))).as("t"))
       .filter(size(col("t")) >= 2)
     val bi = d.select(explode(expr(
@@ -501,7 +496,7 @@ object RetrievalQueries {
       .as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
     val cab = bi.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-    val uni = toks(docs(spark, dir)).groupBy("term").agg(count(lit(1)).as("c"))
+    val uni = toks(Tables.read(spark, dir, "documents")).groupBy("term").agg(count(lit(1)).as("c"))
     val tu = uni.agg(sum("c").as("tu"))
     val tb = cab.agg(sum("c_ab").as("tb"))
     val dec: Column => Column = _.cast("decimal(38,0)")
@@ -567,7 +562,7 @@ object RetrievalQueries {
     // source rides the token frame (functionally dependent on doc_id,
     // so it joins the per-doc groupBy key for free) — ONE documents
     // scan, no second fetch-source pass + join
-    val t = docs(spark, dir).select(col("doc_id"), col("source"),
+    val t = Tables.read(spark, dir, "documents").select(col("doc_id"), col("source"),
       explode(TextAnalysis.wordTokens(lower(col("text")))).as("term"))
     val cnt = t.groupBy("term").agg(count(lit(1)).as("n"))
     val total = cnt.agg(sum("n").as("t_tokens"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Logistic, Materialize, Multimodal, Pca, Similarity, TextAnalysis}
+import graft.sources.Tables
 
 
 /** Scale-path operators: near-dup detection (MinHash-LSH, SimHash,
@@ -15,20 +16,14 @@ import graft.operators.{Dedup, Logistic, Materialize, Multimodal, Pca, Similarit
   * by design — those queries get the driver's rows-only check plus
   * ScalaTest ground-truth suites (recall vs. brute force, planted dups).
   */
-object ScaleQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
-  private def embs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+object ScaleQueries extends QueryModule {
 
   val Dim = 64
 
   // ------------------------------------------------------------- dedup
 
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashNearDups(docs(spark, dir), "doc_id", "text", threshold = 0.5)
+    Dedup.minhashNearDups(Tables.read(spark, dir, "documents"), "doc_id", "text", threshold = 0.5)
       .orderBy("a_id", "b_id")
 
   /** `dedup_minhash_md5` — the SAME banded MinHash-LSH pipeline as
@@ -45,7 +40,7 @@ object ScaleQueries {
     * reuses [[graft.operators.Dedup.verifyJaccard]] verbatim.
     */
   def dedupMinhashMd5(spark: SparkSession, dir: String): DataFrame = {
-    val grams = Materialize(kmGramFrame(docs(spark, dir)))
+    val grams = Materialize(kmGramFrame(Tables.read(spark, dir, "documents")))
     // NOT materialized (measured 3.8 -> 4.4 s): the heavy 32-min
     // signature aggregation sits under an Exchange on `id` that
     // canonicalizes identically on both self-join sides, so Spark's
@@ -237,7 +232,7 @@ object ScaleQueries {
   private[graft] def dedupLedgerBuildAt(spark: SparkSession, dir: String,
       kb: Int): DataFrame = {
     val root = ledgerDir(dir, kb)
-    val hist = docs(spark, dir).filter(!ledgerIsBatch)
+    val hist = Tables.read(spark, dir, "documents").filter(!ledgerIsBatch)
     val banded = kmBandKeys(kmGramFrame(hist)).withColumn("kb", ledgerKbColAt(kb))
     val marker = new java.io.File(root, "_GRAFT_LEDGER_COMPLETE")
     marker.delete()
@@ -422,7 +417,7 @@ object ScaleQueries {
     val root = ledgerDir(dir, kb)
     if (!new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
       dedupLedgerBuildAt(spark, dir, kb).count()
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val batchGrams = Materialize(kmGramFrame(d.filter(isBatch)))
     val bb = Materialize(kmBandKeys(batchGrams).withColumn("kb", ledgerKbColAt(kb)))
     // the batch's distinct (band, kb) pairs — bounded by 8 × kb — as ONE
@@ -460,7 +455,7 @@ object ScaleQueries {
     val root = ledgerDir(dir)
     if (!new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
       dedupLedgerBuild(spark, dir).count()
-    val hg = docs(spark, dir).filter(!ledgerIsBatch)
+    val hg = Tables.read(spark, dir, "documents").filter(!ledgerIsBatch)
       .select(col("doc_id").as("hist_id"), kmGramArray(col("text")).as("h_grams"))
     (cachedScan(spark, root, "full")(ledgerBuckets(spark, root)), hg)
   }
@@ -476,7 +471,7 @@ object ScaleQueries {
     */
   private[graft] def dedupLedgerProbeOn(spark: SparkSession, dir: String,
       isBatch: org.apache.spark.sql.Column, kb: Int = LedgerKb): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val (batchGrams, bb, pruned) = ledgerProbeParts(spark, dir, isBatch, kb)
     val cands = pruned
       .select(col("id").as("a_id"), col("band").as("l_band"), col("key").as("l_key"))
@@ -590,7 +585,7 @@ object ScaleQueries {
     * tradeoff curve that picked it.
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashNearDups(docs(spark, dir), "doc_id", "text",
+    Dedup.simhashNearDups(Tables.read(spark, dir, "documents"), "doc_id", "text",
         maxHamming = SimhashMaxHamming)
       .orderBy("a_id", "b_id")
 
@@ -630,7 +625,7 @@ object ScaleQueries {
     // gram frame materializes first: the cap reads it twice (hot-count
     // aggregate + anti-join input), and capping an unmaterialized frame
     // would re-run the gram hashing for each.
-    val raw = Materialize(Dedup.explodedNgrams(docs(spark, dir), "doc_id", "text",
+    val raw = Materialize(Dedup.explodedNgrams(Tables.read(spark, dir, "documents"), "doc_id", "text",
       n = 3, keep = Seq("source")))
     val grams = Materialize(
       Dedup.capGramDocFreq(raw, maxDocFreq = 20, keyCols = Seq("source")))
@@ -662,7 +657,7 @@ object ScaleQueries {
     * dropping the τ filter cannot reintroduce the quadratic.
     */
   def dedupSweep(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Materialize(Dedup.explodedNgrams(docs(spark, dir), "doc_id", "text",
+    val raw = Materialize(Dedup.explodedNgrams(Tables.read(spark, dir, "documents"), "doc_id", "text",
       n = 3, keep = Seq("source")))
     val grams = Materialize(
       Dedup.capGramDocFreq(raw, maxDocFreq = 20, keyCols = Seq("source")))
@@ -705,7 +700,7 @@ object ScaleQueries {
     */
   def noveltyRate(spark: SparkSession, dir: String): DataFrame = {
     val grams = Materialize(
-      Dedup.explodedNgrams(docs(spark, dir), "doc_id", "text"))
+      Dedup.explodedNgrams(Tables.read(spark, dir, "documents"), "doc_id", "text"))
     val firsts = grams.groupBy("gh").agg(min("id").as("fid"))
     grams.join(firsts, Seq("gh"))
       .groupBy(col("id").as("doc_id"))
@@ -791,7 +786,7 @@ object ScaleQueries {
 
   /** Every 50th vector queries the rest of the corpus, brute force. */
   def knnBrute(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % 50 === 0)
     Similarity.knnBrute(queries, prepped, k = 5).orderBy("q_id", "rk")
   }
@@ -815,7 +810,7 @@ object ScaleQueries {
 
   /** LSH-bucketed ANN over the same query set (recall measured in tests). */
   def knnLsh(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % 50 === 0)
     Similarity.knnLsh(queries, prepped, k = 5, dim = Dim, planes = 4, tables = 8)
       .orderBy("q_id", "rk")
@@ -829,7 +824,7 @@ object ScaleQueries {
     * the untrained skeleton so a regression can't land silently.
     */
   def knnIvf(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % 50 === 0)
     val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     Similarity.knnIvf(queries, prepped, k = 5, nProbe = 6, centroids = Some(cent))
@@ -847,7 +842,7 @@ object ScaleQueries {
     * keeps recall while the scanned fraction collapses.
     */
   def knnIvfHi(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % 50 === 0)
     val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     Similarity.knnIvf(queries, prepped, k = 5, nProbe = 12, centroids = Some(cent))
@@ -915,7 +910,7 @@ object ScaleQueries {
     * `knn_pq_recall`.
     */
   def knnPq(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
     Similarity.knnPq(queries, prepped, k = PqK, rerank = PqRerank,
       pqSubspaces(prepped)).orderBy("q_id", "rk")
@@ -959,7 +954,7 @@ object ScaleQueries {
     * end → fully oracle-checked like the IVF and flat-PQ paths.
     */
   def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
     val coarse = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     Similarity.knnIvfPq(queries, prepped, k = PqK, rerank = PqRerank,
@@ -1045,7 +1040,7 @@ object ScaleQueries {
   private[graft] def annIndexBuildAt(spark: SparkSession, dir: String,
       kCells: Int): DataFrame = {
     val root = annIndexDirAt(dir, kCells)
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding",
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
     val coarse = Similarity.kmeansCentroids(prepped, k = kCells, iters = 1)
     val subs = ivfPqSubspaces(prepped, coarse)
@@ -1158,7 +1153,7 @@ object ScaleQueries {
   private[graft] def annIndexSearchOnAt(spark: SparkSession, dir: String,
       queryPred: org.apache.spark.sql.Column, kCells: Int,
       nProbe: Int): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(queryPred)
     val (codes, coarse, subs) = annIndexPartsAt(spark, dir, kCells)
     Similarity.knnIvfPqOnCodes(queries, prepped,
@@ -1177,7 +1172,7 @@ object ScaleQueries {
     * brute truth is floor-audited in `knn_filtered_recall`.
     */
   def knnFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding",
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
     val (codes, coarse, subs) = annIndexParts(spark, dir)
@@ -1246,7 +1241,7 @@ object ScaleQueries {
                                 nProbe: Int = RangeNProbe,
                                 pred: Column = col("id") % PqQueryMod === 0)
       : DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(pred)
     val (codes, coarse, subs) = annIndexParts(spark, dir)
     Similarity.rangeIvfPqOnCodes(queries, prepped,
@@ -1265,7 +1260,7 @@ object ScaleQueries {
     * formulations drifted).
     */
   def annRangeRecall(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
     val qv = broadcast(queries.select(col("id").as("q_id"),
       col("v").as("qv"), col("nrm").as("qn")))
@@ -1315,7 +1310,7 @@ object ScaleQueries {
     * `ann_range_filtered_recall` is the oracle-checked companion.
     */
   def annRangeFiltered(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding",
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
     val (codes, coarse, subs) = annIndexParts(spark, dir)
@@ -1330,7 +1325,7 @@ object ScaleQueries {
     * [[annRangeRecall]] with the same-label predicate on both sides.
     */
   def annRangeFilteredRecall(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding",
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
     val qv = broadcast(queries.select(col("id").as("q_id"),
@@ -1402,7 +1397,7 @@ object ScaleQueries {
     * engines agree on the NULL).
     */
   def annIndexHealth(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     val isNew = col("id") % HealthNewMod === 0
     Similarity.assignCellsWithAffinity(prepped, cent)
@@ -1429,7 +1424,7 @@ object ScaleQueries {
     * the 16-row count frame.
     */
   def annIndexStats(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     val counts = Similarity.assignCells(prepped, cent)
       .groupBy("c_id").agg(count(lit(1)).as("n_vecs"))
@@ -1476,7 +1471,7 @@ object ScaleQueries {
     * portable md5 gram hashes, so fully oracle-checked.
     */
   def fingerprintWinnow(spark: SparkSession, dir: String): DataFrame =
-    TextAnalysis.winnowFingerprints(docs(spark, dir), "doc_id", "text", n = 3, w = 4)
+    TextAnalysis.winnowFingerprints(Tables.read(spark, dir, "documents"), "doc_id", "text", n = 3, w = 4)
       .withColumnsRenamed(Map("id" -> "doc_id"))
       .orderBy("doc_id", "fp")
 
@@ -1497,10 +1492,10 @@ object ScaleQueries {
   /** Label-blocked exact cosine near-dup pairs. */
   def embNearDup(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(
-      embs(spark, dir).select(col("vec_id"), col("embedding"), col("label")),
+      Tables.read(spark, dir, "embeddings").select(col("vec_id"), col("embedding"), col("label")),
       "vec_id", "embedding")
     val withLabel = prepped // prep keeps only id/v/nrm; re-join label
-    val lbl = embs(spark, dir).select(col("vec_id").as("id"), col("label"))
+    val lbl = Tables.read(spark, dir, "embeddings").select(col("vec_id").as("id"), col("label"))
     Similarity.cosineNearDups(withLabel.join(lbl, "id"), col("label"), 0.4)
       .orderBy("a_id", "b_id")
   }
@@ -1551,7 +1546,7 @@ object ScaleQueries {
   }
 
   def deconSemantic(spark: SparkSession, dir: String): DataFrame =
-    deconSemanticOn(Similarity.prep(embs(spark, dir), "vec_id", "embedding"))
+    deconSemanticOn(Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding"))
 
   val deconSemanticSql: String = s"""
     WITH e AS (
@@ -1621,7 +1616,7 @@ object ScaleQueries {
     * a property of the data, not the operator.
     */
   def linearProbe(spark: SparkSession, dir: String): DataFrame = {
-    val feats = probeFeatures(embs(spark, dir))
+    val feats = probeFeatures(Tables.read(spark, dir, "embeddings"))
     val w = Logistic.train(feats, ProbeDims + 1, ProbeIters, ProbeLr)
     Logistic.logLoss(feats, w).select(
       col("n") +: round(col("log_loss"), 6).as("log_loss") +:
@@ -1634,7 +1629,7 @@ object ScaleQueries {
     * model-sized weights fold in as literals.
     */
   def linearProbeScore(spark: SparkSession, dir: String): DataFrame = {
-    val feats = probeFeatures(embs(spark, dir))
+    val feats = probeFeatures(Tables.read(spark, dir, "embeddings"))
     val w = Logistic.train(feats, ProbeDims + 1, ProbeIters, ProbeLr)
     feats.select(col("vec_id"), col("y"),
         round(Logistic.prob(w), 6).as("p"))
@@ -1726,7 +1721,7 @@ object ScaleQueries {
     * One corpus aggregation into ≤10 rows; scales like any keyed agg.
     */
   def probeCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val feats = probeFeatures(embs(spark, dir))
+    val feats = probeFeatures(Tables.read(spark, dir, "embeddings"))
     val w = Logistic.train(feats, ProbeDims + 1, ProbeIters, ProbeLr)
     feats.select(col("y"), round(Logistic.prob(w), 6).as("p"))
       .withColumn("bin", least(floor(col("p") * 10), lit(9.0)).cast("int"))
@@ -1749,7 +1744,7 @@ object ScaleQueries {
   def probeAuc(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
-    val feats = probeFeatures(embs(spark, dir))
+    val feats = probeFeatures(Tables.read(spark, dir, "embeddings"))
     val w = Logistic.train(feats, ProbeDims + 1, ProbeIters, ProbeLr)
     val d = feats.select(round(Logistic.prob(w), 6).as("v"),
       col("y").cast("long").as("y"))
@@ -1823,7 +1818,7 @@ object ScaleQueries {
     */
   def probePrCurve(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val feats = probeFeatures(embs(spark, dir))
+    val feats = probeFeatures(Tables.read(spark, dir, "embeddings"))
     val w = Logistic.train(feats, ProbeDims + 1, ProbeIters, ProbeLr)
     val scored = feats.select(col("y"), round(Logistic.prob(w), 6).as("p"))
     val hist = scored.groupBy("p")
@@ -1969,7 +1964,7 @@ object ScaleQueries {
     // bucket hash per token looked kmGramFrame-shaped, but this query's
     // cost is the GD steps + AUC window over the materialized frame,
     // not the single-threaded map stage — left unspread
-    val toks = docs(spark, dir).select(
+    val toks = Tables.read(spark, dir, "documents").select(
       col("doc_id"),
       explode(TextAnalysis.wordTokens(lower(col("text")))).as("tok"))
     val bkt = conv(substring(md5(col("tok")), 1, 8), 16, 10)
@@ -1980,7 +1975,7 @@ object ScaleQueries {
       sum(length(col("tok"))).cast("double").as("chars")) ++
       (0 until TpBuckets).map(b =>
         sum(when(bkt === b, 1).otherwise(0)).cast("double").as(s"k$b"))
-    val q = docs(spark, dir).select(col("doc_id"),
+    val q = Tables.read(spark, dir, "documents").select(col("doc_id"),
       TextAnalysis.qualityScore(col("text")).as("quality"))
     val per = toks.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
       .join(q, "doc_id")
@@ -2163,7 +2158,7 @@ object ScaleQueries {
     */
   def labelScatterPc1(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sc = Pca.labelScatter(embs(spark, dir), "embedding", Dim)
+    val sc = Pca.labelScatter(Tables.read(spark, dir, "embeddings"), "embedding", Dim)
     val (_, v, _, _) = Pca.dominantDirection(sc.w, sc.dMat, ScatterSquarings)
     v.toSeq.zipWithIndex.map { case (x, i) => (i + 1, x) }
       .toDF("i", "raw")
@@ -2179,7 +2174,7 @@ object ScaleQueries {
     */
   def labelScatterPower(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sc = Pca.labelScatter(embs(spark, dir), "embedding", Dim)
+    val sc = Pca.labelScatter(Tables.read(spark, dir, "embeddings"), "embedding", Dim)
     val (lambda, _, resid, trace) = Pca.dominantDirection(sc.w, sc.dMat, ScatterSquarings)
     Seq((lambda, lambda / trace, resid)).toDF("l", "s", "r")
       .select(round(col("l"), 6).as("lambda"),
@@ -2272,12 +2267,12 @@ object ScaleQueries {
     * so the round-6 score cannot knife-edge at any registered SF.
     */
   def labelScatterProject(spark: SparkSession, dir: String): DataFrame = {
-    val sc = Pca.labelScatter(embs(spark, dir), "embedding", Dim)
+    val sc = Pca.labelScatter(Tables.read(spark, dir, "embeddings"), "embedding", Dim)
     val (_, v, _, _) = Pca.dominantDirection(sc.w, sc.dMat, ScatterSquarings)
     val score = (1 to Dim).map(i =>
       lit(v(i - 1)) * (element_at(col("embedding"), i).cast("double") - lit(sc.mu(i - 1))))
       .reduce(_ + _)
-    embs(spark, dir).select(col("vec_id"), round(score, 6).as("drift"))
+    Tables.read(spark, dir, "embeddings").select(col("vec_id"), round(score, 6).as("drift"))
       .orderBy("vec_id")
   }
 
@@ -2288,7 +2283,7 @@ object ScaleQueries {
     */
   def labelScatterContrib(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sc = Pca.labelScatter(embs(spark, dir), "embedding", Dim)
+    val sc = Pca.labelScatter(Tables.read(spark, dir, "embeddings"), "embedding", Dim)
     val (lambda, v, _, _) = Pca.dominantDirection(sc.w, sc.dMat, ScatterSquarings)
     val rows = sc.w.indices.map { l =>
       val pr = sc.dMat(l).lazyZip(v).map(_ * _).sum
@@ -2393,7 +2388,7 @@ object ScaleQueries {
     */
   def embPca(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val c = embPcaCovOf(embs(spark, dir))
+    val c = embPcaCovOf(Tables.read(spark, dir, "embeddings"))
     val (_, v, _, _) = Pca.dominantOfSymmetric(c, EmbPcaSquarings)
     v.toSeq.zipWithIndex.map { case (x, i) => (i + 1, x) }
       .toDF("i", "raw")
@@ -2409,7 +2404,7 @@ object ScaleQueries {
     */
   def embPcaPower(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val c = embPcaCovOf(embs(spark, dir))
+    val c = embPcaCovOf(Tables.read(spark, dir, "embeddings"))
     val (lambda, _, resid, trace) = Pca.dominantOfSymmetric(c, EmbPcaSquarings)
     Seq((lambda, lambda / trace, resid)).toDF("l", "s", "r")
       .select(round(col("l"), 6).as("lambda"),
@@ -2425,12 +2420,12 @@ object ScaleQueries {
     * (v diverges cross-engine by ~1e-16, coordinates are O(0.1)).
     */
   def embPcaProject(spark: SparkSession, dir: String): DataFrame = {
-    val (c, mu) = embPcaModelOf(embs(spark, dir))
+    val (c, mu) = embPcaModelOf(Tables.read(spark, dir, "embeddings"))
     val (_, v, _, _) = Pca.dominantOfSymmetric(c, EmbPcaSquarings)
     val score = (1 to Dim).map(i =>
       lit(v(i - 1)) * (element_at(col("embedding"), i).cast("double") - lit(mu(i - 1))))
       .reduce(_ + _)
-    embs(spark, dir).select(col("vec_id"), round(score, 6).as("pc1_coord"))
+    Tables.read(spark, dir, "embeddings").select(col("vec_id"), round(score, 6).as("pc1_coord"))
       .orderBy("vec_id")
   }
 
@@ -2460,7 +2455,7 @@ object ScaleQueries {
     */
   def embPca2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (_, v2, _, _, _) = embPcaAxis2(embs(spark, dir))
+    val (_, v2, _, _, _) = embPcaAxis2(Tables.read(spark, dir, "embeddings"))
     v2.toSeq.zipWithIndex.map { case (x, i) => (i + 1, x) }
       .toDF("i", "raw")
       .select(col("i"), round(col("raw"), 6).as("loading"))
@@ -2473,11 +2468,11 @@ object ScaleQueries {
     * pass, the `emb_pca_project` shape widened to two coordinates.
     */
   def embPcaMap(spark: SparkSession, dir: String): DataFrame = {
-    val (v1, v2, mu, _, _) = embPcaAxis2(embs(spark, dir))
+    val (v1, v2, mu, _, _) = embPcaAxis2(Tables.read(spark, dir, "embeddings"))
     def coord(v: Array[Double]) = (1 to Dim).map(i =>
       lit(v(i - 1)) * (element_at(col("embedding"), i).cast("double") - lit(mu(i - 1))))
       .reduce(_ + _)
-    embs(spark, dir).select(col("vec_id"),
+    Tables.read(spark, dir, "embeddings").select(col("vec_id"),
         round(coord(v1), 6).as("pc1_coord"),
         round(coord(v2), 6).as("pc2_coord"))
       .orderBy("vec_id")
@@ -2497,11 +2492,11 @@ object ScaleQueries {
     * ~1e-15 — round-6 safe.
     */
   def embWhiten(spark: SparkSession, dir: String): DataFrame = {
-    val (v1, v2, mu, l1, l2) = embPcaAxis2(embs(spark, dir))
+    val (v1, v2, mu, l1, l2) = embPcaAxis2(Tables.read(spark, dir, "embeddings"))
     def coord(v: Array[Double], l: Double) = (1 to Dim).map(i =>
       lit(v(i - 1)) * (element_at(col("embedding"), i).cast("double") - lit(mu(i - 1))))
       .reduce(_ + _) / lit(math.sqrt(l))
-    embs(spark, dir).select(col("vec_id"),
+    Tables.read(spark, dir, "embeddings").select(col("vec_id"),
         round(coord(v1, l1), 6).as("w1"),
         round(coord(v2, l2), 6).as("w2"))
       .orderBy("vec_id")
@@ -2521,11 +2516,11 @@ object ScaleQueries {
     * verbatim in the oracle.
     */
   def embWhitenCheck(spark: SparkSession, dir: String): DataFrame = {
-    val (v1, v2, mu, l1, l2) = embPcaAxis2(embs(spark, dir))
+    val (v1, v2, mu, l1, l2) = embPcaAxis2(Tables.read(spark, dir, "embeddings"))
     def coord(v: Array[Double], l: Double) = (1 to Dim).map(i =>
       lit(v(i - 1)) * (element_at(col("embedding"), i).cast("double") - lit(mu(i - 1))))
       .reduce(_ + _) / lit(math.sqrt(l))
-    embs(spark, dir).select(coord(v1, l1).as("w1"), coord(v2, l2).as("w2"))
+    Tables.read(spark, dir, "embeddings").select(coord(v1, l1).as("w1"), coord(v2, l2).as("w2"))
       .agg(count(lit(1)).cast("double").as("n"),
         sum("w1").as("s1"), sum(col("w1") * col("w1")).as("q1"),
         sum("w2").as("s2"), sum(col("w2") * col("w2")).as("q2"),
@@ -2559,12 +2554,12 @@ object ScaleQueries {
     */
   def embWhitenFullCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (c, mu) = embPcaModelOf(embs(spark, dir))
+    val (c, mu) = embPcaModelOf(Tables.read(spark, dir, "embeddings"))
     val (ev, vecs, offFro) = Pca.jacobiEigen(c, sweeps = 12)
     val w = Pca.zcaWhitenMatrix(ev, vecs, floor = 1e-12)
     val d = Dim
     val bw = spark.sparkContext.broadcast((w, mu))
-    val whitened = embs(spark, dir)
+    val whitened = Tables.read(spark, dir, "embeddings")
       .select(col("embedding").cast("array<double>"))
       .as[Array[Double]]
       .mapPartitions { it =>
@@ -2582,7 +2577,7 @@ object ScaleQueries {
       yield math.abs(cy(i)(j))).max
     val maxDiag = (0 until d).map(i => math.abs(cy(i)(i) - 1.0)).max
     val ok = offFro <= 1e-9 && maxOff <= 1e-7 && maxDiag <= 1e-7
-    val n = embs(spark, dir).count()
+    val n = Tables.read(spark, dir, "embeddings").count()
     Seq((n, maxOff, maxDiag, if (ok) 1L else 0L))
       .toDF("n_vecs", "mo", "md", "whiten_ok")
       .select(col("n_vecs"),
@@ -2609,12 +2604,12 @@ object ScaleQueries {
     * transform, TakeOrderedAndProject top-k.
     */
   def embOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val (v1, v2, mu, l1, l2) = embPcaAxis2(embs(spark, dir))
+    val (v1, v2, mu, l1, l2) = embPcaAxis2(Tables.read(spark, dir, "embeddings"))
     def coord(v: Array[Double], l: Double) = (1 to Dim).map(i =>
       lit(v(i - 1)) * (element_at(col("embedding"), i).cast("double") - lit(mu(i - 1))))
       .reduce(_ + _) / lit(math.sqrt(l))
     val m2 = coord(v1, l1) * coord(v1, l1) + coord(v2, l2) * coord(v2, l2)
-    embs(spark, dir).select(col("vec_id"), m2.as("m2raw"))
+    Tables.read(spark, dir, "embeddings").select(col("vec_id"), m2.as("m2raw"))
       .orderBy(col("m2raw").desc, col("vec_id")).limit(20)
       .select(col("vec_id"), round(col("m2raw"), 6).as("m2"),
         (col("m2raw") > 9.21).cast("long").as("beyond_chi2_99"))
@@ -2637,7 +2632,7 @@ object ScaleQueries {
     */
   private[graft] def whitenModel(spark: SparkSession, dir: String)
       : graft.streaming.StreamingOutlierGate.WhitenModel = {
-    val (v1, v2, mu, l1, l2) = embPcaAxis2(embs(spark, dir))
+    val (v1, v2, mu, l1, l2) = embPcaAxis2(Tables.read(spark, dir, "embeddings"))
     graft.streaming.StreamingOutlierGate.WhitenModel(v1, v2, mu, l1, l2)
   }
 
@@ -2687,7 +2682,7 @@ object ScaleQueries {
     */
   def embJlProject(spark: SparkSession, dir: String): DataFrame = {
     val ys = (1 to JlK).map(j => round(jlCoord(j), 6).as(s"y$j"))
-    embs(spark, dir).select(col("vec_id") +: ys: _*).orderBy("vec_id")
+    Tables.read(spark, dir, "embeddings").select(col("vec_id") +: ys: _*).orderBy("vec_id")
   }
 
   /** `emb_jl_check` — the JL distance-distortion CERTIFICATE: on a
@@ -2707,7 +2702,7 @@ object ScaleQueries {
   def embJlCheck(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hx = md5(col("vec_id").cast("string"))
-    val sel = embs(spark, dir)
+    val sel = Tables.read(spark, dir, "embeddings")
       .filter(conv(substring(hx, 1, 8), 16, 10).cast("long") % JlSampleMod === 0)
       .select(col("vec_id"), col("embedding"), hx.as("hx"))
       .withColumn("bkt", conv(substring(col("hx"), 9, 8), 16, 10).cast("long") % JlBuckets)
@@ -2974,7 +2969,7 @@ object ScaleQueries {
     */
   def coresetKcenter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cs = graft.operators.Coreset.kCenter(embs(spark, dir), "vec_id", "embedding", CoresetK, Dim)
+    val cs = graft.operators.Coreset.kCenter(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding", CoresetK, Dim)
     cs.map(c => (c.rank, c.id, c.dist)).toDF("rk", "vec_id", "d")
       .select(col("rk"), col("vec_id"), round(col("d"), 6).as("dist"))
       .orderBy("rk")
@@ -2987,8 +2982,8 @@ object ScaleQueries {
     * greedy selection 2-approximates.
     */
   def coresetCover(spark: SparkSession, dir: String): DataFrame = {
-    val cs = graft.operators.Coreset.kCenter(embs(spark, dir), "vec_id", "embedding", CoresetK, Dim)
-    graft.operators.Coreset.cover(embs(spark, dir), "embedding", cs, Dim)
+    val cs = graft.operators.Coreset.kCenter(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding", CoresetK, Dim)
+    graft.operators.Coreset.cover(Tables.read(spark, dir, "embeddings"), "embedding", cs, Dim)
   }
 
   /** Greedy-selection CTE chain shared by both coreset oracles: ends
@@ -3085,7 +3080,7 @@ object ScaleQueries {
     */
   private def audioPayloads(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spreadIds(spark, docs(spark, dir).select(col("doc_id"))).as[Long]
+    spreadIds(spark, Tables.read(spark, dir, "documents").select(col("doc_id"))).as[Long]
       .mapPartitions(_.map { id =>
         val dup = id % 7 == 3 && id >= 3
         val seed = if (dup) id - 3 else id
@@ -3150,7 +3145,7 @@ object ScaleQueries {
     * SCALING.md's round-14 audio section.
     */
   def audioNearDupRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
     val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
       .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
       .select("a_id", "b_id")
@@ -3181,7 +3176,7 @@ object ScaleQueries {
     * near-dup join uses — no new join shape, only a different verify.
     */
   def audioCoverRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
     val truth = d.select(col("doc_id").as("b_id"))
       .filter(col("b_id") % 28 === 19 && col("b_id") >= 6)
       .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 6)
@@ -3214,7 +3209,7 @@ object ScaleQueries {
     * docs share a family or their families are joined by a near edge.
     */
   def audioNearDupGroupsRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
     val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
       .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
       .select("a_id", "b_id")
@@ -3262,7 +3257,7 @@ object ScaleQueries {
     * planted-count + flag shape the recall companions use.
     */
   def audioNearDupPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
     val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
       .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
       .select("a_id", "b_id")
@@ -3288,7 +3283,7 @@ object ScaleQueries {
     */
   private def imagePayloads(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spreadIds(spark, docs(spark, dir).select(col("doc_id"))).as[Long]
+    spreadIds(spark, Tables.read(spark, dir, "documents").select(col("doc_id"))).as[Long]
       .mapPartitions(_.map { id =>
         val dup = id % 7 == 3 && id >= 3
         val seed = if (dup) id - 3 else id
@@ -3318,7 +3313,7 @@ object ScaleQueries {
     * tail at all: found = planted ∩ (h ≤ 3), exactly.
     */
   def imageNearDupRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
     val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
       .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
       .select("a_id", "b_id")
@@ -3361,7 +3356,7 @@ object ScaleQueries {
     */
   private def hashedGroupsRecall(spark: SparkSession, dir: String,
       fp: DataFrame, minPct: Int): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
     val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
       .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
       .select("a_id", "b_id")
@@ -3390,7 +3385,7 @@ object ScaleQueries {
     */
   private def videoPayloads(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spreadIds(spark, docs(spark, dir).select(col("doc_id"))).as[Long]
+    spreadIds(spark, Tables.read(spark, dir, "documents").select(col("doc_id"))).as[Long]
       .mapPartitions(_.map { id =>
         val dup = id % 7 == 3 && id >= 3
         val seed = if (dup) id - 3 else id
@@ -3415,7 +3410,7 @@ object ScaleQueries {
     * no coincidental tail.
     */
   def videoNearDupRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"))
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
     val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
       .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
       .select("a_id", "b_id")
@@ -3448,9 +3443,9 @@ object ScaleQueries {
     * pass that gates on BOTH text quality and embedding sanity.
     */
   def multimodalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"), col("lang"),
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"), col("lang"),
       length(col("text")).cast("long").as("n_chars_m"))
-    val e = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val e = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
       .select(col("id").as("doc_id"), round(col("nrm"), 6).as("emb_norm"))
     d.join(e, "doc_id").orderBy("doc_id")
   }
@@ -3468,7 +3463,7 @@ object ScaleQueries {
     * the decimal rounding sees identical values.
     */
   def labelCentroids(spark: SparkSession, dir: String): DataFrame =
-    embs(spark, dir)
+    Tables.read(spark, dir, "embeddings")
       .select(col("label"), posexplode(col("embedding")))
       .groupBy(col("label"), col("pos"))
       .agg(round(
@@ -3494,7 +3489,7 @@ object ScaleQueries {
     * collapse) unrolls into SQL, same discipline as pagerank.
     */
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     Similarity.semDedup(prepped, cent, tau = 0.35).orderBy("vec_id")
   }
@@ -3547,7 +3542,7 @@ object ScaleQueries {
     * after the one assignment pass grows with data.
     */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
-    val raw = embs(spark, dir)
+    val raw = Tables.read(spark, dir, "embeddings")
     val prepped = Similarity.prep(raw, "vec_id", "embedding")
     val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     val lab = Similarity.assignCells(prepped, cent)
@@ -3896,7 +3891,7 @@ object ScaleQueries {
     * aggregate.
     */
   def kmeansQuality(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
     Similarity.assignCells(prepped, cent)
       .join(broadcast(cent), "c_id")
@@ -3932,7 +3927,7 @@ object ScaleQueries {
     * pipeline (slices included) unrolls into SQL like `sem_dedup`.
     */
   def embPq(spark: SparkSession, dir: String): DataFrame = {
-    val raw = embs(spark, dir)
+    val raw = Tables.read(spark, dir, "embeddings")
     def subReport(lo: Int, len: Int, space: Int): DataFrame = {
       val prepped = raw.select(col("vec_id").as("id"),
           slice(col("embedding"), lit(lo), lit(len)).as("v"))
@@ -4018,7 +4013,7 @@ object ScaleQueries {
     * values before one double division.
     */
   def embQuantize(spark: SparkSession, dir: String): DataFrame =
-    embs(spark, dir)
+    Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"),
         (lit(127.0) / greatest(
           array_max(transform(col("embedding"), x => abs(x))).cast("double"),
@@ -4052,7 +4047,7 @@ object ScaleQueries {
     * one map pass after one map-side-combined aggregation.
     */
   def embNormalize(spark: SparkSession, dir: String): DataFrame = {
-    val ex = embs(spark, dir)
+    val ex = Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").cast("long").as("pos"),
         col("col").cast("double").cast("decimal(18,8)").as("v"))
@@ -4104,7 +4099,7 @@ object ScaleQueries {
     val matrix = broadcast(
       (for (i <- 0 until Dim; j <- 0 until 16) yield (i, j, sign(i, j)))
         .toDF("i", "j", "sign"))
-    embs(spark, dir)
+    Tables.read(spark, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .join(matrix, col("pos") === col("i"))
       .groupBy(col("vec_id"), col("j").cast("long").as("dim"))
@@ -4139,7 +4134,7 @@ object ScaleQueries {
     * bitwise arithmetic — bit-identical in the DuckDB oracle.
     */
   def zorderBuckets(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    Tables.read(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"),
         graft.operators.ZOrder.mortonCode(col("l_partkey"), col("l_suppkey")).as("z"))
       .groupBy(shiftright(col("z"), 20).as("z_bucket"))
@@ -4182,7 +4177,7 @@ object ScaleQueries {
   private def annRecall(spark: SparkSession, dir: String,
                         approx: (DataFrame, DataFrame) => DataFrame,
                         minPct: Int): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding")
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % 50 === 0)
     // NOT materialized: the brute subtree is referenced twice (probe +
     // denominator), but it is a broadcast-query map-only scan whose
@@ -4259,7 +4254,7 @@ object ScaleQueries {
     * set from RecallSweep's filtered section across all three SFs.
     */
   def knnFilteredRecall(spark: SparkSession, dir: String): DataFrame = {
-    val prepped = Similarity.prep(embs(spark, dir), "vec_id", "embedding",
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
     val brute = Similarity.knnBruteFiltered(queries, prepped, k = PqK,
@@ -4355,7 +4350,7 @@ object ScaleQueries {
     // this size); the point is the 100× regime, where recomputing the
     // tokenize+hash pass over the full text twice dominates one linear
     // gram-frame write
-    val raw = Materialize(Dedup.explodedNgrams(docs(spark, dir), "doc_id", "text"))
+    val raw = Materialize(Dedup.explodedNgrams(Tables.read(spark, dir, "documents"), "doc_id", "text"))
     Materialize(Dedup.capGramDocFreq(raw, maxDocFreq = 20))
   }
 
@@ -4442,7 +4437,7 @@ object ScaleQueries {
     // scan — overlapped on two driver threads (guide §2.6)
     val (truth, found) = Materialize.par2(
       raregramTruth(spark, dir)._2,
-      Dedup.simhashNearDups(docs(spark, dir), "doc_id", "text",
+      Dedup.simhashNearDups(Tables.read(spark, dir, "documents"), "doc_id", "text",
           maxHamming = SimhashMaxHamming)
         .select(col("a_id"), col("b_id")))
     recallRow(truth, found, minPct = 40)
@@ -4464,7 +4459,7 @@ object ScaleQueries {
     // inside the background thunk (precisionRow reads it twice)
     val (truth, foundM) = Materialize.par2(
       raregramTruth(spark, dir)._2,
-      Materialize(Dedup.simhashNearDups(docs(spark, dir), "doc_id", "text",
+      Materialize(Dedup.simhashNearDups(Tables.read(spark, dir, "documents"), "doc_id", "text",
           maxHamming = SimhashMaxHamming)
         .select(col("a_id"), col("b_id"))))
     precisionRowOn(truth, foundM, minPct = 60)

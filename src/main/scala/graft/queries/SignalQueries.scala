@@ -11,10 +11,7 @@ import graft.sources.Tables
   * leakage-safe split that keeps near-duplicate documents inside one
   * train/val/test partition.
   */
-object SignalQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object SignalQueries extends QueryModule {
 
   // ------------------------------------------------ markov transitions
 
@@ -116,7 +113,7 @@ object SignalQueries {
     * the per-cell table is the deterministic artifact.
     */
   def mutualInfo(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val joint = d.groupBy("source", "lang").agg(count(lit(1)).as("c_xy"))
     val mx = d.groupBy("source").agg(count(lit(1)).as("c_x"))
     val my = d.groupBy("lang").agg(count(lit(1)).as("c_y"))

@@ -15,10 +15,7 @@ import graft.sources.Tables
   * plus an S² pairwise combine over the tiny post-agg frame is the
   * standard answer (DataSketches theta; Beyer et al., SIGMOD'07).
   */
-object SketchQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object SketchQueries extends QueryModule {
 
   // --------------------------------------------------- theta intersect
 
@@ -38,7 +35,7 @@ object SketchQueries {
     */
   def thetaIntersect(spark: SparkSession, dir: String): DataFrame = {
     val kmv = udaf(new KmvAgg(K))
-    val d = docs(spark, dir).filter(col("text").isNotNull)
+    val d = Tables.read(spark, dir, "documents").filter(col("text").isNotNull)
 
     val sk = d.groupBy("source")
       .agg(kmv(xxhash64(col("text"))).as("sk"))

@@ -3,16 +3,14 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis._
+import graft.sources.Tables
 
 /** Text-analysis queries over `documents` (doc_id, text, lang, source,
   * n_chars): stats, language ID, quality scoring, fingerprinting, exact
   * dedup, and the multimodal binary-column plumbing. All per-row
   * projections except dedup (one shuffle on the text hash).
   */
-object TextQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+object TextQueries extends QueryModule {
 
   /** DuckDB-side token list (mirrors [[wordTokens]]). */
   private val toksSql = "string_split_regex(trim(text), '\\s+')"
@@ -20,7 +18,7 @@ object TextQueries {
   // ----------------------------------------------------------- text stats
 
   def textStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       // stage the token array once; downstream stats read the column
       .select(col("doc_id"), col("text"), wordTokens(col("text")).as("toks"))
       .select(
@@ -50,7 +48,7 @@ object TextQueries {
   // ---------------------------------------------------------- token count
 
   def tokenCount(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Tables.read(spark, dir, "documents").select(
       col("doc_id"),
       size(wordTokens(col("text"))).cast("long").as("ws_tokens"),
       regexTokenCount(col("text")).as("re_tokens"))
@@ -68,7 +66,7 @@ object TextQueries {
   def langId(spark: SparkSession, dir: String): DataFrame = {
     val toks   = wordTokens(lower(col("text")))
     val scores = langScores(toks)
-    docs(spark, dir).select(
+    Tables.read(spark, dir, "documents").select(
       col("doc_id"), col("lang").as("labeled_lang"),
       scores("en").as("s_en"), scores("es").as("s_es"),
       scores("de").as("s_de"), scores("fr").as("s_fr"),
@@ -103,7 +101,7 @@ object TextQueries {
   def langidConfusion(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val scores = langScores(wordTokens(lower(col("text"))))
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("lang").as("labeled"), langPredict(scores).as("predicted"))
       .groupBy("labeled", "predicted").agg(count(lit(1)).as("n"))
       .withColumn("share", round(col("n").cast("double")
@@ -149,7 +147,7 @@ object TextQueries {
     * oracle-checkable (unlike the hash-seeded signature paths).
     */
   def dedupEdit(spark: SparkSession, dir: String): DataFrame =
-    editPairs(docs(spark, dir)).orderBy("a_id", "b_id")
+    editPairs(Tables.read(spark, dir, "documents")).orderBy("a_id", "b_id")
 
   /** The blocked Levenshtein body over any (doc_id, text) frame —
     * shared by [[dedupEdit]] and the consensus union
@@ -195,7 +193,7 @@ object TextQueries {
   // ------------------------------------------------------- quality score
 
   def qualityScoreQ(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), qualityScore(col("text")).as("quality"))
       .orderBy("doc_id")
 
@@ -216,7 +214,7 @@ object TextQueries {
     * over the scan.
     */
   def compressRatio(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("raw_len"),
         graft.functions.Compress.deflateLen(col("text")).as("dl"))
@@ -252,7 +250,7 @@ object TextQueries {
   // -------------------------------------------------------- fingerprints
 
   def docFingerprint(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), fingerprint(col("text")).as("fp"))
       .withColumn("fp16", substring(col("fp"), 1, 16))
       .orderBy("doc_id")
@@ -271,7 +269,7 @@ object TextQueries {
     * md5(text) to bound key width — fp column shows the pattern.
     */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .groupBy("text")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
       .select(col("doc_id"), col("n_copies"), md5(col("text").cast("binary")).as("fp"))
@@ -297,7 +295,7 @@ object TextQueries {
   def dedupCanonical(spark: SparkSession, dir: String): DataFrame = {
     val canon = trim(regexp_replace(
       graft.functions.Accent.deaccent(lower(col("text"))), "[^a-z0-9]+", " "))
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), md5(canon.cast("binary")).as("cfp"))
       .groupBy("cfp")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_variants"))
@@ -335,7 +333,7 @@ object TextQueries {
     */
   def multimodalMeta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.operators.Multimodal.withPayload(docs(spark, dir))
+    graft.operators.Multimodal.withPayload(Tables.read(spark, dir, "documents"))
       .select(
         col("doc_id").cast("long"), col("source"), col("kind"),
         col("payload"), md5(col("payload")).as("content_md5"))
@@ -371,7 +369,7 @@ object TextQueries {
     * exact integers until one final double division per output cell.
     */
   def tokenRarity(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val toks = graft.operators.Materialize(
       d.select(col("doc_id"), explode(wordTokens(col("text"))).as("tok")).distinct())
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
@@ -410,7 +408,7 @@ object TextQueries {
     */
   def topWords(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Relational.topKPerGroup(
-      docs(spark, dir)
+      Tables.read(spark, dir, "documents")
         .select(col("source"), explode(wordTokens(lower(col("text")))).as("word"))
         .groupBy("source", "word").agg(count(lit(1)).as("n")),
       Seq("source"), col("n"), col("word"), 3)
@@ -431,7 +429,7 @@ object TextQueries {
 
   /** Regex field extraction: numeric id out of the doc source tag. */
   def regexExtract(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Tables.read(spark, dir, "documents").select(
       col("doc_id"),
       regexp_extract(col("source"), "src(\\d+)", 1).cast("long").as("src_num"),
       regexp_extract(col("text"), "^(\\w+)", 1).as("first_word"))
@@ -453,7 +451,7 @@ object TextQueries {
     * rounded value is for display), term as tiebreak.
     */
   def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.read(spark, dir, "documents")
     val tf = d
       .select(col("doc_id"), explode(wordTokens(lower(col("text")))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -502,7 +500,7 @@ object TextQueries {
     */
   def coverageCurve(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cnt = docs(spark, dir)
+    val cnt = Tables.read(spark, dir, "documents")
       .select(explode(wordTokens(lower(col("text")))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     val w = Window.orderBy(col("c").desc, col("w"))
@@ -554,7 +552,7 @@ object TextQueries {
     */
   def zipfSlope(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cnt = docs(spark, dir)
+    val cnt = Tables.read(spark, dir, "documents")
       .select(explode(wordTokens(lower(col("text")))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     val ranked = cnt
@@ -599,7 +597,7 @@ object TextQueries {
     FROM s"""
 
   def vocabStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("source"), explode(wordTokens(lower(col("text")))).as("tok"))
       .groupBy("source", "tok").agg(count(lit(1)).as("c"))
       .groupBy("source")
@@ -634,7 +632,7 @@ object TextQueries {
     * transcendental last-ulp risk in the oracle hash.
     */
   def charDiversity(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
       .filter(length(col("ch")) === 1)
       .groupBy("doc_id", "ch").agg(count(lit(1)).as("c"))
@@ -677,7 +675,7 @@ object TextQueries {
     * only for the final per-source aggregation.
     */
   def oovRate(spark: SparkSession, dir: String): DataFrame = {
-    val words = docs(spark, dir)
+    val words = Tables.read(spark, dir, "documents")
       .select(col("source"),
         explode(graft.operators.TextAnalysis.wordTokens(lower(col("text")))).as("w"))
       .filter(col("w") =!= "")
@@ -732,7 +730,7 @@ object TextQueries {
   def condEntropy(spark: SparkSession, dir: String): DataFrame = {
     val dec9: Column => Column = _.cast(org.apache.spark.sql.types.DecimalType(18, 9))
     val cnt: Column => Column = _.cast(org.apache.spark.sql.types.DecimalType(18, 0))
-    val bi = docs(spark, dir)
+    val bi = Tables.read(spark, dir, "documents")
       .select(col("source"), wordTokens(lower(col("text"))).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("source"), explode(expr(
@@ -804,7 +802,7 @@ object TextQueries {
     * as TakeOrderedAndProject.
     */
   def boilerplateNgrams(spark: SparkSession, dir: String): DataFrame = {
-    val grams = docs(spark, dir)
+    val grams = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), wordTokens(lower(col("text"))).as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(expr(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Relational._
+import graft.sources.Tables
 
 /** The rest of the TPC-H decision-support suite, adapted to the driver's
   * schema (SURVEY.md §7.2.7 north star). The generated tables lack
@@ -25,10 +26,7 @@ import graft.operators.Relational._
   * so partial-agg order can't flip a comparison either engine makes; each
   * query's final sort orders an already-reduced result.
   */
-object TpchQueries {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+object TpchQueries extends QueryModule {
 
   private def yr(c: org.apache.spark.sql.Column) = year(c).cast("long")
 
@@ -38,11 +36,11 @@ object TpchQueries {
     * at the scan.
     */
   def q4PriorityLate(spark: SparkSession, dir: String): DataFrame = {
-    val o = t(spark, dir, "orders")
+    val o = Tables.read(spark, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-07-01").cast("timestamp"))
       .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    val l = t(spark, dir, "lineitem").select("l_orderkey", "l_shipdate")
+    val l = Tables.read(spark, dir, "lineitem").select("l_orderkey", "l_shipdate")
     o.join(l, col("o_orderkey") === col("l_orderkey") &&
         col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"),
         "left_semi")
@@ -69,16 +67,16 @@ object TpchQueries {
     * custkey) and the final tiny aggregation.
     */
   def q7VolumeShipping(spark: SparkSession, dir: String): DataFrame = {
-    val ns = broadcast(t(spark, dir, "nation")
+    val ns = broadcast(Tables.read(spark, dir, "nation")
       .select(col("n_nationkey").as("ns_key"), col("n_name").as("supp_nation")))
-    val nc = broadcast(t(spark, dir, "nation")
+    val nc = broadcast(Tables.read(spark, dir, "nation")
       .select(col("n_nationkey").as("nc_key"), col("n_name").as("cust_nation")))
-    val s = broadcast(t(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
-    val l = t(spark, dir, "lineitem")
+    val s = broadcast(Tables.read(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
+    val l = Tables.read(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"), yr(col("l_shipdate")).as("l_year"),
         dec(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
-    val o = t(spark, dir, "orders").select("o_orderkey", "o_custkey")
-    val c = t(spark, dir, "customer").select("c_custkey", "c_nationkey")
+    val o = Tables.read(spark, dir, "orders").select("o_orderkey", "o_custkey")
+    val c = Tables.read(spark, dir, "customer").select("c_custkey", "c_nationkey")
     l.join(s, col("l_suppkey") === col("s_suppkey"))
       .join(ns, col("s_nationkey") === col("ns_key"))
       .join(o, col("l_orderkey") === col("o_orderkey"))
@@ -117,21 +115,21 @@ object TpchQueries {
     * double only at the end.
     */
   def q8MarketShare(spark: SparkSession, dir: String): DataFrame = {
-    val asiaNations = broadcast(t(spark, dir, "nation")
-      .join(broadcast(t(spark, dir, "region")).filter(col("r_name") === "ASIA"),
+    val asiaNations = broadcast(Tables.read(spark, dir, "nation")
+      .join(broadcast(Tables.read(spark, dir, "region")).filter(col("r_name") === "ASIA"),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("n_nationkey").as("nc_key")))
-    val ns = broadcast(t(spark, dir, "nation")
+    val ns = broadcast(Tables.read(spark, dir, "nation")
       .select(col("n_nationkey").as("ns_key"), col("n_name").as("supp_nation")))
-    val s = broadcast(t(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
-    val p = broadcast(t(spark, dir, "part")
+    val s = broadcast(Tables.read(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
+    val p = broadcast(Tables.read(spark, dir, "part")
       .filter(col("p_type") === "PROMO").select("p_partkey"))
-    val l = t(spark, dir, "lineitem")
+    val l = Tables.read(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         dec(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
-    val o = t(spark, dir, "orders")
+    val o = Tables.read(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), yr(col("o_orderdate")).as("o_year"))
-    val c = t(spark, dir, "customer").select("c_custkey", "c_nationkey")
+    val c = Tables.read(spark, dir, "customer").select("c_custkey", "c_nationkey")
     l.join(p, col("l_partkey") === col("p_partkey"))
       .join(s, col("l_suppkey") === col("s_suppkey"))
       .join(ns, col("s_nationkey") === col("ns_key"))
@@ -176,11 +174,11 @@ object TpchQueries {
     * name predicate prunes the probe side at the scan.
     */
   def q9ProductProfit(spark: SparkSession, dir: String): DataFrame = {
-    val n = broadcast(t(spark, dir, "nation").select("n_nationkey", "n_name"))
-    val s = broadcast(t(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
-    val p = broadcast(t(spark, dir, "part")
+    val n = broadcast(Tables.read(spark, dir, "nation").select("n_nationkey", "n_name"))
+    val s = broadcast(Tables.read(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
+    val p = broadcast(Tables.read(spark, dir, "part")
       .filter(col("p_name").contains("red")).select("p_partkey", "p_retailprice"))
-    val l = t(spark, dir, "lineitem")
+    val l = Tables.read(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), yr(col("l_shipdate")).as("l_year"),
         col("l_extendedprice"), col("l_discount"), col("l_quantity"))
     l.join(p, col("l_partkey") === col("p_partkey"))
@@ -215,11 +213,11 @@ object TpchQueries {
     * threshold comparison, so the fraction filter is order-stable.
     */
   def q11ImportantParts(spark: SparkSession, dir: String): DataFrame = {
-    val s = broadcast(t(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
-    val n = broadcast(t(spark, dir, "nation")
+    val s = broadcast(Tables.read(spark, dir, "supplier").select("s_suppkey", "s_nationkey"))
+    val n = broadcast(Tables.read(spark, dir, "nation")
       .filter(col("n_name") === "NATION_3").select("n_nationkey"))
-    val p = broadcast(t(spark, dir, "part").select("p_partkey", "p_retailprice"))
-    val values = t(spark, dir, "lineitem")
+    val p = broadcast(Tables.read(spark, dir, "part").select("p_partkey", "p_retailprice"))
+    val values = Tables.read(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"), col("l_quantity"))
       .join(s, col("l_suppkey") === col("s_suppkey"))
       .join(n, col("s_nationkey") === col("n_nationkey"), "left_semi")
@@ -256,11 +254,11 @@ object TpchQueries {
     * (cross-table) rides the orderkey join.
     */
   def q12LateLines(spark: SparkSession, dir: String): DataFrame = {
-    val l = t(spark, dir, "lineitem")
+    val l = Tables.read(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
       .select("l_orderkey", "l_shipdate", "l_linestatus")
-    val o = t(spark, dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    val o = Tables.read(spark, dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
     val isHigh = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
@@ -288,8 +286,8 @@ object TpchQueries {
     * filter lands in the join, customers with nothing left count 0.
     */
   def q13CustDist(spark: SparkSession, dir: String): DataFrame = {
-    val c = t(spark, dir, "customer").select("c_custkey")
-    val o = t(spark, dir, "orders")
+    val c = Tables.read(spark, dir, "customer").select("c_custkey")
+    val o = Tables.read(spark, dir, "orders")
       .filter(col("o_orderpriority") =!= "5-LOW")
       .select("o_custkey", "o_orderkey")
     c.join(o, col("c_custkey") === col("o_custkey"), "left_outer")
@@ -315,8 +313,8 @@ object TpchQueries {
     * part join, a single-row conditional-ratio aggregate.
     */
   def q14PromoRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val p = broadcast(t(spark, dir, "part").select("p_partkey", "p_type"))
-    t(spark, dir, "lineitem")
+    val p = broadcast(Tables.read(spark, dir, "part").select("p_partkey", "p_type"))
+    Tables.read(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-03-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
       .select(col("l_partkey"),
@@ -347,7 +345,7 @@ object TpchQueries {
     * double, so the match is deterministic.
     */
   def q15TopSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val rev = t(spark, dir, "lineitem")
+    val rev = Tables.read(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
       .groupBy(col("l_suppkey").as("suppkey"))
@@ -356,7 +354,7 @@ object TpchQueries {
     val top = rev.agg(max("total_revenue").as("max_revenue"))
     rev.crossJoin(broadcast(top))
       .filter(col("total_revenue") === col("max_revenue"))
-      .join(broadcast(t(spark, dir, "supplier").select("s_suppkey", "s_name")),
+      .join(broadcast(Tables.read(spark, dir, "supplier").select("s_suppkey", "s_name")),
         col("suppkey") === col("s_suppkey"))
       .select("s_suppkey", "s_name", "total_revenue")
       .orderBy("s_suppkey")
@@ -383,13 +381,13 @@ object TpchQueries {
     * shuffle; part is broadcast.
     */
   def q16SupplierCnt(spark: SparkSession, dir: String): DataFrame = {
-    val p = broadcast(t(spark, dir, "part")
+    val p = broadcast(Tables.read(spark, dir, "part")
       .filter(col("p_brand") =!= "Brand#45" &&
         col("p_size").isin(1, 3, 9, 14, 19, 23, 36, 45))
       .select("p_partkey", "p_brand", "p_type", "p_size"))
     // semi-filter BEFORE the distinct: the dedup shuffle carries only the
     // selected parts' rows, not the whole fact table
-    val bridge = t(spark, dir, "lineitem").select("l_partkey", "l_suppkey")
+    val bridge = Tables.read(spark, dir, "lineitem").select("l_partkey", "l_suppkey")
       .join(p.select("p_partkey"), col("l_partkey") === col("p_partkey"), "left_semi")
       .distinct()
     bridge.join(p, col("l_partkey") === col("p_partkey"))
@@ -414,9 +412,9 @@ object TpchQueries {
     * compares identically in both engines.
     */
   def q17SmallQty(spark: SparkSession, dir: String): DataFrame = {
-    val p = broadcast(t(spark, dir, "part")
+    val p = broadcast(Tables.read(spark, dir, "part")
       .filter(col("p_brand") === "Brand#23").select("p_partkey"))
-    val li = t(spark, dir, "lineitem")
+    val li = Tables.read(spark, dir, "lineitem")
       .select("l_partkey", "l_quantity", "l_extendedprice")
       .join(p, col("l_partkey") === col("p_partkey"), "left_semi")
     val avgQty = li.groupBy(col("l_partkey").as("ap_key"))
@@ -445,8 +443,8 @@ object TpchQueries {
     * partkey equality drives the broadcast hash join).
     */
   def q19Disjunctive(spark: SparkSession, dir: String): DataFrame = {
-    val p = broadcast(t(spark, dir, "part").select("p_partkey", "p_brand", "p_size"))
-    t(spark, dir, "lineitem")
+    val p = broadcast(Tables.read(spark, dir, "part").select("p_partkey", "p_brand", "p_size"))
+    Tables.read(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_quantity"),
         dec(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
       .join(p, col("l_partkey") === col("p_partkey"))
@@ -477,17 +475,17 @@ object TpchQueries {
     * NATION_3 is the one nation with suppliers at every test SF.
     */
   def q20PromoShippers(spark: SparkSession, dir: String): DataFrame = {
-    val p = broadcast(t(spark, dir, "part")
+    val p = broadcast(Tables.read(spark, dir, "part")
       .filter(col("p_type") === "PROMO").select("p_partkey"))
-    val heavy = t(spark, dir, "lineitem")
+    val heavy = Tables.read(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
       .join(p, col("l_partkey") === col("p_partkey"), "left_semi")
       .groupBy("l_suppkey")
       .agg(sum("l_quantity").as("qty"))
       .filter(col("qty") > 100)
-    broadcast(t(spark, dir, "supplier")
-        .join(broadcast(t(spark, dir, "nation")).filter(col("n_name") === "NATION_3"),
+    broadcast(Tables.read(spark, dir, "supplier")
+        .join(broadcast(Tables.read(spark, dir, "nation")).filter(col("n_name") === "NATION_3"),
           col("s_nationkey") === col("n_nationkey"), "left_semi"))
       .join(heavy, col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select("s_suppkey", "s_name")
@@ -518,14 +516,14 @@ object TpchQueries {
     * (order, supplier) projection twice through semi/anti probes.
     */
   def q21LateSuppliers(spark: SparkSession, dir: String): DataFrame = {
-    val o = t(spark, dir, "orders")
+    val o = Tables.read(spark, dir, "orders")
       .filter(col("o_orderstatus") === "F").select("o_orderkey", "o_orderdate")
-    val late = t(spark, dir, "lineitem")
+    val late = Tables.read(spark, dir, "lineitem")
       .select("l_orderkey", "l_suppkey", "l_shipdate")
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
       .select("l_orderkey", "l_suppkey").distinct()
-    val nSupp = t(spark, dir, "lineitem")
+    val nSupp = Tables.read(spark, dir, "lineitem")
       .select("l_orderkey", "l_suppkey").distinct()
       .groupBy(col("l_orderkey").as("ns_order"))
       .agg(count(lit(1)).as("n_supp"))
@@ -533,8 +531,8 @@ object TpchQueries {
     val nLate = late.groupBy(col("l_orderkey").as("nl_order"))
       .agg(count(lit(1)).as("n_late"))
       .filter(col("n_late") === 1)
-    val s = broadcast(t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")).filter(col("n_name") === "NATION_3"),
+    val s = broadcast(Tables.read(spark, dir, "supplier")
+      .join(broadcast(Tables.read(spark, dir, "nation")).filter(col("n_name") === "NATION_3"),
         col("s_nationkey") === col("n_nationkey"), "left_semi")
       .select("s_suppkey", "s_name"))
     late
@@ -575,12 +573,12 @@ object TpchQueries {
     * join on custkey.
     */
   def q22GlobalSales(spark: SparkSession, dir: String): DataFrame = {
-    val c = t(spark, dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
+    val c = Tables.read(spark, dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
     val avgBal = c.filter(col("c_acctbal") > 0)
       .agg((sumExact(col("c_acctbal")) / count(lit(1))).as("avg_bal"))
-    val urgent = t(spark, dir, "orders")
+    val urgent = Tables.read(spark, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT").select("o_custkey")
-    val n = broadcast(t(spark, dir, "nation").select("n_nationkey", "n_name"))
+    val n = broadcast(Tables.read(spark, dir, "nation").select("n_nationkey", "n_name"))
     c.crossJoin(broadcast(avgBal))
       .filter(col("c_acctbal") > col("avg_bal"))
       .join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -609,19 +607,19 @@ object TpchQueries {
     * keyed window over the already-filtered bridge — no self-join.
     */
   def q2MinAcctSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val p = broadcast(t(spark, dir, "part")
+    val p = broadcast(Tables.read(spark, dir, "part")
       .filter(col("p_size") === 15 && col("p_type") === "STANDARD")
       .select("p_partkey", "p_name"))
-    val s = broadcast(t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")
-          .join(broadcast(t(spark, dir, "region")).filter(col("r_name") === "EUROPE"),
+    val s = broadcast(Tables.read(spark, dir, "supplier")
+      .join(broadcast(Tables.read(spark, dir, "nation")
+          .join(broadcast(Tables.read(spark, dir, "region")).filter(col("r_name") === "EUROPE"),
             col("n_regionkey") === col("r_regionkey"))
           .select("n_nationkey", "n_name")),
         col("s_nationkey") === col("n_nationkey"))
       .select("s_suppkey", "s_name", "s_acctbal", "n_name"))
     // semi-filter BEFORE the distinct — same reasoning as Q16: the dedup
     // shuffle sees only lineitems of the ~selectivity-filtered parts
-    val bridge = t(spark, dir, "lineitem").select("l_partkey", "l_suppkey")
+    val bridge = Tables.read(spark, dir, "lineitem").select("l_partkey", "l_suppkey")
       .join(p.select("p_partkey"), col("l_partkey") === col("p_partkey"), "left_semi")
       .distinct()
     val w = Window.partitionBy("p_partkey").orderBy(col("s_acctbal").asc, col("s_suppkey").asc)

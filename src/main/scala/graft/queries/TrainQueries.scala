@@ -3,22 +3,20 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** Training-set construction operators that sit between curation and
   * the trainer: hard-example mining over the embedding space and
   * embedding-health audits. (Curation itself — dedup, mixing, splits,
   * packing — lives in the pipeline/corpus query families.)
   */
-object TrainQueries {
-
-  private def embs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+object TrainQueries extends QueryModule {
 
   /** Prepped embedding frame that KEEPS the class label (Similarity.prep
     * drops everything but id/v/nrm).
     */
   private def labelled(spark: SparkSession, dir: String): DataFrame =
-    embs(spark, dir)
+    Tables.read(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), col("label"), col("embedding").as("v"))
       .withColumn("nrm", Similarity.norm(col("v")))
 
@@ -127,7 +125,7 @@ object TrainQueries {
   def epochShuffle(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
-    val ranked = spark.read.parquet(s"$dir/documents.parquet")
+    val ranked = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), explode(array(lit(0), lit(1), lit(2))).as("epoch"))
       .withColumn("rk", row_number().over(Window.partitionBy("epoch")
         .orderBy(md5(concat(col("epoch").cast("string"), lit(":"),
@@ -185,7 +183,7 @@ object TrainQueries {
     */
   def shuffleAudit(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tables.read(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         md5(concat(lit("0:"), col("doc_id").cast("string"))).as("k"))
       .withColumn("blk", substring(col("k"), 1, 2))
@@ -393,7 +391,7 @@ object TrainQueries {
     * at scan speed on any corpus size.
     */
   private def tokFrame(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.read(spark, dir, "documents")
       .select(col("doc_id"),
         graft.operators.TextAnalysis.wordTokens(col("text")).as("t"))
       .withColumn("n_tok", size(col("t")).cast("long"))
@@ -619,7 +617,7 @@ object TrainQueries {
     def h(tag: String) =
       conv(substring(md5(concat(col("doc_id").cast("string"), lit(":" + tag))),
         1, 8), 16, 10).cast("long")
-    val toks = spark.read.parquet(s"$dir/documents.parquet")
+    val toks = Tables.read(spark, dir, "documents")
       .select(col("doc_id"),
         graft.operators.TextAnalysis.wordTokens(col("text")).as("t"))
     val n = size(col("t"))

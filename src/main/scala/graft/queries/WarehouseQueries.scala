@@ -15,7 +15,7 @@ import graft.sources.Tables
   * sort-merge join; histogram bounds travel as a broadcast 1-row frame,
   * never a driver round-trip inside the plan.
   */
-object WarehouseQueries {
+object WarehouseQueries extends QueryModule {
 
   /** Merge overlapping per-user event intervals (gaps-and-islands).
     * Interval length varies per event (deterministic function of the id),
@@ -471,7 +471,7 @@ object WarehouseQueries {
     * content hash, no per-group sort.
     */
   def dedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tables.read(spark, dir, "documents")
     d.select(col("doc_id"), md5(col("text").cast("binary")).as("h"),
         graft.operators.TextAnalysis.qualityScore(col("text")).as("q"))
       .groupBy("h")
@@ -548,7 +548,7 @@ object WarehouseQueries {
     * key — the MERGE INTO lowering reused as a pure report.
     */
   def snapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val o = spark.read.parquet(s"$dir/orders.parquet")
+    val o = Tables.read(spark, dir, "orders")
       .withColumn("b", conv(substring(md5(col("o_orderkey").cast("string")), 1, 8), 16, 10)
         .cast("long") % 100)
     val v1 = o.filter(col("b") < 90)
@@ -592,7 +592,7 @@ object WarehouseQueries {
     * aggregation tree, no joins.
     */
   def kAnonymity(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.read(spark, dir, "documents")
       .select(col("lang"), col("source"),
         floor(col("n_chars") / 100).cast("long").as("len_b"))
       .groupBy("lang", "source", "len_b")
@@ -673,7 +673,7 @@ object WarehouseQueries {
         col("lang"), lit("_"), col("source"))),
         1, 8), 16, 10).cast("double") + lit(0.5)) / lit(4294967296.0)
     val noise = -lit(1.0 / DpEps) * signum(u - 0.5) * log(lit(1.0) - lit(2.0) * abs(u - 0.5))
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.read(spark, dir, "documents")
       .groupBy("lang", "source").agg(count(lit(1)).as("n"))
       .select(col("lang"), col("source"), lit(DpEps).as("epsilon"),
         round(col("n") + noise, 4).as("noisy_count"),
@@ -731,7 +731,7 @@ object WarehouseQueries {
     }
     val bSum = DpClip / (DpEps / 2) // eps/2 on the clipped sum
     val bCnt = 1.0 / (DpEps / 2)    // eps/2 on the count
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.read(spark, dir, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("n"),
         sum(least(col("n_chars"), lit(DpClip.toLong))).as("s"))
@@ -806,7 +806,7 @@ object WarehouseQueries {
     val gumbel = -log(-log(u("dpt")))
     val uu = u("dptc")
     val lapC = -lit(bLap) * signum(uu - 0.5) * log(lit(1.0) - lit(2.0) * abs(uu - 0.5))
-    val clipped = spark.read.parquet(s"$dir/documents.parquet")
+    val clipped = Tables.read(spark, dir, "documents")
       .select(col("doc_id"),
         explode(graft.operators.TextAnalysis.wordTokens(lower(col("text")))).as("w"))
       .filter(col("w") =!= "")
@@ -894,7 +894,7 @@ object WarehouseQueries {
       md5(concat(lit(tag + "_"), lit(salt), lit(nonce), v.cast("string"))),
       1, 8), 16, 10)
       .cast("double") + lit(0.5)) / lit(4294967296.0)
-    val hist = spark.read.parquet(s"$dir/documents.parquet")
+    val hist = Tables.read(spark, dir, "documents")
       .groupBy("n_chars").agg(count(lit(1)).as("c"))
     val w = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, -1)
     val tot = hist.agg(sum("c").as("n"))
@@ -944,7 +944,7 @@ object WarehouseQueries {
     */
   def dpBudget(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val d = spark.read.parquet(s"$dir/documents.parquet")
+    val d = Tables.read(spark, dir, "documents")
     val histCells = d.select("lang", "source").distinct().count()
     val meanCells = d.select("source").distinct().count()
     Seq(

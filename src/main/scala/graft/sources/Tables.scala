@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
 object Tables {
 
   /** Engine-wide convention: parquet TIMESTAMP(NANOS) columns surface as
-    * raw epoch-nanos longs. Our session builders (Bench/Verify/TestSpark)
-    * set this at construction; for externally-built sessions (the
-    * driver's) this applies it once, only if genuinely unset — never
+    * raw epoch-nanos longs. [[graft.Session]] (and the test session) set
+    * this at construction; for externally-built sessions this applies
+    * it once, only if genuinely unset — never
     * flipping a caller's explicit choice mid-session.
     *
     * "Unset" probe: `RuntimeConfig.get(key, fallback)` consults only the
