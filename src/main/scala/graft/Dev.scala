@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
 import graft.operators.Materialize
+import graft.sources.Tables
 
 /** Developer CLI over the registered queries, one [[Session]] per run:
   *
@@ -22,6 +24,9 @@ import graft.operators.Materialize
   *     regenerate PLANS.md (sf0.01, 4 cores, 4 shuffle partitions)
   *   sbt "runMain graft.Dev plans <outDir> <materializeMode> q1,q2,..."
   *     write `<outDir>/<name>.txt`, one formatted plan per query
+  *   sbt "runMain graft.Dev scale [q1,q2,...]"
+  *     10× linear-scaling probe (SCALING.md): time each query at sf0.1
+  *     and at a 10-replica sf1 corpus, print the ratio
   *
   * `time`, `profile` and the `plans <outDir>` form run at
   * SPARK_GRAFT_SF_DIR (default sf0.1), like Bench. `materializeMode`
@@ -47,9 +52,12 @@ object Dev {
     case "plans" :: Nil => withSession(4, PlanOnly)(plansMd)
     case "plans" :: out :: mode :: qs :: Nil =>
       withSession(extra = Map(Materialize.Key -> mode))(plans(_, out, names(qs)))
+    case "scale" :: rest if rest.size <= 1 =>
+      withSession()(scale(_, rest.headOption.map(names).getOrElse(ScalePicks)))
     case _ =>
       System.err.println("usage: graft.Dev time|profile q1,q2,... | audit | " +
-        "detsweep [sfDir] | plans [<outDir> <materializeMode> q1,q2,...]")
+        "detsweep [sfDir] | plans [<outDir> <materializeMode> q1,q2,...] | " +
+        "scale [q1,q2,...]")
       sys.exit(2)
   }
 
@@ -65,14 +73,17 @@ object Dev {
   private def warm(spark: SparkSession, name: String, dir: String): Unit =
     for (d <- Seq(Warm, dir)) SparkEntry.queries(name)(spark, d).count()
 
+  /** Warm, then one timed `count()` of `name` at `dir`, in seconds. */
+  private def timed(spark: SparkSession, name: String, dir: String): Double = {
+    warm(spark, name, dir)
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, dir).count()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   private def time(spark: SparkSession, qs: Seq[String]): Unit = {
     val dir = sfDir
-    for (name <- qs) {
-      warm(spark, name, dir)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).count()
-      println(f"TIMED $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
+    for (name <- qs) println(f"TIMED $name ${timed(spark, name, dir)}%.3f s")
   }
 
   private def profile(spark: SparkSession, qs: Seq[String]): Unit = {
@@ -233,5 +244,80 @@ object Dev {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")
+  }
+
+  private val ScaleSrc = s"$Data/sf0.1"
+  private val ScaleOut = "target/scaledata/sf1"
+
+  /** The replicated tables and, per table, each id column with its
+    * replica offset: replica `r` adds `r × offset` to the column, so the
+    * replicas' key spaces are disjoint as long as every offset clears
+    * the column's largest base id (checked before anything is written).
+    */
+  private val ScaleKeys = Seq(
+    "documents" -> Seq("doc_id" -> 1000000L),
+    "lineitem" -> Seq("l_orderkey" -> 1000000000L, "l_partkey" -> 10000000L),
+    "part" -> Seq("p_partkey" -> 10000000L),
+    "orders" -> Seq("o_orderkey" -> 1000000000L, "o_custkey" -> 10000000L),
+    "events" -> Seq("event_id" -> 1000000000L, "user_id" -> 10000000L),
+    "embeddings" -> Seq("vec_id" -> 1000000L))
+
+  /** The probe's default queries: the heavy gram, graph, sketch and
+    * order-table operators whose cost could grow faster than the bytes.
+    */
+  private val ScalePicks = Seq(
+    "pagerank", "minhash_recall", "dedup_contain", "dup_clusters", "dedup_ngram",
+    "dedup_rewrite", "link_predict", "freq_triples", "bfs_hops", "simhash_precision",
+    "novelty_rate", "doc_logprob2", "cdc_apply", "rfm_segment",
+    "cond_entropy", "modularity", "assortativity", "bloom_prefilter",
+    "margin_sample", "shard_plan",
+    "clustering_coeff", "hits_rank", "chi2_assoc", "decay_counts",
+    "survival_km", "doc_logprob_jm", "mix_waterfill", "skipgram_pairs",
+    "dedup_canonical", "dedup_edit", "langid_confusion", "emb_pq")
+
+  /** One sf1 table: 10 copies of the sf0.1 table with offset
+    * ids. Documents also get a per-replica suffix on every token, so
+    * replicas share no grams: each replica's gram and candidate
+    * structure matches sf0.1 and the ideal runtime curve is linear in
+    * bytes.
+    */
+  private def replicate(spark: SparkSession, table: String,
+      keys: Seq[(String, Long)]): DataFrame = {
+    val reps = spark.range(0, 10).select(col("id").as("rep"))
+    val keyed = keys.foldLeft(Tables.read(spark, ScaleSrc, table).crossJoin(reps)) {
+      case (df, (c, offset)) => df.withColumn(c, col(c) + col("rep") * offset)
+    }
+    val out =
+      if (table != "documents") keyed
+      else keyed
+        .withColumn("text", when(col("rep") === 0, col("text")).otherwise(
+          regexp_replace(col("text"), lit("(\\S+)"),
+            concat(lit("$1r"), col("rep").cast("string")))))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+    out.drop("rep")
+  }
+
+  /** The 10× probe: builds `target/scaledata/sf1` once (tables already
+    * written are reused), then times each query at sf0.1 and sf1. A
+    * ratio well above 10 points at a super-linear operator.
+    */
+  private def scale(spark: SparkSession, qs: Seq[String]): Unit = {
+    for ((table, keys) <- ScaleKeys) {
+      val maxes = Tables.read(spark, ScaleSrc, table)
+        .select(keys.map { case (c, _) => max(col(c).cast("long")) }: _*).head()
+      for (((c, offset), i) <- keys.zipWithIndex)
+        require(maxes.getLong(i) < offset,
+          s"replica offset unsound: max($table.$c)=${maxes.getLong(i)} >= offset=$offset")
+    }
+    for ((table, keys) <- ScaleKeys
+         if !Files.exists(Paths.get(ScaleOut, s"$table.parquet", "_SUCCESS"))) {
+      replicate(spark, table, keys).write.mode("overwrite").parquet(s"$ScaleOut/$table.parquet")
+      println(s"GENERATED $ScaleOut/$table.parquet")
+    }
+    for (q <- qs) {
+      val t01 = timed(spark, q, ScaleSrc)
+      val t1 = timed(spark, q, ScaleOut)
+      println(f"PROBE $q sf0.1=$t01%.2f s sf1=$t1%.2f s ratio=${t1 / t01}%.1f")
+    }
   }
 }

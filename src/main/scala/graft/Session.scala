@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.sources.Tables
 
-/** The engine's one local session factory, shared by Bench, Verify, Dev,
-  * RecallSweep and ScaleProbe so every entry point plans and reads the
-  * corpus under the same conf: `cpus` task threads and as many shuffle
+/** The engine's one local session factory, shared by the three entry
+  * points (Bench, Verify, Dev) so each plans and reads the corpus under
+  * the same conf: `cpus` task threads and as many shuffle
   * partitions, UTC session clock, parquet TIMESTAMP(NANOS) read as longs,
   * UI off.
   *

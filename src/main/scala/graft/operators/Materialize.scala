@@ -7,17 +7,13 @@ import org.apache.spark.sql.DataFrame
   * gram sets, winnow fingerprints): without materialization a self-join
   * recomputes the full upstream plan per reference, but unconditional
   * eager checkpointing makes DataFrame *construction* run Spark jobs —
-  * wrong for plan-only consumers (explain / PlanAudit) — and pins blocks
+  * wrong for plan-only consumers (explain / `Dev audit`) — and pins blocks
   * in the block manager for the session lifetime.
   *
   * Resolved per call from the session conf [[Materialize.Key]]:
   *  - `eager` (default): `localCheckpoint(true)` — jobs run at
   *    construction, lineage truncates, the self-join reads cached blocks.
   *    The right mode for execution paths (Verify / Bench / production).
-  *  - `lazy`: `localCheckpoint(false)` — construction stays job-free;
-  *    the checkpoint materializes inside the first action (independent
-  *    join branches may transiently race-compute a partition, results
-  *    unchanged).
   *  - `none`: identity — pure plan, nothing pinned, downstream filters
   *    can push through. Self-joined subtrees WILL recompute if the frame
   *    is ever executed; meant for plan inspection and tests.
@@ -29,21 +25,25 @@ import org.apache.spark.sql.DataFrame
   *    multi-stage pipeline (e.g. `hygiene_funnel`) persists stage
   *    boundaries; directories are deleted on JVM exit.
   *
+  * Any other value throws `IllegalArgumentException`: a mistyped mode
+  * must not silently run `eager`.
+  *
   * Iterative algorithms ([[DupClusters.connectedComponents]]) are exempt:
   * their per-round checkpoint is algorithmically required (the loop reads
   * its own output and the plan would grow O(rounds) deep), so they always
   * checkpoint regardless of this conf.
   */
 object Materialize {
-  /** Session conf key; values `eager` | `lazy` | `none`. */
+  /** Session conf key; values `eager` (default) | `none` | `parquet`. */
   val Key = "spark.graft.materialize"
 
   def apply(df: DataFrame): DataFrame =
     df.sparkSession.conf.get(Key, "eager") match {
+      case "eager"   => df.localCheckpoint(true)
       case "none"    => df
-      case "lazy"    => df.localCheckpoint(false)
       case "parquet" => viaParquet(df)
-      case _         => df.localCheckpoint(true)
+      case other     => throw new IllegalArgumentException(
+        s"$Key must be eager, none or parquet, got '$other'")
     }
 
   /** Release handle for a frame returned by [[apply]] (or a bare
@@ -75,8 +75,11 @@ object Materialize {
     * carry over from the caller); the first runs on the caller's
     * thread. Results are unchanged: each chain computes exactly the
     * frames it computed serially, and Spark's scheduler interleaves
-    * their jobs' tasks. Exceptions from either thunk propagate (the
-    * background one first, after both finish — never swallowed).
+    * their jobs' tasks. `par2` always joins the background thread
+    * before it returns or throws, so no chain outlives the call. When
+    * the caller's thunk throws, that error propagates with a background
+    * failure attached via `addSuppressed`; when only the background
+    * thunk throws, its error propagates.
     *
     * Use ONLY for thunks with no data dependency on each other; a
     * dependent pair would still be correct (lazy frames) but would
@@ -89,7 +92,14 @@ object Materialize {
       "graft-materialize-par2")
     t.setDaemon(true)
     t.start()
-    val ra = a
+    val ra =
+      try a
+      catch {
+        case e: Throwable =>
+          t.join()
+          boxB.get().left.foreach(e.addSuppressed)
+          throw e
+      }
     t.join()
     boxB.get() match {
       case Right(rb) => (ra, rb)

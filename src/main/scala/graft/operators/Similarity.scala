@@ -407,7 +407,7 @@ object Similarity {
     * broadcast of the small query set over the codes-only projection;
     * the re-rank joins the tiny candidate list (broadcast) back to the
     * full vectors. Recall vs [[knnBrute]] is floor-audited in
-    * `knn_pq_recall` and swept in RecallSweep's PQ section.
+    * `knn_pq_recall`; run it at every SF before changing a PQ constant.
     *
     * Determinism: every score is pure IEEE arithmetic over
     * deterministic k-means centroids — fully SQL-mirrorable, ties break
@@ -592,8 +592,8 @@ object Similarity {
     * `keep`); `codes` must carry `labCol` stored in the index rows
     * ([[ivfPqCodes]]'s `keep` — no second table at scan time). Recall
     * vs the filtered brute truth ([[knnBruteFiltered]]) is floor-
-    * audited in `knn_filtered_recall` and swept in RecallSweep's
-    * filtered section.
+    * audited in `knn_filtered_recall`; run it at every SF before
+    * changing the rerank pool.
     */
   def knnIvfPqFilteredOnCodes(queries: DataFrame, corpus: DataFrame,
                               codes: DataFrame, k: Int, rerank: Int,

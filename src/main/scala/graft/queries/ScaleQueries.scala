@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Logistic, Materialize, Multimodal, Pca, Similarity, TextAnalysis}
 import graft.sources.Tables
@@ -198,17 +198,13 @@ object ScaleQueries extends QueryModule {
   private val LedgerBatchSql = "doc_id % 10 = 3"
 
   /** kb sub-partition of a band key — md5-derived, so both engines
-    * replay it. The parameterized form serves the `ScaleProbe ledgerkb`
-    * run, which measures the [[LedgerKb]] knob at a production setting.
+    * replay it.
     */
-  private[graft] def ledgerKbCol: org.apache.spark.sql.Column = ledgerKbColAt(LedgerKb)
+  private[graft] def ledgerKbCol: org.apache.spark.sql.Column =
+    conv(substring(md5(col("key")), 1, 8), 16, 10).cast("long") % LedgerKb
 
-  private[graft] def ledgerKbColAt(kb: Int): org.apache.spark.sql.Column =
-    conv(substring(md5(col("key")), 1, 8), 16, 10).cast("long") % kb
-
-  private def ledgerDir(dir: String, kb: Int = LedgerKb): java.io.File =
-    corpusCacheDir(dir, "documents",
-      if (kb == LedgerKb) "graft-dedup-ledger" else s"graft-dedup-ledger-kb$kb")
+  private def ledgerDir(dir: String): java.io.File =
+    corpusCacheDir(dir, "documents", "graft-dedup-ledger")
 
   /** `dedup_ledger_build` — the write half of the incremental near-dup
     * lifecycle (the `ann_index_build`/`ann_index_search` split applied
@@ -226,14 +222,10 @@ object ScaleQueries extends QueryModule {
     * oracle checks the on-disk truth); a completion marker is written
     * last so a crashed build is never mistaken for a ledger.
     */
-  def dedupLedgerBuild(spark: SparkSession, dir: String): DataFrame =
-    dedupLedgerBuildAt(spark, dir, LedgerKb)
-
-  private[graft] def dedupLedgerBuildAt(spark: SparkSession, dir: String,
-      kb: Int): DataFrame = {
-    val root = ledgerDir(dir, kb)
+  def dedupLedgerBuild(spark: SparkSession, dir: String): DataFrame = {
+    val root = ledgerDir(dir)
     val hist = Tables.read(spark, dir, "documents").filter(!ledgerIsBatch)
-    val banded = kmBandKeys(kmGramFrame(hist)).withColumn("kb", ledgerKbColAt(kb))
+    val banded = kmBandKeys(kmGramFrame(hist)).withColumn("kb", ledgerKbCol)
     val marker = new java.io.File(root, "_GRAFT_LEDGER_COMPLETE")
     marker.delete()
     // repartition ON the partition columns before partitionBy: each
@@ -253,7 +245,7 @@ object ScaleQueries extends QueryModule {
     // is the scale shape too: at 100 TB each directory is ~1/(bands·kb)
     // of the corpus and wants its own writer.
     banded.select(col("id"), col("key"), col("band"), col("kb"))
-      .repartition(KmBands * kb, col("band"), col("kb"))
+      .repartition(KmBands * LedgerKb, col("band"), col("kb"))
       .write.mode("overwrite").partitionBy("band", "kb")
       .parquet(new java.io.File(root, "buckets").toString)
     writeLedgerManifest(root)
@@ -283,13 +275,11 @@ object ScaleQueries extends QueryModule {
     * This is the plain-parquet analog of a catalog's FileStatusCache; at
     * 100 TB the listing is a metastore/S3-LIST round-trip per probe, and
     * reusing the resolved scan is what makes a session's SECOND and
-    * later admission checks metadata-free (measured: `ScaleProbe
-    * ledgerrepeat`, SCALING.md).
+    * later admission checks metadata-free (measured: the repeated-probe
+    * run in SCALING.md).
     */
   private val ledgerScanCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, String, Long, String), DataFrame]
-
-  private[graft] def clearLedgerScanCache(): Unit = ledgerScanCache.clear()
 
   private def ledgerVersion(root: java.io.File): Long =
     math.max(new java.io.File(root, "manifest.txt").lastModified(),
@@ -361,7 +351,7 @@ object ScaleQueries extends QueryModule {
     * fixed-batch case).
     */
   private def ledgerManifestScan(spark: SparkSession, root: java.io.File,
-      packed: Array[Long], kb: Int): Option[DataFrame] = {
+      packed: Array[Long]): Option[DataFrame] = {
     val mf = new java.io.File(root, "manifest.txt")
     if (!mf.exists()) {
       if (new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
@@ -378,7 +368,7 @@ object ScaleQueries extends QueryModule {
       .foreach {
         case rel(d, b, k) =>
           allDirs += d
-          if (keep.contains(b.toLong * kb + k.toLong)) touched += d
+          if (keep.contains(b.toLong * LedgerKb + k.toLong)) touched += d
         case _ => ()
       }
     if (touched.isEmpty || touched.size * 2 > allDirs.size) None
@@ -391,43 +381,26 @@ object ScaleQueries extends QueryModule {
     }
   }
 
-  /** `dedup_ledger_probe` — the read half: the batch slice's band keys
-    * are computed in-session (batch-sized work), its DISTINCT
-    * (band, kb) pairs — bounded by 8 × [[LedgerKb]] regardless of
-    * batch size — collect into a static partition predicate, and the
-    * ledger scan reads ONLY those bucket directories
-    * (PartitionFilters; asserted in DedupLedgerSpec). Bucket-key
-    * equality yields candidate (history, batch) pairs, verified with
-    * exact gram-set Jaccard ≥ 0.5 over the gram sets of ONLY the
-    * batch + candidate docs (a broadcast semi-join against the corpus
-    * — never a full-history gram recompute). Probe cost is batch-,
-    * candidate- and pruned-scan-sized; nothing rescans history, which
-    * is the whole point of persisting the ledger.
-    */
   /** Probe internals, exposed for DedupLedgerSpec: the batch gram
     * frame, the batch bucket frame, and the PRUNED ledger scan (the
     * batch's distinct (band, kb) pairs — bounded by 8 × [[LedgerKb]]
     * regardless of batch size — collected into a static partition
     * predicate). Builds the ledger first if the marker is absent.
     */
-  private[graft] def ledgerProbeParts(spark: SparkSession, dir: String,
-      isBatch: org.apache.spark.sql.Column = ledgerIsBatch,
-      kb: Int = LedgerKb)
+  private[graft] def ledgerProbeParts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val root = ledgerDir(dir, kb)
+    val root = ledgerDir(dir)
     if (!new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
-      dedupLedgerBuildAt(spark, dir, kb).count()
+      dedupLedgerBuild(spark, dir).count()
     val d = Tables.read(spark, dir, "documents")
-    val batchGrams = Materialize(kmGramFrame(d.filter(isBatch)))
-    val bb = Materialize(kmBandKeys(batchGrams).withColumn("kb", ledgerKbColAt(kb)))
+    val batchGrams = Materialize(kmGramFrame(d.filter(ledgerIsBatch)))
+    val bb = Materialize(kmBandKeys(batchGrams).withColumn("kb", ledgerKbCol))
     // the batch's distinct (band, kb) pairs — bounded by 8 × kb — as ONE
     // packed-key isin over the partition columns: a single IN predicate
-    // the file index prunes on at ANY kb (the former per-pair OR-chain
-    // grew an optimizer-hostile 2 048-term tree at kb = 256), with the
-    // empty batch short-circuiting to an empty pruned scan instead of
-    // reduce() throwing.
+    // the file index prunes on, with the empty batch short-circuiting to
+    // an empty pruned scan instead of reduce() throwing.
     val pairs = bb.select(col("band"), col("kb")).distinct()
-      .collect().map(r => r.getInt(0).toLong * kb + r.getLong(1)).sorted
+      .collect().map(r => r.getInt(0).toLong * LedgerKb + r.getLong(1)).sorted
     val pruned =
       if (pairs.isEmpty)
         cachedScan(spark, root, "full")(ledgerBuckets(spark, root)).filter(lit(false))
@@ -435,10 +408,10 @@ object ScaleQueries extends QueryModule {
         // manifest route first (O(touched files), no tree listing);
         // cached full-tree scan as the fallback for manifest-less
         // ledgers and the saturated case (touched ≈ whole tree)
-        val base = ledgerManifestScan(spark, root, pairs, kb)
+        val base = ledgerManifestScan(spark, root, pairs)
           .getOrElse(cachedScan(spark, root, "full")(ledgerBuckets(spark, root)))
         base.filter(
-          (col("band").cast("long") * kb + col("kb").cast("long")).isin(pairs: _*))
+          (col("band").cast("long") * LedgerKb + col("kb").cast("long")).isin(pairs: _*))
       }
     (batchGrams, bb, pruned)
   }
@@ -460,19 +433,22 @@ object ScaleQueries extends QueryModule {
     (cachedScan(spark, root, "full")(ledgerBuckets(spark, root)), hg)
   }
 
-  def dedupLedgerProbe(spark: SparkSession, dir: String): DataFrame =
-    dedupLedgerProbeOn(spark, dir, ledgerIsBatch)
-
-  /** [[dedupLedgerProbe]] with an explicit batch predicate — the
-    * deployment parameter. The scaling probe (`ScaleProbe ledger`)
-    * passes a FIXED replica-0 batch so the measured quantity is a
-    * constant day's arrivals against a growing history, isolating
-    * corpus growth from batch growth.
+  /** `dedup_ledger_probe` — the read half: the batch slice's band keys
+    * are computed in-session (batch-sized work), its DISTINCT
+    * (band, kb) pairs — bounded by 8 × [[LedgerKb]] regardless of
+    * batch size — collect into a static partition predicate, and the
+    * ledger scan reads ONLY those bucket directories
+    * (PartitionFilters; asserted in DedupLedgerSpec). Bucket-key
+    * equality yields candidate (history, batch) pairs, verified with
+    * exact gram-set Jaccard ≥ 0.5 over the gram sets of ONLY the
+    * batch + candidate docs (a broadcast semi-join against the corpus
+    * — never a full-history gram recompute). Probe cost is batch-,
+    * candidate- and pruned-scan-sized; nothing rescans history, which
+    * is the whole point of persisting the ledger.
     */
-  private[graft] def dedupLedgerProbeOn(spark: SparkSession, dir: String,
-      isBatch: org.apache.spark.sql.Column, kb: Int = LedgerKb): DataFrame = {
+  def dedupLedgerProbe(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.read(spark, dir, "documents")
-    val (batchGrams, bb, pruned) = ledgerProbeParts(spark, dir, isBatch, kb)
+    val (batchGrams, bb, pruned) = ledgerProbeParts(spark, dir)
     val cands = pruned
       .select(col("id").as("a_id"), col("band").as("l_band"), col("key").as("l_key"))
       .join(bb.select(col("id").as("b_id"), col("band").as("r_band"),
@@ -590,7 +566,7 @@ object ScaleQueries extends QueryModule {
       .orderBy("a_id", "b_id")
 
   /** Shipped SimHash accept threshold. The full measured curve
-    * (RecallSweep, recall/precision vs rare-gram J ≥ 0.5 truth at
+    * (recall/precision vs rare-gram J ≥ 0.5 truth at
     * sf0.001 / 0.01 / 0.1):
     *   h ≤ 1: recall 32.1 / 24.0 / 38.3   precision 100 / 100  / 96.1
     *   h ≤ 2: recall 64.3 / 44.0 / 59.0   precision 100 / 91.7 / 74.8
@@ -598,7 +574,8 @@ object ScaleQueries extends QueryModule {
     * h ≤ 3's precision collapses at bench scale (36%: the larger corpus
     * has many h ≤ 3 pairs in the J 0.3–0.5 band), so the shipped point
     * is h ≤ 2 — precision ≥ 74.8 everywhere with recall still over the
-    * 40 floor.
+    * 40 floor. `simhash_recall` and `simhash_precision` check the
+    * shipped point at any SF; run them before changing it.
     */
   val SimhashMaxHamming = 2
 
@@ -832,7 +809,7 @@ object ScaleQueries extends QueryModule {
   }
 
   /** High-recall IVF operating point: same 16-cell index, 12 probes.
-    * The RecallSweep curve (nProbe → recall at k=16/iters=1):
+    * The measured curve (nProbe → recall at k=16/iters=1):
     * 4→50-68%, 6→66-82%, 8→76-88%, 12→94.5-98% across the three SFs —
     * and a 32-cell index is strictly WORSE at equal corpus fraction
     * here (cells of ~15 vectors scatter true neighbors), so the ≥90%
@@ -851,7 +828,7 @@ object ScaleQueries extends QueryModule {
 
   /** Search-grade PQ configuration — SINGLE source of truth for the
     * Spark query, the generated SQL oracle ([[knnPqSql]]), the recall
-    * audit, and the RecallSweep measurement: 8 subspaces × 8 dims over
+    * audit: 8 subspaces × 8 dims over
     * the 64-dim embedding, 64 cells per sub-codebook (6 bits × 8 = 48
     * bits/vector vs 2048 bits raw). The round-9 path reused the emb_pq
     * REPORT codebooks (2×32-dim, 8 cells = 64 codes corpus-wide), so
@@ -861,12 +838,12 @@ object ScaleQueries extends QueryModule {
     * keeps its own coarse layout (that one measures compression, not
     * search).
     *
-    * RecallSweep, measured 2026-08-14 at ALL THREE SFs (the round-9
+    * Recall sweep, measured 2026-08-14 at ALL THREE SFs (the earlier
     * failure mode was a floor validated only below the bench SF):
     *   standard grid: subK=16 r=50 → 64/68/47, subK=32 r=100 →
     *     96/92/68.5 (sf0.001/0.01/0.1) — recall at fixed (subK, rerank)
     *     DEGRADES with corpus size, so the bench SF binds the config
-    *   deep grid (SWEEP_PQ_DEEP): subK=64 it=1 r=100 → 98/98/80.5;
+    *   deep grid: subK=64 it=1 r=100 → 98/98/80.5;
     *     r=200 → 100/100/93.5; 3 Lloyd rounds ≈ +0-2pp (not worth a
     *     3-round SQL mirror)
     * Shipped (subK=64, iters=1, rerank=200) = 100/100/93.5 ⇒ floor 70
@@ -879,8 +856,8 @@ object ScaleQueries extends QueryModule {
   private[graft] val PqQueryMod = 50
   /** Recall floors (pct) for the two PQ search paths — the single
     * source for the `knn_pq_recall`/`knn_ivfpq_recall` tolerance
-    * oracles AND the SimilaritySpec pins; set from the RecallSweep
-    * sections' measured minima with margin.
+    * oracles AND the SimilaritySpec pins; set from the measured minima
+    * with margin.
     */
   private[graft] val PqMinPct = 70
   private[graft] val IvfPqMinPct = 70
@@ -892,14 +869,11 @@ object ScaleQueries extends QueryModule {
     * helper so the search query and its recall audit train the
     * IDENTICAL index: L2 sub-quantizers over the NORMALIZED slices
     * (the cosine-correct PQ construction; see [[Similarity.knnPq]]).
-    * `subK` is swept by RecallSweep; queries pass the default.
     */
-  private[graft] def pqSubspaces(corpus: DataFrame,
-                                 subK: Int = PqSubK,
-                                 iters: Int = PqSubIters): Seq[(Int, Int, DataFrame)] = {
+  private[graft] def pqSubspaces(corpus: DataFrame): Seq[(Int, Int, DataFrame)] = {
     val banks = Similarity.kmeansCentroidsL2Multi(corpus,
       pqLos.map(lo => Similarity.unitSlice(col("v"), col("nrm"), lo, PqSubLen)),
-      k = subK, iters = iters)
+      k = PqSubK, iters = PqSubIters)
     pqLos.zip(banks).map { case (lo, b) => (lo, PqSubLen, b) }
   }
 
@@ -916,9 +890,9 @@ object ScaleQueries extends QueryModule {
       pqSubspaces(prepped)).orderBy("q_id", "rk")
   }
 
-  /** IVF+PQ probe count — 12 of 16 cells. RecallSweep IVF+PQ sections,
-    * measured 2026-08-14 at the shipped residual codebooks (iters=1
-    * coarse, subK=64, rerank=200):
+  /** IVF+PQ probe count — 12 of 16 cells. Recall sweep, measured
+    * 2026-08-14 at the shipped residual codebooks (iters=1 coarse,
+    * subK=64, rerank=200):
     *   shipped point → 98/96/82 at sf0.001/0.01/0.1 ⇒ floor 70 holds
     *   at every SF with ≥12pp margin
     *   (nProbe curve at subK=32 r=100: 8/10/12/16 → 84/88/90/92 at
@@ -930,19 +904,26 @@ object ScaleQueries extends QueryModule {
     */
   private[graft] val IvfPqNProbe = 12
 
+  /** Coarse cell count of the composed IVF+PQ index — shared by the
+    * inline-trained [[knnIvfPq]], the persisted index ([[annIndexBuild]]
+    * trains and writes one directory per cell) and its streaming
+    * compaction, so `ann_index_search` stays result-identical to
+    * `knn_ivfpq`.
+    */
+  private[graft] val IvfPqCells = 16
+
   /** Residual sub-codebooks for the composed IVF+PQ index — trained by
     * [[Similarity.kmeansCentroidsL2]] on SLICES of
     * [[Similarity.residualFrame]]'s r column (û − ĉ(cell)), sharing
     * the flat-PQ layout constants so the two PQ paths differ ONLY in
     * what they quantize.
     */
-  private[graft] def ivfPqSubspaces(corpus: DataFrame, coarse: DataFrame,
-                                    subK: Int = PqSubK,
-                                    iters: Int = PqSubIters): Seq[(Int, Int, DataFrame)] = {
+  private[graft] def ivfPqSubspaces(corpus: DataFrame,
+                                    coarse: DataFrame): Seq[(Int, Int, DataFrame)] = {
     val resid = Similarity.residualFrame(corpus, coarse)
     val banks = Similarity.kmeansCentroidsL2Multi(resid,
       pqLos.map(lo => slice(col("r"), lo, PqSubLen)),
-      k = subK, iters = iters)
+      k = PqSubK, iters = PqSubIters)
     pqLos.zip(banks).map { case (lo, b) => (lo, PqSubLen, b) }
   }
 
@@ -956,7 +937,7 @@ object ScaleQueries extends QueryModule {
   def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
-    val coarse = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val coarse = Similarity.kmeansCentroids(prepped, k = IvfPqCells, iters = 1)
     Similarity.knnIvfPq(queries, prepped, k = PqK, rerank = PqRerank,
       nProbe = IvfPqNProbe, coarse = coarse,
       subspaces = ivfPqSubspaces(prepped, coarse)).orderBy("q_id", "rk")
@@ -964,9 +945,9 @@ object ScaleQueries extends QueryModule {
 
   // ------------------------------------------ persisted ANN index
 
-  /** Rerank pool for the label-filtered search. RecallSweep filtered
-    * section (SWEEP_ONLY=filtered), measured 2026-08-14 vs the
-    * FILTERED brute truth at nProbe=12 across rerank ∈ {50,100,200,400}
+  /** Rerank pool for the label-filtered search. Recall sweep, measured
+    * 2026-08-14 vs the FILTERED brute truth at nProbe=12 across
+    * rerank ∈ {50,100,200,400}
     * (sf0.001 / 0.01 / 0.1):
     *   50 → 94 / 94 / 87.5;  100 → 94 / 94 / 93;
     *   200 → 94 / 94 / 93;   400 → 94 / 94 / 93
@@ -1005,16 +986,8 @@ object ScaleQueries extends QueryModule {
       System.getProperty("java.io.tmpdir"), ns), md)
   }
 
-  private def annIndexDir(dir: String): java.io.File = annIndexDirAt(dir, 16)
-
-  /** Index home for a non-default coarse cell count — the k ∝ √N
-    * scaling recipe measured by `ScaleProbe annk` (SCALING.md): same
-    * corpus-signature keying, separate namespace per k so the
-    * registered k = 16 index is never clobbered by a probe build.
-    */
-  private def annIndexDirAt(dir: String, k: Int): java.io.File =
-    corpusCacheDir(dir, "embeddings",
-      if (k == 16) "graft-ann-index" else s"graft-ann-index-k$k")
+  private def annIndexDir(dir: String): java.io.File =
+    corpusCacheDir(dir, "embeddings", "graft-ann-index")
 
   /** `ann_index_build` — the write half of the deployment-shape ANN
     * lifecycle (build once, search many): train the coarse quantizer +
@@ -1031,18 +1004,11 @@ object ScaleQueries extends QueryModule {
     * completion marker is written last so a crashed build is never
     * mistaken for an index.
     */
-  def annIndexBuild(spark: SparkSession, dir: String): DataFrame =
-    annIndexBuildAt(spark, dir, 16)
-
-  /** [[annIndexBuild]] at a caller-chosen coarse cell count — the
-    * measurement hook behind the k ∝ √N recipe (`ScaleProbe annk`).
-    */
-  private[graft] def annIndexBuildAt(spark: SparkSession, dir: String,
-      kCells: Int): DataFrame = {
-    val root = annIndexDirAt(dir, kCells)
+  def annIndexBuild(spark: SparkSession, dir: String): DataFrame = {
+    val root = annIndexDir(dir)
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
-    val coarse = Similarity.kmeansCentroids(prepped, k = kCells, iters = 1)
+    val coarse = Similarity.kmeansCentroids(prepped, k = IvfPqCells, iters = 1)
     val subs = ivfPqSubspaces(prepped, coarse)
     val marker = new java.io.File(root, "_GRAFT_INDEX_COMPLETE")
     marker.delete()
@@ -1050,7 +1016,7 @@ object ScaleQueries extends QueryModule {
     // lesson: keyless/absent repartition left the 16-directory write
     // on a single task), one file per directory preserved
     Similarity.ivfPqCodes(prepped, coarse, subs, keep = Seq("label"))
-      .repartition(kCells, col("c_id"))
+      .repartition(IvfPqCells, col("c_id"))
       .write.mode("overwrite").partitionBy("c_id")
       .parquet(new java.io.File(root, "codes").toString)
     coarse.write.mode("overwrite")
@@ -1068,17 +1034,6 @@ object ScaleQueries extends QueryModule {
       .orderBy("n_id")
   }
 
-  /** The persisted index, read back — (codes, coarse, subspaces).
-    * Builds first if the completion marker is absent (queries are an
-    * unordered map, so `ann_index_search`/`knn_filtered` cannot assume
-    * `ann_index_build` ran first in this session). Banks are re-sorted
-    * by c_id so the collected model arrays are order-identical to the
-    * trainer's output regardless of parquet file order.
-    */
-  private[graft] def annIndexParts(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Seq[(Int, Int, DataFrame)]) =
-    annIndexPartsAt(spark, dir, 16)
-
   /** Session-scoped cache of the resolved index parts — the ANN twin of
     * [[ledgerScanCache]]: every search re-paid codes-tree listing plus
     * coarse/subs sidecar reads against an UNCHANGED index. Keyed by
@@ -1088,13 +1043,18 @@ object ScaleQueries extends QueryModule {
   private val annPartsCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, String, Long), (DataFrame, DataFrame, Seq[(Int, Int, DataFrame)])]
 
-  private[graft] def clearAnnPartsCache(): Unit = annPartsCache.clear()
-
-  private[graft] def annIndexPartsAt(spark: SparkSession, dir: String,
-      kCells: Int): (DataFrame, DataFrame, Seq[(Int, Int, DataFrame)]) = {
-    val root = annIndexDirAt(dir, kCells)
+  /** The persisted index, read back — (codes, coarse, subspaces).
+    * Builds first if the completion marker is absent (queries are an
+    * unordered map, so `ann_index_search`/`knn_filtered` cannot assume
+    * `ann_index_build` ran first in this session). Banks are re-sorted
+    * by c_id so the collected model arrays are order-identical to the
+    * trainer's output regardless of parquet file order.
+    */
+  private[graft] def annIndexParts(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Seq[(Int, Int, DataFrame)]) = {
+    val root = annIndexDir(dir)
     val marker = new java.io.File(root, "_GRAFT_INDEX_COMPLETE")
-    if (!marker.exists()) annIndexBuildAt(spark, dir, kCells).count()
+    if (!marker.exists()) annIndexBuild(spark, dir).count()
     val key = (System.identityHashCode(spark), root.getCanonicalPath,
       marker.lastModified())
     val hit = annPartsCache.get(key)
@@ -1135,30 +1095,13 @@ object ScaleQueries extends QueryModule {
     * probed cells' code partitions + the model sidecars, which is why
     * its bench time sits far under the build's.
     */
-  def annIndexSearch(spark: SparkSession, dir: String): DataFrame =
-    annIndexSearchOn(spark, dir, col("id") % PqQueryMod === 0)
-
-  /** [[annIndexSearch]] with a caller-chosen query predicate — the
-    * ScaleProbe `ann` mode pins the batch to replica-0 ids so the
-    * measured quantity is the deployment one (a FIXED daily query
-    * batch against a growing corpus), not batch×corpus growth.
-    */
-  private[graft] def annIndexSearchOn(spark: SparkSession, dir: String,
-                                      queryPred: org.apache.spark.sql.Column): DataFrame =
-    annIndexSearchOnAt(spark, dir, queryPred, 16, IvfPqNProbe)
-
-  /** [[annIndexSearchOn]] against a k-parametrized persisted index with
-    * a caller-chosen probe width — the `ScaleProbe annk` search hook.
-    */
-  private[graft] def annIndexSearchOnAt(spark: SparkSession, dir: String,
-      queryPred: org.apache.spark.sql.Column, kCells: Int,
-      nProbe: Int): DataFrame = {
+  def annIndexSearch(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
-    val queries = prepped.filter(queryPred)
-    val (codes, coarse, subs) = annIndexPartsAt(spark, dir, kCells)
+    val queries = prepped.filter(col("id") % PqQueryMod === 0)
+    val (codes, coarse, subs) = annIndexParts(spark, dir)
     Similarity.knnIvfPqOnCodes(queries, prepped,
-        prunedIndexCodes(queries, codes, coarse, nProbe),
-        k = PqK, rerank = PqRerank, nProbe = nProbe,
+        prunedIndexCodes(queries, codes, coarse),
+        k = PqK, rerank = PqRerank, nProbe = IvfPqNProbe,
         coarse = coarse, subspaces = subs)
       .orderBy("q_id", "rk")
   }
@@ -1194,8 +1137,8 @@ object ScaleQueries extends QueryModule {
   private[graft] val RangeTau = 0.30
 
   /** ADC admission margin for the range scan: a candidate enters the
-    * exact re-rank iff adc ≥ τ − margin. Measured (RecallSweep range
-    * section): at the ε-ball's weak-cosine regime the residual-PQ ADC
+    * exact re-rank iff adc ≥ τ − margin. Measured (recall sweep over
+    * margins): at the ε-ball's weak-cosine regime the residual-PQ ADC
     * underestimates by up to ≈τ itself — recall at the shipped nProbe
     * climbs 46.6→64.8→88.8→97.1% across margins 0.08/0.12/0.2/0.3 at
     * sf0.1 — so the shipped margin equals τ (admission = adc ≥ 0,
@@ -1218,8 +1161,8 @@ object ScaleQueries extends QueryModule {
 
   /** Recall floor (percent) for `ann_range_recall` vs the brute ε-ball
     * truth. Measured 100/96/97.1% at sf0.001/0.01/0.1 at the shipped
-    * (nProbe = 14, margin = 0.30) — ≥ 6pp of honest headroom; re-run
-    * `SWEEP_ONLY=range RecallSweep` before changing any constant here.
+    * (nProbe = 14, margin = 0.30) — ≥ 6pp of honest headroom; run
+    * `ann_range_recall` at every SF before changing any constant here.
     */
   private[graft] val RangeMinPct = 90
 
@@ -1237,16 +1180,13 @@ object ScaleQueries extends QueryModule {
     annRangeAt(spark, dir, RangeMargin)
 
   private[graft] def annRangeAt(spark: SparkSession, dir: String,
-                                margin: Double,
-                                nProbe: Int = RangeNProbe,
-                                pred: Column = col("id") % PqQueryMod === 0)
-      : DataFrame = {
+                                margin: Double): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
-    val queries = prepped.filter(pred)
+    val queries = prepped.filter(col("id") % PqQueryMod === 0)
     val (codes, coarse, subs) = annIndexParts(spark, dir)
     Similarity.rangeIvfPqOnCodes(queries, prepped,
-        prunedIndexCodes(queries, codes, coarse, nProbe),
-        tau = RangeTau, margin = margin, nProbe = nProbe,
+        prunedIndexCodes(queries, codes, coarse, RangeNProbe),
+        tau = RangeTau, margin = margin, nProbe = RangeNProbe,
         coarse = coarse, subspaces = subs)
       .orderBy("q_id", "n_id")
   }
@@ -4199,9 +4139,9 @@ object ScaleQueries extends QueryModule {
         (col("n_hit") * 100 >= col("n_brute") * minPct).cast("long").as("recall_ok"))
   }
 
-  /** Floor 50: RecallSweep measured 62/74/76.5% across the three SFs at
-    * this (4-plane, 8-table) config — 12pp of honest margin. tables=12
-    * reaches 80-88% at +50% candidate cost (curve in RecallSweep).
+  /** Floor 50: measured 62/74/76.5% across the three SFs at this
+    * (4-plane, 8-table) config — 12pp of honest margin. tables=12
+    * reaches 80-88% at +50% candidate cost.
     */
   def knnLshRecall(spark: SparkSession, dir: String): DataFrame =
     annRecall(spark, dir,
@@ -4225,9 +4165,9 @@ object ScaleQueries extends QueryModule {
 
   /** Recall floor for the PQ/ADC path at the search-grade codebooks
     * (8×8-dim, 64 cells, rerank = PqRerank = 40·k). Floor set from the
-    * RecallSweep measurements at all three SFs (minimum 93.5 at sf0.1,
-    * quoted at [[PqSubK]]) with ≥23pp margin — re-run the sweep before
-    * changing this.
+    * recall measured at all three SFs (minimum 93.5 at sf0.1, quoted
+    * at [[PqSubK]]) with ≥23pp margin — run `knn_pq_recall` at every
+    * SF before changing this.
     */
   def knnPqRecall(spark: SparkSession, dir: String): DataFrame =
     annRecall(spark, dir, (q, c) =>
@@ -4235,13 +4175,14 @@ object ScaleQueries extends QueryModule {
       minPct = PqMinPct)
 
   /** Recall floor for the composed IVF+PQ index at (nProbe=12/16,
-    * rerank = PqRerank). Floor set from the RecallSweep measurements
-    * at all three SFs (minimum 82 at sf0.1, quoted at [[IvfPqNProbe]])
-    * with ≥12pp margin — re-run the sweep before changing this.
+    * rerank = PqRerank). Floor set from the recall measured at all
+    * three SFs (minimum 82 at sf0.1, quoted at [[IvfPqNProbe]]) with
+    * ≥12pp margin — run `knn_ivfpq_recall` at every SF before
+    * changing this.
     */
   def knnIvfPqRecall(spark: SparkSession, dir: String): DataFrame =
     annRecall(spark, dir, (q, c) => {
-      val coarse = Similarity.kmeansCentroids(c, k = 16, iters = 1)
+      val coarse = Similarity.kmeansCentroids(c, k = IvfPqCells, iters = 1)
       Similarity.knnIvfPq(q, c, k = PqK, rerank = PqRerank,
         nProbe = IvfPqNProbe, coarse = coarse,
         subspaces = ivfPqSubspaces(c, coarse))
@@ -4251,7 +4192,7 @@ object ScaleQueries extends QueryModule {
     * the FILTERED brute truth ([[Similarity.knnBruteFiltered]]) — the
     * truth set itself is the exact hash-checked quantity, same audit
     * contract as the other recall rows. Floor at [[FilteredMinPct]],
-    * set from RecallSweep's filtered section across all three SFs.
+    * set from the filtered recall measured across all three SFs.
     */
   def knnFilteredRecall(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
@@ -4403,8 +4344,8 @@ object ScaleQueries extends QueryModule {
         (col("n_hit") * 100 >= col("n_found") * minPct).cast("long").as("precision_ok"))
   }
 
-  /** Floor 80: measured 100% at ALL three SFs (RecallSweep pair-recall
-    * section) — at J ≥ 0.5 the banded signature essentially cannot miss
+  /** Floor 80: measured 100% at ALL three SFs (pair recall vs the
+    * rare-gram truth) — at J ≥ 0.5 the banded signature essentially cannot miss
     * on this corpus; the 20pp slack absorbs a future corpus
     * regeneration, not expected variance.
     */

@@ -108,12 +108,12 @@ object StreamingIndexMaintenance {
     val base = spark.read.parquet(codesDir.toString)
     val merged = base.unionByName(deltaCodes(spark, deltaDir, base))
     marker.delete() // a crash mid-swap must read as "no index", never half
-    // pinned to the cell count (16 coarse cells), like the ledger
+    // pinned to the coarse cell count, like the ledger
     // writers: a keyless repartition lets AQE coalesce the small
     // post-shuffle stage to one task that writes every c_id directory
     // serially; pinned, each cell directory still gets exactly one
     // writer task (one file per directory preserved)
-    merged.repartition(16, col("c_id"))
+    merged.repartition(graft.queries.ScaleQueries.IvfPqCells, col("c_id"))
       .write.mode("overwrite").partitionBy("c_id")
       .parquet(tmp.toString)
     SegmentFiles.rmTree(codesDir)

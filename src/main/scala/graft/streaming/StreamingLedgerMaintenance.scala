@@ -91,7 +91,7 @@ object StreamingLedgerMaintenance {
     val merged = base.unionByName(deltaBuckets(spark, deltaDir, base))
     marker.delete() // a crash mid-swap must read as "no ledger", never half
     // partition count pinned to the directory count, like the builder
-    // (ScaleQueries.dedupLedgerBuildAt): keyless, AQE coalesced the
+    // (ScaleQueries.dedupLedgerBuild): keyless, AQE coalesced the
     // small post-shuffle stage to ONE task that wrote every (band, kb)
     // directory serially; pinned, each directory still lands in exactly
     // one task (hash on the full partition key) and writes spread

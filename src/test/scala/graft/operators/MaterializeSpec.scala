@@ -44,10 +44,9 @@ class MaterializeSpec extends AnyFunSuite {
     def run() = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.7)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val eager = withStrategy("eager")(run())
-    val lzy = withStrategy("lazy")(run())
     val none = withStrategy("none")(run())
     val pq = withStrategy("parquet")(run())
-    assert(eager == lzy && lzy == none && none == pq)
+    assert(eager == none && none == pq)
     assert(eager.contains((1L, 2L)))
   }
 
@@ -60,6 +59,13 @@ class MaterializeSpec extends AnyFunSuite {
       "parquet materialization must re-enter through a file scan")
     assert(staged.as[(Long, String)].collect().toSet ==
       docs.as[(Long, String)].collect().toSet)
+  }
+
+  test("an unrecognised strategy is rejected, naming the conf key") {
+    for (mode <- Seq("lazy", "eagre")) {
+      val e = intercept[IllegalArgumentException](withStrategy(mode)(Materialize(docs)))
+      assert(e.getMessage.contains(Materialize.Key) && e.getMessage.contains(mode))
+    }
   }
 
   test("simhash respects the strategy too") {
