@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Artifact
 
 /** Session-scoped strategy for the "materialize ONCE, referenced twice"
   * intermediate frames inside operators (LSH banded buckets, exploded
@@ -23,7 +24,8 @@ import org.apache.spark.sql.DataFrame
   *    splittable columnar file, and the rewritten scan restores column
   *    pruning for downstream stage consumers. This is how a 100 TB
   *    multi-stage pipeline (e.g. `hygiene_funnel`) persists stage
-  *    boundaries; directories are deleted on JVM exit.
+  *    boundaries; each frame is a subdirectory of one per-JVM temp
+  *    root, deleted on JVM exit.
   *
   * Any other value throws `IllegalArgumentException`: a mistyped mode
   * must not silently run `eager`.
@@ -76,19 +78,29 @@ object Materialize {
     * thread. Results are unchanged: each chain computes exactly the
     * frames it computed serially, and Spark's scheduler interleaves
     * their jobs' tasks. `par2` always joins the background thread
-    * before it returns or throws, so no chain outlives the call. When
-    * the caller's thunk throws, that error propagates with a background
-    * failure attached via `addSuppressed`; when only the background
-    * thunk throws, its error propagates.
+    * before it returns or throws, so no chain outlives the call. The
+    * background thread's jobs carry a job tag of their own (tags add to,
+    * never replace, the inherited job group and local properties): when
+    * the caller's thunk throws, those jobs are cancelled with task
+    * interruption before the join, and the caller's error propagates
+    * with the background failure (usually the cancellation) attached
+    * via `addSuppressed`; when only the background thunk throws, its
+    * error propagates.
     *
     * Use ONLY for thunks with no data dependency on each other; a
     * dependent pair would still be correct (lazy frames) but would
     * silently serialize and pay the thread for nothing.
     */
   def par2[A, B](a: => A, b: => B): (A, B) = {
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val tag = s"graft-par2-${java.util.UUID.randomUUID}"
     val boxB = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, B]]
     val t = new Thread(() => boxB.set(
-      try Right(b) catch { case e: Throwable => Left(e) }),
+      try {
+        sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+        Right(b)
+      } catch { case e: Throwable => Left(e) }),
       "graft-materialize-par2")
     t.setDaemon(true)
     t.start()
@@ -96,7 +108,12 @@ object Materialize {
       try a
       catch {
         case e: Throwable =>
-          t.join()
+          // the background result is no longer wanted: cancel its jobs
+          // (again while it runs, in case it is between jobs) and join
+          while (t.isAlive) {
+            sc.filterNot(_.isStopped).foreach(_.cancelJobsWithTag(tag))
+            t.join(100)
+          }
           boxB.get().left.foreach(e.addSuppressed)
           throw e
       }
@@ -107,17 +124,18 @@ object Materialize {
     }
   }
 
-  private def viaParquet(df: DataFrame): DataFrame = {
+  /** One per-JVM parent for every parquet-mode frame, created on first
+    * use and removed by a single shutdown hook.
+    */
+  private lazy val parquetRoot: java.nio.file.Path = {
     val dir = java.nio.file.Files.createTempDirectory("graft-mat")
-    // best-effort cleanup at JVM exit (a long session would otherwise
-    // accumulate one stage directory per materialization)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }))
-    val path = dir.resolve("frame").toString
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Artifact.rmTree(dir.toFile)))
+    dir
+  }
+  private val frames = new java.util.concurrent.atomic.AtomicLong
+
+  private def viaParquet(df: DataFrame): DataFrame = {
+    val path = parquetRoot.resolve(s"frame-${frames.incrementAndGet()}").toString
     df.write.parquet(path)
     df.sparkSession.read.parquet(path)
   }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Logistic, Materialize, Multimodal, Pca, Similarity, TextAnalysis}
-import graft.sources.Tables
+import graft.sources.{Artifact, Tables}
 
 
 /** Scale-path operators: near-dup detection (MinHash-LSH, SimHash,
@@ -185,6 +185,13 @@ object ScaleQueries extends QueryModule {
     */
   private[graft] val LedgerKb = 32
 
+  /** The persisted near-dup ledger ([[Artifact]]): every HISTORY doc's
+    * banded bucket rows (id, key) under `buckets/band=…/kb=…`, so a
+    * probe prunes to its batch's (band, kb) directories.
+    */
+  private[graft] val ledger = Artifact("graft-dedup-ledger", "documents", "buckets",
+    Seq("band" -> KmBands, "kb" -> LedgerKb))
+
   /** The probe batch: an id-hash slice (doc_id % 10 = 3) standing in
     * for a day's arrivals. Deliberately NOT `source = 'src19'` (the
     * `dedup_incremental` split): the synthetic corpus plants zero
@@ -203,9 +210,6 @@ object ScaleQueries extends QueryModule {
   private[graft] def ledgerKbCol: org.apache.spark.sql.Column =
     conv(substring(md5(col("key")), 1, 8), 16, 10).cast("long") % LedgerKb
 
-  private def ledgerDir(dir: String): java.io.File =
-    corpusCacheDir(dir, "documents", "graft-dedup-ledger")
-
   /** `dedup_ledger_build` — the write half of the incremental near-dup
     * lifecycle (the `ann_index_build`/`ann_index_search` split applied
     * to dedup): compute every HISTORY doc's banded MinHash bucket keys
@@ -219,201 +223,40 @@ object ScaleQueries extends QueryModule {
     * validation) `dedup_incremental` could not express beyond exact
     * fingerprints.
     * Returns the bucket table READ BACK from the persisted ledger (the
-    * oracle checks the on-disk truth); a completion marker is written
-    * last so a crashed build is never mistaken for a ledger.
+    * oracle checks the on-disk truth).
     */
   def dedupLedgerBuild(spark: SparkSession, dir: String): DataFrame = {
-    val root = ledgerDir(dir)
-    val hist = Tables.read(spark, dir, "documents").filter(!ledgerIsBatch)
-    val banded = kmBandKeys(kmGramFrame(hist)).withColumn("kb", ledgerKbCol)
-    val marker = new java.io.File(root, "_GRAFT_LEDGER_COMPLETE")
-    marker.delete()
-    // repartition ON the partition columns before partitionBy: each
-    // (band, kb) directory is then written by exactly ONE task — one
-    // file per directory instead of (tasks × dirs) small files, which
-    // is the compaction lever the round-14 manifest measurement named
-    // (probe cost past pruning is per-file opens). The extra exchange
-    // is one linear shuffle of the banded frame.
-    // numPartitions is PINNED to the directory count (KmBands × kb):
-    // left keyless, AQE coalesced the small post-shuffle stage to ONE
-    // partition, and that lone task wrote all bands×kb directories
-    // serially — measured 4.26 s of the build's 4.9 s wall was this
-    // single-task write stage (256 sequential parquet file opens).
-    // Pinned, every (band, kb) group still lands in exactly one task
-    // (hash on the full partition key), the one-file-per-directory
-    // invariant holds, and the writes spread across the cluster. This
-    // is the scale shape too: at 100 TB each directory is ~1/(bands·kb)
-    // of the corpus and wants its own writer.
-    banded.select(col("id"), col("key"), col("band"), col("kb"))
-      .repartition(KmBands * LedgerKb, col("band"), col("kb"))
-      .write.mode("overwrite").partitionBy("band", "kb")
-      .parquet(new java.io.File(root, "buckets").toString)
-    writeLedgerManifest(root)
-    java.nio.file.Files.writeString(marker.toPath, "ok")
-    // read-back through the cache: priming "full" here makes the fresh
-    // build's first full-tree consumer (stats/static sides) listing-free
-    cachedScan(spark, root, "full")(ledgerBuckets(spark, root))
+    val root = ledger.home(dir)
+    writeLedger(spark, dir)(root)
+    // the read-back primes the cached full-tree scan the stats and
+    // static sides reuse
+    ledger.scan(spark, root)
       .select(col("id"), col("band").cast("long").as("band"),
         col("kb").cast("long").as("kb"), col("key"))
       .orderBy("band", "kb", "key", "id")
   }
 
-  /** The persisted bucket table (partition columns band/kb read back
-    * with parquet's inferred types — cast at the call sites that hash).
-    */
-  private def ledgerBuckets(spark: SparkSession, root: java.io.File): DataFrame =
-    spark.read.parquet(new java.io.File(root, "buckets").toString)
-
-  /** Session-scoped cache of RESOLVED ledger scans. `spark.read.parquet`
-    * builds an InMemoryFileIndex at read time — a driver-side listing of
-    * the touched tree plus a footer read for schema — and a repeated
-    * probe in the same session re-pays that against an UNCHANGED ledger.
-    * Keyed by (session identity, canonical root, ledger version, scan
-    * signature), where the version is the manifest/completion-marker
-    * mtime: a rebuild or compaction rewrites both, so stale entries miss
-    * and are evicted on the next load — no explicit invalidation hook.
-    * This is the plain-parquet analog of a catalog's FileStatusCache; at
-    * 100 TB the listing is a metastore/S3-LIST round-trip per probe, and
-    * reusing the resolved scan is what makes a session's SECOND and
-    * later admission checks metadata-free (measured: the repeated-probe
-    * run in SCALING.md).
-    */
-  private val ledgerScanCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, Long, String), DataFrame]
-
-  private def ledgerVersion(root: java.io.File): Long =
-    math.max(new java.io.File(root, "manifest.txt").lastModified(),
-      new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").lastModified())
-
-  private def cachedScan(spark: SparkSession, root: java.io.File, sig: String)(
-      load: => DataFrame): DataFrame = {
-    val key = (System.identityHashCode(spark), root.getCanonicalPath,
-      ledgerVersion(root), sig)
-    val hit = ledgerScanCache.get(key)
-    if (hit != null) hit
-    else {
-      // evict stale versions of this ledger so the map stays bounded by
-      // (live ledgers × distinct scan signatures), not by rebuild count;
-      // the blunt full clear caps a long session that probes many
-      // DISTINCT batches (each a new signature) — a re-resolve is cheap
-      // relative to leaking file-index plans forever
-      ledgerScanCache.keySet.removeIf(k =>
-        k._1 == key._1 && k._2 == key._2 && k._3 != key._3)
-      if (ledgerScanCache.size > 256) ledgerScanCache.clear()
-      val df = load
-      ledgerScanCache.putIfAbsent(key, df)
-      df
-    }
-  }
-
-  /** The ledger MANIFEST — one relative path per leaf parquet file,
-    * written ONCE at build time (the Delta/Iceberg-metadata analog for
-    * this plain-parquet layout): the round-14 LedgerKb measurement
-    * (SCALING.md) showed directory pruning flattens the probe's SCAN
-    * growth but plain-parquet reads re-LIST the whole bucket tree —
-    * O(bands×kb) files — before pruning anything, an O(total-files)
-    * constant that swamps the pruned scan. A probe that selects its
-    * files FROM the manifest pays O(touched files) instead and never
-    * lists. Backfilled lazily for pre-manifest ledgers (one listing,
-    * then amortized).
-    */
-  private[graft] def writeLedgerManifest(root: java.io.File): Unit = {
-    val buckets = new java.io.File(root, "buckets")
-    val sb = new StringBuilder
-    for {
-      bandDir <- Option(buckets.listFiles()).getOrElse(Array.empty[java.io.File])
-        .sortBy(_.getName)
-      if bandDir.isDirectory && bandDir.getName.startsWith("band=")
-      kbDir <- Option(bandDir.listFiles()).getOrElse(Array.empty[java.io.File])
-        .sortBy(_.getName)
-      if kbDir.isDirectory && kbDir.getName.startsWith("kb=")
-      f <- Option(kbDir.listFiles()).getOrElse(Array.empty[java.io.File])
-        .sortBy(_.getName)
-      if f.getName.endsWith(".parquet")
-    } sb ++= s"${bandDir.getName}/${kbDir.getName}/${f.getName}\n"
-    java.nio.file.Files.writeString(
-      new java.io.File(root, "manifest.txt").toPath, sb.toString)
-  }
-
-  /** Manifest-pruned ledger scan: the batch's packed (band, kb) keys
-    * select their (band, kb) DIRECTORIES from the manifest
-    * (driver-side string work, manifest-sized), and the read opens
-    * only those — `basePath` keeps band/kb as partition columns, and
-    * the isin predicate stays on the scan as a staleness guard (it
-    * lands in PartitionFilters like the directory route, so the
-    * pruning spec holds for both paths). Directories, NOT leaf files:
-    * passing thousands of leaf paths makes the driver stat each one
-    * (measured WORSE than the tree listing at sf1 — 5.9 → 7.7 s);
-    * touched-dir paths are bounded by 8×kb and each lists only its own
-    * few files. Falls back (None) when the manifest selects nothing or
-    * the touched fraction approaches the whole tree (the recursive
-    * root listing is then the cheaper single walk — the saturated
-    * fixed-batch case).
-    */
-  private def ledgerManifestScan(spark: SparkSession, root: java.io.File,
-      packed: Array[Long]): Option[DataFrame] = {
-    val mf = new java.io.File(root, "manifest.txt")
-    if (!mf.exists()) {
-      if (new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
-        writeLedgerManifest(root) // backfill a pre-manifest ledger once
-      else return None
-    }
-    val keep = packed.toSet
-    val bucketsPath = new java.io.File(root, "buckets")
-    val rel = """(band=(\d+)/kb=(\d+))/.*""".r
-    val allDirs = scala.collection.mutable.LinkedHashSet.empty[String]
-    val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-    scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(mf.toPath)).asScala
-      .foreach {
-        case rel(d, b, k) =>
-          allDirs += d
-          if (keep.contains(b.toLong * LedgerKb + k.toLong)) touched += d
-        case _ => ()
-      }
-    if (touched.isEmpty || touched.size * 2 > allDirs.size) None
-    else {
-      val dirs = touched.toVector
-      Some(cachedScan(spark, root, s"dirs:${dirs.hashCode}") {
-        spark.read.option("basePath", bucketsPath.toString)
-          .parquet(dirs.map(d => new java.io.File(bucketsPath, d).toString): _*)
-      })
-    }
+  private def writeLedger(spark: SparkSession, dir: String)(root: java.io.File): Unit = {
+    val hist = Tables.read(spark, dir, "documents").filter(!ledgerIsBatch)
+    ledger.write(root, kmBandKeys(kmGramFrame(hist)).withColumn("kb", ledgerKbCol)
+      .select(col("id"), col("key"), col("band"), col("kb")))()
   }
 
   /** Probe internals, exposed for DedupLedgerSpec: the batch gram
     * frame, the batch bucket frame, and the PRUNED ledger scan (the
     * batch's distinct (band, kb) pairs — bounded by 8 × [[LedgerKb]]
-    * regardless of batch size — collected into a static partition
-    * predicate). Builds the ledger first if the marker is absent.
+    * regardless of batch size — as packed keys, a static partition
+    * predicate). Builds the ledger first unless it is complete.
     */
   private[graft] def ledgerProbeParts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val root = ledgerDir(dir)
-    if (!new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
-      dedupLedgerBuild(spark, dir).count()
+    val root = ledger.ensure(dir)(writeLedger(spark, dir))
     val d = Tables.read(spark, dir, "documents")
     val batchGrams = Materialize(kmGramFrame(d.filter(ledgerIsBatch)))
     val bb = Materialize(kmBandKeys(batchGrams).withColumn("kb", ledgerKbCol))
-    // the batch's distinct (band, kb) pairs — bounded by 8 × kb — as ONE
-    // packed-key isin over the partition columns: a single IN predicate
-    // the file index prunes on, with the empty batch short-circuiting to
-    // an empty pruned scan instead of reduce() throwing.
-    val pairs = bb.select(col("band"), col("kb")).distinct()
-      .collect().map(r => r.getInt(0).toLong * LedgerKb + r.getLong(1)).sorted
-    val pruned =
-      if (pairs.isEmpty)
-        cachedScan(spark, root, "full")(ledgerBuckets(spark, root)).filter(lit(false))
-      else {
-        // manifest route first (O(touched files), no tree listing);
-        // cached full-tree scan as the fallback for manifest-less
-        // ledgers and the saturated case (touched ≈ whole tree)
-        val base = ledgerManifestScan(spark, root, pairs)
-          .getOrElse(cachedScan(spark, root, "full")(ledgerBuckets(spark, root)))
-        base.filter(
-          (col("band").cast("long") * LedgerKb + col("kb").cast("long")).isin(pairs: _*))
-      }
-    (batchGrams, bb, pruned)
+    val pairs = bb.select(ledger.packedKey).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
+    (batchGrams, bb, ledger.pruned(spark, root, pairs))
   }
 
   /** The two STATIC sides a streaming admission probe joins against
@@ -421,16 +264,14 @@ object ScaleQueries extends QueryModule {
     * table and the history docs' gram ARRAYS (the row-local-verify
     * sibling of the exploded gram frame — in production this is a
     * second persisted artifact next to the ledger, rebuilt with it).
-    * Builds the ledger first if the marker is absent.
+    * Builds the ledger first unless it is complete.
     */
   private[graft] def ledgerStaticSides(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val root = ledgerDir(dir)
-    if (!new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
-      dedupLedgerBuild(spark, dir).count()
+    val root = ledger.ensure(dir)(writeLedger(spark, dir))
     val hg = Tables.read(spark, dir, "documents").filter(!ledgerIsBatch)
       .select(col("doc_id").as("hist_id"), kmGramArray(col("text")).as("h_grams"))
-    (cachedScan(spark, root, "full")(ledgerBuckets(spark, root)), hg)
+    (ledger.scan(spark, root), hg)
   }
 
   /** `dedup_ledger_probe` — the read half: the batch slice's band keys
@@ -912,6 +753,13 @@ object ScaleQueries extends QueryModule {
     */
   private[graft] val IvfPqCells = 16
 
+  /** The persisted IVF+PQ index ([[Artifact]]): (n_id, code0..7, label)
+    * rows under `codes/c_id=…`, one directory per coarse cell, plus the
+    * `coarse/` and `subs/` codebook sidecars.
+    */
+  private[graft] val annIndex = Artifact("graft-ann-index", "embeddings", "codes",
+    Seq("c_id" -> IvfPqCells))
+
   /** Residual sub-codebooks for the composed IVF+PQ index — trained by
     * [[Similarity.kmeansCentroidsL2]] on SLICES of
     * [[Similarity.residualFrame]]'s r column (û − ĉ(cell)), sharing
@@ -966,29 +814,6 @@ object ScaleQueries extends QueryModule {
     */
   private[graft] val FilteredMinPct = 70
 
-  /** On-disk home of a persisted artifact (ANN index / dedup ledger)
-    * for one corpus dir, keyed by an md5 of the SOURCE parquet files'
-    * (path, length, mtime) so a regenerated corpus can never be served
-    * a stale artifact — a mismatched corpus simply hashes to a
-    * different directory and triggers a rebuild.
-    */
-  private[queries] def corpusCacheDir(dir: String, table: String,
-                                      ns: String): java.io.File = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new java.io.File(s"$dir/$table.parquet"))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}").mkString("|")
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    new java.io.File(new java.io.File(
-      System.getProperty("java.io.tmpdir"), ns), md)
-  }
-
-  private def annIndexDir(dir: String): java.io.File =
-    corpusCacheDir(dir, "embeddings", "graft-ann-index")
-
   /** `ann_index_build` — the write half of the deployment-shape ANN
     * lifecycle (build once, search many): train the coarse quantizer +
     * per-cell residual sub-codebooks, code every vector ONCE, and
@@ -1000,79 +825,51 @@ object ScaleQueries extends QueryModule {
     *   - `coarse/`, `subs/` — the codebook sidecars (model-sized:
     *     16 + 8×64 centroid rows), read back by the search half.
     * Returns the codes frame READ BACK from the persisted index — the
-    * oracle checks the on-disk truth, not the in-memory plan. A
-    * completion marker is written last so a crashed build is never
-    * mistaken for an index.
+    * oracle checks the on-disk truth, not the in-memory plan.
     */
   def annIndexBuild(spark: SparkSession, dir: String): DataFrame = {
-    val root = annIndexDir(dir)
-    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
-      keep = Seq("label"))
-    val coarse = Similarity.kmeansCentroids(prepped, k = IvfPqCells, iters = 1)
-    val subs = ivfPqSubspaces(prepped, coarse)
-    val marker = new java.io.File(root, "_GRAFT_INDEX_COMPLETE")
-    marker.delete()
-    // one writer task per cell directory (pinned — the ledger-write
-    // lesson: keyless/absent repartition left the 16-directory write
-    // on a single task), one file per directory preserved
-    Similarity.ivfPqCodes(prepped, coarse, subs, keep = Seq("label"))
-      .repartition(IvfPqCells, col("c_id"))
-      .write.mode("overwrite").partitionBy("c_id")
-      .parquet(new java.io.File(root, "codes").toString)
-    coarse.write.mode("overwrite")
-      .parquet(new java.io.File(root, "coarse").toString)
-    subs.zipWithIndex.map { case ((_, _, bank), s) =>
-        bank.select(lit(s).as("s"), col("c_id"), col("cv"), col("cn"))
-      }.reduce(_ union _)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(root, "subs").toString)
-    java.nio.file.Files.writeString(marker.toPath, "ok")
+    val root = annIndex.home(dir)
+    writeAnnIndex(spark, dir)(root)
     val codeCols = pqLos.indices.map(s => col(s"code$s"))
-    spark.read.parquet(new java.io.File(root, "codes").toString)
+    annIndex.scan(spark, root)
       .select(col("n_id") +: codeCols :+ col("label") :+
         col("c_id").cast("long").as("c_id"): _*)
       .orderBy("n_id")
   }
 
-  /** Session-scoped cache of the resolved index parts — the ANN twin of
-    * [[ledgerScanCache]]: every search re-paid codes-tree listing plus
-    * coarse/subs sidecar reads against an UNCHANGED index. Keyed by
-    * (session, root, completion-marker mtime); a rebuild bumps the
-    * marker and stale entries are evicted on the next load.
-    */
-  private val annPartsCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long), (DataFrame, DataFrame, Seq[(Int, Int, DataFrame)])]
+  private def writeAnnIndex(spark: SparkSession, dir: String)(root: java.io.File): Unit = {
+    val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
+      keep = Seq("label"))
+    val coarse = Similarity.kmeansCentroids(prepped, k = IvfPqCells, iters = 1)
+    val subs = ivfPqSubspaces(prepped, coarse)
+    annIndex.write(root, Similarity.ivfPqCodes(prepped, coarse, subs, keep = Seq("label"))) {
+      coarse.write.mode("overwrite")
+        .parquet(new java.io.File(root, "coarse").toString)
+      subs.zipWithIndex.map { case ((_, _, bank), s) =>
+          bank.select(lit(s).as("s"), col("c_id"), col("cv"), col("cn"))
+        }.reduce(_ union _)
+        .coalesce(1).write.mode("overwrite")
+        .parquet(new java.io.File(root, "subs").toString)
+    }
+  }
 
-  /** The persisted index, read back — (codes, coarse, subspaces).
-    * Builds first if the completion marker is absent (queries are an
+  /** The persisted index's model, read back — (coarse, subspaces).
+    * Builds first unless the index is complete (queries are an
     * unordered map, so `ann_index_search`/`knn_filtered` cannot assume
     * `ann_index_build` ran first in this session). Banks are re-sorted
     * by c_id so the collected model arrays are order-identical to the
     * trainer's output regardless of parquet file order.
     */
   private[graft] def annIndexParts(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Seq[(Int, Int, DataFrame)]) = {
-    val root = annIndexDir(dir)
-    val marker = new java.io.File(root, "_GRAFT_INDEX_COMPLETE")
-    if (!marker.exists()) annIndexBuild(spark, dir).count()
-    val key = (System.identityHashCode(spark), root.getCanonicalPath,
-      marker.lastModified())
-    val hit = annPartsCache.get(key)
-    if (hit != null) return hit
-    annPartsCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == key._2 && k._3 != key._3)
-    if (annPartsCache.size > 64) annPartsCache.clear()
-    val codes = spark.read.parquet(new java.io.File(root, "codes").toString)
-    val coarse = spark.read.parquet(new java.io.File(root, "coarse").toString)
-      .orderBy("c_id")
-    val subsDf = spark.read.parquet(new java.io.File(root, "subs").toString)
+      : (DataFrame, Seq[(Int, Int, DataFrame)]) = {
+    val root = annIndex.ensure(dir)(writeAnnIndex(spark, dir))
+    val coarse = annIndex.scan(spark, root, "coarse").orderBy("c_id")
+    val subsDf = annIndex.scan(spark, root, "subs")
     val subs = pqLos.indices.map { s =>
       (pqLos(s), PqSubLen,
         subsDf.filter(col("s") === s).select("c_id", "cv", "cn").orderBy("c_id"))
     }
-    val parts = (codes, coarse, subs)
-    annPartsCache.putIfAbsent(key, parts)
-    parts
+    (coarse, subs)
   }
 
   /** The probed slice of the persisted codes index: the query batch's
@@ -1081,12 +878,12 @@ object ScaleQueries extends QueryModule {
     * partition column, so the scan reads only the probed cells'
     * parquet directories (PartitionFilters — asserted in AnnIndexSpec).
     */
-  private[graft] def prunedIndexCodes(queries: DataFrame, codes: DataFrame,
-                                      coarse: DataFrame,
+  private[graft] def prunedIndexCodes(spark: SparkSession, dir: String,
+                                      queries: DataFrame, coarse: DataFrame,
                                       nProbe: Int = IvfPqNProbe): DataFrame = {
     val cells = Similarity.probedCells(queries, coarse, nProbe)
       .collect().map(_.getLong(0)).sorted.toSeq
-    codes.filter(col("c_id").isin(cells: _*))
+    annIndex.pruned(spark, annIndex.home(dir), cells)
   }
 
   /** `ann_index_search` — the read half: identical results to the
@@ -1098,9 +895,9 @@ object ScaleQueries extends QueryModule {
   def annIndexSearch(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
-    val (codes, coarse, subs) = annIndexParts(spark, dir)
+    val (coarse, subs) = annIndexParts(spark, dir)
     Similarity.knnIvfPqOnCodes(queries, prepped,
-        prunedIndexCodes(queries, codes, coarse),
+        prunedIndexCodes(spark, dir, queries, coarse),
         k = PqK, rerank = PqRerank, nProbe = IvfPqNProbe,
         coarse = coarse, subspaces = subs)
       .orderBy("q_id", "rk")
@@ -1118,9 +915,9 @@ object ScaleQueries extends QueryModule {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
-    val (codes, coarse, subs) = annIndexParts(spark, dir)
+    val (coarse, subs) = annIndexParts(spark, dir)
     Similarity.knnIvfPqFilteredOnCodes(queries, prepped,
-        prunedIndexCodes(queries, codes, coarse),
+        prunedIndexCodes(spark, dir, queries, coarse),
         k = PqK, rerank = FilteredRerank, nProbe = IvfPqNProbe,
         coarse = coarse, subspaces = subs, labCol = "label")
       .orderBy("q_id", "rk")
@@ -1183,9 +980,9 @@ object ScaleQueries extends QueryModule {
                                 margin: Double): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
-    val (codes, coarse, subs) = annIndexParts(spark, dir)
+    val (coarse, subs) = annIndexParts(spark, dir)
     Similarity.rangeIvfPqOnCodes(queries, prepped,
-        prunedIndexCodes(queries, codes, coarse, RangeNProbe),
+        prunedIndexCodes(spark, dir, queries, coarse, RangeNProbe),
         tau = RangeTau, margin = margin, nProbe = RangeNProbe,
         coarse = coarse, subspaces = subs)
       .orderBy("q_id", "n_id")
@@ -1253,9 +1050,9 @@ object ScaleQueries extends QueryModule {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
-    val (codes, coarse, subs) = annIndexParts(spark, dir)
+    val (coarse, subs) = annIndexParts(spark, dir)
     Similarity.rangeIvfPqFilteredOnCodes(queries, prepped,
-        prunedIndexCodes(queries, codes, coarse, RangeNProbe),
+        prunedIndexCodes(spark, dir, queries, coarse, RangeNProbe),
         tau = RangeTau, margin = RangeMargin, nProbe = RangeNProbe,
         coarse = coarse, subspaces = subs, labCol = "label")
       .orderBy("q_id", "n_id")

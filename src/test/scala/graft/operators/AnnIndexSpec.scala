@@ -32,12 +32,12 @@ class AnnIndexSpec extends AnyFunSuite {
   private lazy val queries = prepped.filter(col("id") % 50 === 0)
 
   // build once through the REGISTERED path (also exercises the
-  // build-if-missing marker logic annIndexParts relies on)
+  // store's ensure-if-incomplete path annIndexParts relies on)
   private lazy val built: Long = ScaleQueries.annIndexBuild(spark, dir).count()
   private lazy val parts = { built; ScaleQueries.annIndexParts(spark, dir) }
 
   test("probedCells matches an independent driver-side probe computation") {
-    val (_, coarse, _) = parts
+    val (coarse, _) = parts
     val nProbe = 12
     val got = Similarity.probedCells(queries, coarse, nProbe)
       .collect().map(_.getLong(0)).toSet
@@ -57,10 +57,10 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("the pruned index scan is parquet partition pruning over the probed cells") {
-    val (codes, coarse, _) = parts
+    val (coarse, _) = parts
     val probed = Similarity.probedCells(queries, coarse, 12)
       .collect().map(_.getLong(0)).toSet
-    val pruned = ScaleQueries.prunedIndexCodes(queries, codes, coarse)
+    val pruned = ScaleQueries.prunedIndexCodes(spark, dir, queries, coarse)
     val plan = pruned.queryExecution.executedPlan.toString
     val flat = plan.linesIterator.mkString(" ")
     // the cell predicate must land in PartitionFilters (directory-level

@@ -61,6 +61,14 @@ class MaterializeSpec extends AnyFunSuite {
       docs.as[(Long, String)].collect().toSet)
   }
 
+  test("parquet-mode frames in one session share one parent directory") {
+    def frameDir(df: DataFrame) =
+      new java.io.File(new java.net.URI(df.inputFiles.head)).getParentFile
+    val (a, b) = withStrategy("parquet")((Materialize(docs), Materialize(docs)))
+    assert(frameDir(a) != frameDir(b))
+    assert(frameDir(a).getParentFile == frameDir(b).getParentFile)
+  }
+
   test("an unrecognised strategy is rejected, naming the conf key") {
     for (mode <- Seq("lazy", "eagre")) {
       val e = intercept[IllegalArgumentException](withStrategy(mode)(Materialize(docs)))

@@ -3,6 +3,7 @@ package graft.operators
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicBoolean
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSpark
 
 /** [[Materialize.par2]]'s failure path: the background chain never
   * outlives the call, and its error is never lost.
@@ -33,4 +34,28 @@ class Par2Spec extends AnyFunSuite {
     val e = intercept[RuntimeException](Materialize.par2(1, throw new RuntimeException("background")))
     assert(e.getMessage == "background")
   }
+
+  test("a failing foreground chain cancels the background chain's Spark jobs") {
+    val sc = TestSpark.spark.sparkContext
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Materialize.par2(
+        {
+          Par2Spec.taskRunning.await(20, java.util.concurrent.TimeUnit.SECONDS)
+          throw new IllegalStateException("foreground")
+        },
+        sc.parallelize(1 to 4, 4).map { i =>
+          Par2Spec.taskRunning.countDown(); Thread.sleep(30000); i
+        }.count())
+    }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage == "foreground")
+    assert(seconds < 10, s"par2 took $seconds s: the background job was not cancelled")
+    assert(e.getSuppressed.nonEmpty, "the cancellation error must be attached")
+  }
+}
+
+object Par2Spec {
+  /** Counted down by the background job's first running task. */
+  val taskRunning = new CountDownLatch(1)
 }

@@ -17,7 +17,7 @@ import graft.TestSpark
   *     never WHAT collides);
   *  3. every emitted pair crosses the batch/history split in the right
   *     direction and carries a verified Jaccard ≥ 0.5;
-  *  4. the build-if-missing marker logic rebuilds a deleted ledger
+  *  4. the store's ensure-if-incomplete path rebuilds a deleted ledger
   *     transparently (exercised by the shared lazy build).
   */
 class DedupLedgerSpec extends AnyFunSuite {
@@ -27,7 +27,7 @@ class DedupLedgerSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   // build once through the REGISTERED path (also exercises the
-  // build-if-missing marker logic ledgerProbeParts relies on)
+  // store's ensure-if-incomplete path ledgerProbeParts relies on)
   private lazy val built: Long = ScaleQueries.dedupLedgerBuild(spark, dir).count()
 
   test("the probe's ledger scan is partition pruning over the batch's buckets") {

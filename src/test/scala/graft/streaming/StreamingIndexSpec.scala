@@ -54,7 +54,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     raw.filter(col("vec_id") === heldOut).write.parquet(streamIn)
     val deltaDir = Files.createTempDirectory("graft-ann-delta").toString
     val arriving = spark.readStream.schema(raw.schema).parquet(streamIn)
-    val q = StreamingIndexMaintenance.writer(
+    val q = ScaleQueries.annIndex.writer(
         StreamingIndexMaintenance.codeStream(arriving, coarse, subs),
         deltaDir, Files.createTempDirectory("ckpt").toString)
       .start()
@@ -62,7 +62,7 @@ class StreamingIndexSpec extends AnyFunSuite {
 
     // base ∪ delta is byte-identical to the cold recode...
     val base = spark.read.schema(fullCodes.schema).parquet(baseDir)
-    val delta = StreamingIndexMaintenance.deltaCodes(spark, deltaDir, fullCodes)
+    val delta = ScaleQueries.annIndex.delta(spark, deltaDir, fullCodes)
     assert(delta.count() == 1)
     val combined = base.unionByName(delta)
     // compare by NAME-ordered projection: file sources surface partition
@@ -81,15 +81,13 @@ class StreamingIndexSpec extends AnyFunSuite {
     // never touches the registered corpus-cache index
     val root = Files.createTempDirectory("graft-ann-root").toFile
     val codesDir = new java.io.File(root, "codes")
-    base.repartition(col("c_id")).write.partitionBy("c_id")
-      .parquet(codesDir.toString)
-    Files.writeString(new java.io.File(root, "_GRAFT_INDEX_COMPLETE").toPath, "ok")
-    val nDelta = StreamingIndexMaintenance.deltaFileCount(deltaDir)
+    ScaleQueries.annIndex.write(root, base)()
+    val nDelta = ScaleQueries.annIndex.deltaFileCount(deltaDir)
     assert(nDelta >= 1)
     // below the threshold the policy is a no-op; forcing it compacts
-    assert(!StreamingIndexMaintenance.maintainBase(spark, root.toString, deltaDir,
+    assert(!ScaleQueries.annIndex.maintainBase(spark, root, deltaDir,
       maxDeltaFiles = nDelta))
-    assert(StreamingIndexMaintenance.maintainBase(spark, root.toString, deltaDir,
+    assert(ScaleQueries.annIndex.maintainBase(spark, root, deltaDir,
       maxDeltaFiles = nDelta - 1))
     // the folded codes tree is row-identical to the cold full recode
     val folded = spark.read.parquet(codesDir.toString)
@@ -99,7 +97,7 @@ class StreamingIndexSpec extends AnyFunSuite {
       .map(_.listFiles().count(_.getName.endsWith(".parquet")))
     assert(perDir.nonEmpty && perDir.forall(_ == 1), perDir)
     assert(!new java.io.File(deltaDir).exists())
-    assert(new java.io.File(root, "_GRAFT_INDEX_COMPLETE").exists())
+    assert(ScaleQueries.annIndex.complete(root))
     // searching the folded tree still returns the cold scores
     assert(search(folded) == cold)
   }

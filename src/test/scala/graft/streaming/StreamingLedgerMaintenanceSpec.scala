@@ -32,7 +32,7 @@ class StreamingLedgerMaintenanceSpec extends AnyFunSuite {
     val deltaDir = Files.createTempDirectory("sledgdelta").toString
     val raw = spark.readStream.schema("doc_id LONG, text STRING")
       .parquet(in.toString)
-    val q = StreamingLedgerMaintenance.writer(
+    val q = ScaleQueries.ledger.writer(
         StreamingLedgerMaintenance.keyStream(raw), deltaDir,
         Files.createTempDirectory("sledgappck").toString)
       .start()
@@ -42,7 +42,7 @@ class StreamingLedgerMaintenanceSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val delta = StreamingLedgerMaintenance.deltaBuckets(spark, deltaDir, base)
+    val delta = ScaleQueries.ledger.delta(spark, deltaDir, base)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("id"), col("key"), col("band").cast("int"), col("kb").cast("long"))
         .as[(Long, String, Int, Long)].collect().toSet
@@ -75,11 +75,7 @@ class StreamingLedgerMaintenanceSpec extends AnyFunSuite {
       (2L, "streaming ledger maintenance keeps admission probes bounded over time"),
       (3L, "a third history document with enough distinct tokens to band properly"))
     val histKeys = StreamingLedgerMaintenance.keyStream(history.toDF("doc_id", "text"))
-    histKeys.repartition(col("band"), col("kb"))
-      .write.mode("overwrite").partitionBy("band", "kb")
-      .parquet(new java.io.File(root, "buckets").toString)
-    ScaleQueries.writeLedgerManifest(root)
-    Files.writeString(new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").toPath, "ok")
+    ScaleQueries.ledger.write(root, histKeys)()
 
     // stream two arrivals into a delta segment (one copies doc 2's text)
     val arrivals = Seq(
@@ -87,7 +83,7 @@ class StreamingLedgerMaintenanceSpec extends AnyFunSuite {
       (12L, "an unrelated arrival about calibrating festival drum ensembles"))
     val in = Files.createTempDirectory("sledgcin")
     val deltaDir = Files.createTempDirectory("sledgcdelta").toString
-    val q = StreamingLedgerMaintenance.writer(
+    val q = ScaleQueries.ledger.writer(
         StreamingLedgerMaintenance.keyStream(
           spark.readStream.schema("doc_id LONG, text STRING").parquet(in.toString)),
         deltaDir, Files.createTempDirectory("sledgcck").toString).start()
@@ -102,14 +98,14 @@ class StreamingLedgerMaintenanceSpec extends AnyFunSuite {
         .as[(Long, String, Int, Long)].collect().toSet
     val base = spark.read.parquet(new java.io.File(root, "buckets").toString)
     val preUnion = rows(base.unionByName(
-      StreamingLedgerMaintenance.deltaBuckets(spark, deltaDir, base)))
+      ScaleQueries.ledger.delta(spark, deltaDir, base)))
 
     // below the threshold the policy is a no-op; forcing it compacts
-    val nDelta = StreamingLedgerMaintenance.deltaFileCount(deltaDir)
+    val nDelta = ScaleQueries.ledger.deltaFileCount(deltaDir)
     assert(nDelta >= 1)
-    assert(!StreamingLedgerMaintenance.maintainBase(spark, root.toString, deltaDir,
+    assert(!ScaleQueries.ledger.maintainBase(spark, root, deltaDir,
       maxDeltaFiles = nDelta))
-    assert(StreamingLedgerMaintenance.maintainBase(spark, root.toString, deltaDir,
+    assert(ScaleQueries.ledger.maintainBase(spark, root, deltaDir,
       maxDeltaFiles = nDelta - 1))
 
     // row-identical to the cold recode of history ∪ arrivals
@@ -126,12 +122,12 @@ class StreamingLedgerMaintenanceSpec extends AnyFunSuite {
     } yield k.listFiles().count(_.getName.endsWith(".parquet"))
     assert(perDir.nonEmpty && perDir.forall(_ == 1), perDir)
     val manifest = Files.readAllLines(
-      new java.io.File(root, "manifest.txt").toPath)
+      new java.io.File(root, graft.sources.Artifact.Manifest).toPath)
     assert(manifest.size == perDir.size)
 
     // delta consumed; completion marker restored; probe result unchanged
     assert(!new java.io.File(deltaDir).exists())
-    assert(new java.io.File(root, "_GRAFT_LEDGER_COMPLETE").exists())
+    assert(ScaleQueries.ledger.complete(root))
     val hg = (history ++ arrivals).toDF("doc_id", "text")
       .select(col("doc_id").as("hist_id"),
         ScaleQueries.kmGramArray(col("text")).as("h_grams"))
