@@ -56,8 +56,8 @@ object EnrolPlan {
       .filter(col("missing_required") === 0L && col("duplicate_rut") === 0L)
       .withColumn("course_id", assignCourse)
       .withColumn("custkey", ledgerKey)
-    val fresh = candidates.join(
-      enrolments.select("custkey", "course_id").distinct(),
+    // no distinct on the ledger: an anti join ignores duplicate keys
+    val fresh = candidates.join(enrolments.select("custkey", "course_id"),
       Seq("custkey", "course_id"), "left_anti")
     val seatW = Window.partitionBy("course_id").orderBy("username_final")
     // LEFT join on the catalog: a candidate whose derived course has no

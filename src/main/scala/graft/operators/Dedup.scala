@@ -33,13 +33,6 @@ object Dedup {
     inter / (size(a) + size(b) - inter)
   }
 
-  /** Candidate pairs via banded MinHash-LSH.
-    *
-    * @param df       input with an id column and a text column
-    * @param bands    number of LSH bands
-    * @param rowsPer  signature rows per band (bands*rowsPer hashes total)
-    * @return distinct (a_id, b_id) with a_id < b_id
-    */
   /** Distinct hashed word n-grams, EXPLODED: one (id, gh) row per
     * distinct n-gram, built entirely from codegen'd expressions.
     *
@@ -121,6 +114,13 @@ object Dedup {
         keys.map(k => col(k) === col(s"__hot_$k")).reduce(_ && _), "left_anti")
     }
 
+  /** Candidate pairs via banded MinHash-LSH.
+    *
+    * @param df       input with an id column and a text column
+    * @param bands    number of LSH bands
+    * @param rowsPer  signature rows per band (bands*rowsPer hashes total)
+    * @return distinct (a_id, b_id) with a_id < b_id
+    */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         bands: Int = 8, rowsPer: Int = 4,
                         maxBucket: Int = Int.MaxValue): DataFrame =
@@ -136,30 +136,19 @@ object Dedup {
   private def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
     if (maxBucket == Int.MaxValue) banded
     else {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "key")
       banded.withColumn("__bn", count(lit(1)).over(w))
         .filter(col("__bn") <= maxBucket).drop("__bn")
     }
 
   private def candidatesFromGrams(grams: DataFrame, bands: Int, rowsPer: Int,
                                   maxBucket: Int = Int.MaxValue): DataFrame = {
-    // materialized ONCE (strategy via [[Materialize]]): the bucket
-    // self-join references the banded frame twice, and each raw reference
-    // would recompute the full signature aggregation. Right side rebuilt
-    // with plain aliased selects (fresh exprIds) — .as("l")/.as("r") over
-    // a checkpointed frame trips the AttributeMap analyzer bug.
-    val banded = Materialize(capBuckets(minhashSignatures(grams, bands * rowsPer)
+    val banded = capBuckets(minhashSignatures(grams, bands * rowsPer)
       .select(col("id"), posexplode(
         transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(slice(col("sig"), b * rowsPer + lit(1), lit(rowsPer))))))
-      .toDF("id", "band", "bucket"), maxBucket))
-    val r = banded.select(col("id").as("rid"),
-      col("band").as("rband"), col("bucket").as("rbucket"))
-    banded.join(r,
-        col("band") === col("rband") && col("bucket") === col("rbucket") &&
-          col("id") < col("rid"))
-      .select(col("id").as("a_id"), col("rid").as("b_id"))
-      .distinct()
+      .toDF("doc_id", "band", "key"), maxBucket)
+    bandCandidates(banded).select(col("doc_id").as("a_id"), col("b_id")).distinct()
   }
 
   /** MinHash-LSH near-dup pairs, verified with exact n-gram-set Jaccard
@@ -279,28 +268,62 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs: pigeonhole on four 16-bit bands (hamming ≤ 3
-    * guarantees ≥ 1 identical band), then verify with bit_count(xor).
+    * guarantees ≥ 1 identical band), then verify with the exact Hamming
+    * distance — [[hammingPairs]] over [[sliceBands]], `hamming` as a long.
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3,
                       maxBucket: Int = Int.MaxValue): DataFrame = {
     val withSig = simhashSignatures(df, idCol, textCol)
-    // one materialization of the 64-vote signature aggregation (strategy
-    // via [[Materialize]]); the band self-join would otherwise run it
-    // twice (fresh-exprId right side for the checkpointed-frame analyzer
-    // bug, as elsewhere)
-    val banded = Materialize(capBuckets(withSig.select(col("id"), col("sim"), posexplode(
-      array((0 until 4).map(b =>
-        shiftrightunsigned(col("sim"), b * 16).bitwiseAND(lit(0xFFFFL))): _*)))
-      .toDF("id", "sim", "band", "bucket"), maxBucket))
-    val r = banded.select(col("id").as("rid"), col("sim").as("rsim"),
-      col("band").as("rband"), col("bucket").as("rbucket"))
-    banded.join(r,
-        col("band") === col("rband") && col("bucket") === col("rbucket") &&
-          col("id") < col("rid"))
-      .select(col("id").as("a_id"), col("rid").as("b_id"),
-        bit_count(col("sim").bitwiseXOR(col("rsim"))).cast("long").as("hamming"))
+      .select(col("id").as("doc_id"), col("sim").as("h64"))
+    hammingPairs(sliceBands(withSig, maxBucket), maxHamming)
+      .select(col("a_id"), col("b_id"), col("hamming").cast("long").as("hamming"))
+  }
+
+  /** Four 16-bit slice bands of a 64-bit `(doc_id, h64)` frame: one
+    * `(doc_id, h64, band, key)` row per band, `key` = bits
+    * `16·band … 16·band+15`. Pigeonhole-complete for Hamming ≤ 3 (any
+    * pair within the radius agrees on ≥ 1 whole band); wider radii only
+    * lose recall. `maxBucket` caps hot `(band, key)` buckets
+    * ([[capBuckets]]).
+    */
+  def sliceBands(hashed: DataFrame, maxBucket: Int = Int.MaxValue): DataFrame =
+    capBuckets(hashed.select(col("doc_id"), col("h64"),
+        explode(sequence(lit(0), lit(3))).as("band"))
+      .withColumn("key", expr("shiftright(h64, band * 16)").bitwiseAND(lit(0xFFFFL))),
+      maxBucket)
+
+  /** The banded candidate self-join: rows of `banded` that agree on
+    * `(band, key)` — whatever produced those keys (MinHash band hashes,
+    * hash slices for SimHash and the image/video hashes, melody-contour
+    * bands for audio) — paired with `doc_id < b_id`. Each `carry`
+    * column rides along on both sides (`c` and `b_c`) for the caller's
+    * verify. Materialized once before the self-join: otherwise BOTH
+    * sides re-run the whole upstream plan (the signature aggregation,
+    * or the media synth + decode + DSP pass). The pinned frame is
+    * signature-sized (a few rows per doc), never payload-sized.
+    */
+  private[graft] def bandCandidates(banded: DataFrame, carry: String*): DataFrame = {
+    // fresh-exprId right side: .as("l")/.as("r") over a checkpointed
+    // frame trips the AttributeMap analyzer bug
+    val mat = Materialize(banded.select(("doc_id" +: carry :+ "band" :+ "key").map(col): _*))
+    val right = mat.select(col("doc_id").as("b_id") +: carry.map(c => col(c).as(s"b_$c")) :+
+      col("band").as("b_band") :+ col("key").as("b_key"): _*)
+    mat.join(right,
+      col("band") === col("b_band") && col("key") === col("b_key") &&
+        col("doc_id") < col("b_id"))
+  }
+
+  /** Near-duplicate pairs of a banded 64-bit frame `(doc_id, h64, band,
+    * key)`: [[bandCandidates]], then the exact `bit_count(xor) ≤
+    * maxHamming` verify, distinct `(a_id, b_id, hamming: int)`. The one
+    * Hamming pair join behind SimHash and the image, video and audio
+    * near-dup operators; never an all-pairs comparison.
+    */
+  def hammingPairs(banded: DataFrame, maxHamming: Int): DataFrame =
+    bandCandidates(banded, "h64")
+      .select(col("doc_id").as("a_id"), col("b_id"),
+        bit_count(col("h64").bitwiseXOR(col("b_h64"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-  }
 }

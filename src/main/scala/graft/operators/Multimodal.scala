@@ -355,25 +355,13 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Video near-duplicate pairs by the spatio-temporal fingerprint:
-    * decode → [[videoFingerprint]] per row, then the shared
-    * [[bandedHammingPairs]] join — the video sibling of the image
+    * decode → [[videoFingerprint]] per row, then the shared slice-banded
+    * [[Dedup.hammingPairs]] join — the video sibling of the image
     * aHash/pHash and audio fingerprint paths.
     */
   def videoNearDups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame =
-    bandedHammingPairs(videoHashFrame(withPayloads), maxHamming)
-
-  /** The (doc_id, h64) spatio-temporal fingerprint frame behind both
-    * video near-dup shapes — see [[imagePhashFrame]].
-    */
-  private[graft] def videoHashFrame(withPayloads: DataFrame): DataFrame = {
-    import withPayloads.sparkSession.implicits._
-    withPayloads
-      .filter(col("kind") === "video")
-      .select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, p) => videoFingerprint(p).map(h => (id, h)) })
-      .toDF("doc_id", "h64")
-  }
+    Dedup.hammingPairs(sliced(maxHamming)(hashFrame(withPayloads, "video", videoFingerprint)),
+      maxHamming).orderBy("a_id", "b_id")
 
   /** Deterministic Y4M clip for the video near-dup surface: 32×32
     * C420, 16 frames in 8 temporal segments; each (segment, band)
@@ -568,7 +556,7 @@ object Multimodal {
     * (pure double math, no order dependence); None when the bytes
     * aren't a decodable image.
     */
-  private[operators] def pHash(payload: Array[Byte]): Option[Long] =
+  private[graft] def pHash(payload: Array[Byte]): Option[Long] =
     try {
       imageIoReady
       val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
@@ -623,50 +611,13 @@ object Multimodal {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The banded Hamming pair join shared by the aHash and pHash paths:
-    * 4 bands of 16 bits, pigeonhole-complete for Hamming ≤ 3 (any pair
-    * within the radius agrees on ≥1 whole band), candidate join keyed
-    * by (band, slice), exact `bit_count(xor)` verification. Never an
-    * all-pairs comparison.
+  /** Slice banding for the dense image/video hash spaces:
+    * [[Dedup.sliceBands]], whose 4×16 pigeonhole is complete only up to
+    * Hamming 3 — a wider radius is refused rather than silently lossy.
     */
-  private def bandedHammingPairs(hashed: DataFrame, maxHamming: Int): DataFrame =
-    bandedHammingPairsRaw(hashed, maxHamming).orderBy("a_id", "b_id")
-
-  /** The unsorted core of [[bandedHammingPairs]], reused by the
-    * group-collapsed shape (whose own sort would bury this one).
-    */
-  private def bandedHammingPairsRaw(hashed: DataFrame, maxHamming: Int): DataFrame = {
+  private def sliced(maxHamming: Int): DataFrame => DataFrame = {
     require(maxHamming <= 3, s"4x16 banding is complete only to Hamming 3, got $maxHamming")
-    val banded = hashed.select(col("doc_id"), col("h64"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("key",
-        expr("shiftright(h64, band * 16)").bitwiseAND(lit(0xFFFFL)))
-    hammingVerifiedPairs(banded, maxHamming)
-  }
-
-  /** The shared candidate→verify tail: candidates are rows agreeing on
-    * (band, key) — WHATEVER produced those keys (hash slices for the
-    * dense image/video spaces, melody-contour bands for audio) — and
-    * every candidate is verified with the exact 64-bit Hamming accept.
-    */
-  private def hammingVerifiedPairs(banded: DataFrame, maxHamming: Int): DataFrame = {
-    // Materialize before the self-join: without it BOTH join sides
-    // re-evaluate the full upstream plan — for every media near-dup
-    // query that plan is the payload synth + decode + DSP signature
-    // pass, i.e. the dominant cost of the family, paid twice per run
-    // (guide §1.2: fix the algorithm before the per-task work). The
-    // banded frame is signature-sized (3-4 rows/doc of (id, h64, band,
-    // key)), never payload-sized, so nothing heavy is pinned.
-    val mat = Materialize(banded)
-    val right = mat.select(col("doc_id").as("b_id"), col("h64").as("b_hash"),
-      col("band").as("b_band"), col("key").as("b_key"))
-    mat.join(right,
-        col("band") === col("b_band") && col("key") === col("b_key") &&
-          col("doc_id") < col("b_id"))
-      .select(col("doc_id").as("a_id"), col("b_id"),
-        bit_count(col("h64").bitwiseXOR(col("b_hash"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    Dedup.sliceBands(_)
   }
 
   /** Melody-contour candidate bands for an audio signature frame
@@ -683,77 +634,77 @@ object Multimodal {
     * in the thousands (measured candidates: 1.6k at 5k docs, 21k at
     * 50k — dup-structure-sized, not corpus-squared).
     */
-  private def contourBanded(sig: DataFrame): DataFrame = {
+  private[graft] def contourBanded(sig: DataFrame): DataFrame = {
     val bands = Seq(0 -> Seq(0, 1, 2), 1 -> Seq(2, 3, 4), 2 -> Seq(4, 5, 6))
-    sig.select(col("doc_id"), col("h64"),
+    sig.select(col("doc_id"), col("h64"), col("c"),
         explode(array(bands.map { case (b, idx) =>
           struct(lit(b).as("band"),
             concat_ws(":", idx.map(i =>
               element_at(col("c"), i + 1).cast("string")): _*).as("key"))
         }: _*)).as("bk"))
-      .select(col("doc_id"), col("h64"),
+      .select(col("doc_id"), col("h64"), col("c"),
         col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-
   /** Image near-duplicate pairs by average-hash: decode → [[aHash]] per
-    * row (executor-local), then [[bandedHammingPairs]]. Undecodable
-    * payloads drop out before the join.
+    * row (executor-local), then the slice-banded [[Dedup.hammingPairs]]
+    * join. Undecodable payloads drop out before the join.
     */
-  def imageNearDups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame = {
-    import withPayloads.sparkSession.implicits._
-    val hashed = withPayloads
-      .filter(col("kind") === "image")
-      .select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, p) => aHash(p).map(h => (id, h)) })
-      .toDF("doc_id", "h64")
-    bandedHammingPairs(hashed, maxHamming)
-  }
+  def imageNearDups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame =
+    Dedup.hammingPairs(sliced(maxHamming)(hashFrame(withPayloads, "image", aHash)),
+      maxHamming).orderBy("a_id", "b_id")
 
   /** Image near-duplicate pairs by DCT-hash: decode → [[pHash]] per
-    * row, then the same [[bandedHammingPairs]] shape — the
-    * luma-warp-robust sibling of [[imageNearDups]] (run both; their
-    * edge union feeds consensus resolution like the text families).
+    * row, then the same slice-banded join — the luma-warp-robust
+    * sibling of [[imageNearDups]] (run both; their edge union feeds
+    * consensus resolution like the text families).
     */
   def imagePhashNearDups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame =
-    bandedHammingPairs(imagePhashFrame(withPayloads), maxHamming)
+    Dedup.hammingPairs(sliced(maxHamming)(hashFrame(withPayloads, "image", pHash)),
+      maxHamming).orderBy("a_id", "b_id")
 
-  /** The (doc_id, h64) pHash frame behind both image near-dup shapes —
-    * exposed so the groups recall companion can map docs to families
-    * without a second decode pass (the audio-groups pattern).
+  /** The `(doc_id, h64)` fingerprint frame of one media kind: `fp` runs
+    * per row on the executors over the rows of that `kind`; undecodable
+    * payloads (`None`) drop out. Exposed so the groups recall
+    * companions can map docs to families without a second decode pass.
+    * Audio's `(doc_id, h64, c)` signature frame is
+    * [[audioSignatureFrame]].
     */
-  private[graft] def imagePhashFrame(withPayloads: DataFrame): DataFrame = {
+  private[graft] def hashFrame(withPayloads: DataFrame, kind: String,
+      fp: Array[Byte] => Option[Long]): DataFrame = {
     import withPayloads.sparkSession.implicits._
     withPayloads
-      .filter(col("kind") === "image")
+      .filter(col("kind") === kind)
       .select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, p) => pHash(p).map(h => (id, h)) })
+      .mapPartitions(_.flatMap { case (id, p) => fp(p).map(h => (id, h)) })
       .toDF("doc_id", "h64")
   }
 
-  /** Near-duplicates in the GROUP shape for a 64-bit hash frame — the
-    * `dup_clusters`/audio-groups contract applied to the image/video
-    * hash spaces: identical hashes collapse to ONE family row
-    * (rep = min doc_id) BEFORE the banded candidate join, so output is
-    * sized by distinct hashes, never by member pairs. Exact families
-    * emit (rep, rep, 0, n, n, n·(n−1)/2); near edges join family
-    * REPRESENTATIVES through the same pigeonhole-complete 4×16 banded
-    * Hamming join as the pair shape (the accept set is identical:
-    * equal hashes band identically) and carry both family sizes.
+  /** Near-duplicates in the GROUP shape — the `dup_clusters` contract
+    * for every media signature space: rows with identical `keys`
+    * collapse to ONE family row (rep = min doc_id) BEFORE the candidate
+    * join, so output is sized by distinct signatures, never by member
+    * pairs. Exact families emit (rep, rep, 0, n, n, n·(n−1)/2); near
+    * edges join family REPRESENTATIVES through `band` and the same
+    * [[Dedup.hammingPairs]] verify as the pair shape (the accept set is
+    * identical: equal signatures band identically) and carry both
+    * family sizes. `keys` is `h64` for the image/video hashes (with
+    * slice bands) and `h64, c` for audio (with [[contourBanded]]).
     */
-  private[graft] def hashedNearDupGroups(hashed: DataFrame,
-      maxHamming: Int): DataFrame = {
-    // same four-consumer shape as the audio groups: one decode pass
-    val groups = Materialize(hashed.groupBy("h64")
+  private[graft] def nearDupGroups(sig: DataFrame, keys: Seq[String],
+      band: DataFrame => DataFrame, maxHamming: Int): DataFrame = {
+    // groups feeds FOUR consumers (exact families, the rep frame behind
+    // the banded self-join, and the two size joins); materialize it so
+    // the decode upstream runs once, not once per consumer
+    val groups = Materialize(sig.groupBy(keys.map(col): _*)
       .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_docs")))
     val exact = groups.filter(col("n_docs") >= 2)
       .select(col("rep_id").as("a_id"), col("rep_id").as("b_id"),
         lit(0).as("hamming"), col("n_docs").as("n_a"), col("n_docs").as("n_b"),
         ((col("n_docs") * (col("n_docs") - 1)) / 2).cast("long").as("n_pairs"))
-    val reps = groups.select(col("rep_id").as("doc_id"), col("h64"))
-    val near = bandedHammingPairsRaw(reps, maxHamming)
+    val reps = groups.select(col("rep_id").as("doc_id") +: keys.map(col): _*)
+    val near = Dedup.hammingPairs(band(reps), maxHamming)
       .join(groups.select(col("rep_id").as("a_id"), col("n_docs").as("n_a")), "a_id")
       .join(groups.select(col("rep_id").as("b_id"), col("n_docs").as("n_b")), "b_id")
       .select(col("a_id"), col("b_id"), col("hamming"), col("n_a"), col("n_b"),
@@ -763,11 +714,13 @@ object Multimodal {
 
   /** Image near-duplicates in the GROUP shape (pHash families). */
   def imageNearDupGroups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame =
-    hashedNearDupGroups(imagePhashFrame(withPayloads), maxHamming)
+    nearDupGroups(hashFrame(withPayloads, "image", pHash), Seq("h64"),
+      sliced(maxHamming), maxHamming)
 
   /** Video near-duplicates in the GROUP shape (TIRI-bit families). */
   def videoNearDupGroups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame =
-    hashedNearDupGroups(videoHashFrame(withPayloads), maxHamming)
+    nearDupGroups(hashFrame(withPayloads, "video", videoFingerprint), Seq("h64"),
+      sliced(maxHamming), maxHamming)
 
   /** Kind-dispatched 64-bit perceptual fingerprint — one entry point
     * for the streaming admission path ([[graft.streaming.StreamingMediaDedup]]):
@@ -1210,7 +1163,7 @@ object Multimodal {
     * Never all-pairs; undecodable payloads drop out before the join.
     */
   def audioNearDups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame =
-    hammingVerifiedPairs(contourBanded(audioSignatureFrame(withPayloads)), maxHamming)
+    Dedup.hammingPairs(contourBanded(audioSignatureFrame(withPayloads)), maxHamming)
       .orderBy("a_id", "b_id")
 
   /** The (doc_id, h64, c) signature frame behind both audio near-dup
@@ -1239,36 +1192,20 @@ object Multimodal {
     * cover, so the accept set is a superset of the near-dup pairs.
     * Emits (a_id, b_id, drift = max cell delta).
     *
-    * Scale shape: identical to the near-dup join — banded candidates
-    * (dup-structure-sized, never all-pairs), row-local verify over the
+    * Scale shape: the near-dup join's own candidate self-join
+    * ([[Dedup.bandCandidates]] over [[contourBanded]] —
+    * dup-structure-sized, never all-pairs), row-local verify over the
     * 7-cell arrays, distinct on the pair.
     */
-  def audioCoverMatches(withPayloads: DataFrame): DataFrame = {
-    // decode + FFT once: the banded frame self-joins below, and without
-    // materialization each side would re-run the full signature pass
-    val sig = Materialize(audioSignatureFrame(withPayloads))
-    val bands = Seq(0 -> Seq(0, 1, 2), 1 -> Seq(2, 3, 4), 2 -> Seq(4, 5, 6))
-    val banded = sig.select(col("doc_id"), col("c"),
-        explode(array(bands.map { case (b, idx) =>
-          struct(lit(b).as("band"),
-            concat_ws(":", idx.map(i =>
-              element_at(col("c"), i + 1).cast("string")): _*).as("key"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("c"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    val right = banded.select(col("doc_id").as("b_id"), col("c").as("b_c"),
-      col("band").as("b_band"), col("key").as("b_key"))
-    banded.join(right,
-        col("band") === col("b_band") && col("key") === col("b_key") &&
-          col("doc_id") < col("b_id"))
+  def audioCoverMatches(withPayloads: DataFrame): DataFrame =
+    Dedup.bandCandidates(contourBanded(audioSignatureFrame(withPayloads)), "c")
       .select(col("doc_id").as("a_id"), col("b_id"),
         aggregate(zip_with(col("c"), col("b_c"),
           (x, y) => abs(x - y)), lit(0), (acc, v) => greatest(acc, v))
           .as("drift"))
-      .distinct()
       .filter(col("drift") <= 1)
+      .distinct()
       .orderBy("a_id", "b_id")
-  }
 
   /** Audio near-duplicates in the GROUP shape: identical signatures
     * (share fingerprint AND contour) collapse to ONE family row
@@ -1279,32 +1216,7 @@ object Multimodal {
     * verify as the pair shape and carry both family sizes.
     */
   def audioNearDupGroups(withPayloads: DataFrame, maxHamming: Int = 3): DataFrame =
-    audioNearDupGroupsFromSignatures(audioSignatureFrame(withPayloads), maxHamming)
-
-  /** [[audioNearDupGroups]] over an ALREADY-COMPUTED signature frame —
-    * the recall companion decodes the corpus once and reuses the frame
-    * for both the group output and the doc→family mapping (the decode
-    * IS the cost of this family; a second pass was pure waste).
-    */
-  private[graft] def audioNearDupGroupsFromSignatures(sig: DataFrame,
-      maxHamming: Int): DataFrame = {
-    // groups feeds FOUR consumers (exact families, the rep frame behind
-    // the banded self-join, and the two size joins); materialize it so
-    // the decode+FFT upstream runs once, not once per consumer
-    val groups = Materialize(sig.groupBy("h64", "c")
-      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_docs")))
-    val exact = groups.filter(col("n_docs") >= 2)
-      .select(col("rep_id").as("a_id"), col("rep_id").as("b_id"),
-        lit(0).as("hamming"), col("n_docs").as("n_a"), col("n_docs").as("n_b"),
-        ((col("n_docs") * (col("n_docs") - 1)) / 2).cast("long").as("n_pairs"))
-    val reps = groups.select(col("rep_id").as("doc_id"), col("h64"), col("c"))
-    val near = hammingVerifiedPairs(contourBanded(reps), maxHamming)
-      .join(groups.select(col("rep_id").as("a_id"), col("n_docs").as("n_a")), "a_id")
-      .join(groups.select(col("rep_id").as("b_id"), col("n_docs").as("n_b")), "b_id")
-      .select(col("a_id"), col("b_id"), col("hamming"), col("n_a"), col("n_b"),
-        (col("n_a") * col("n_b")).cast("long").as("n_pairs"))
-    exact.unionByName(near).orderBy("a_id", "b_id")
-  }
+    nearDupGroups(audioSignatureFrame(withPayloads), Seq("h64", "c"), contourBanded, maxHamming)
 
   private def md5U32(s: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -199,16 +201,24 @@ object Relational {
     * partitioning-dependent.
     *
     * CONTRACT: pass SCAN-SIDE frames only (a projection/filter over a
-    * source scan, no Exchange in the plan). The partition-count probe
-    * below goes through `df.rdd`, which forces physical planning — and
+    * source scan, no shuffle in the plan); anything else is rejected
+    * with an IllegalArgumentException. The partition-count probe
+    * builds the frame's RDD, which forces physical planning — and
     * under AQE would EXECUTE any upstream shuffle stages just to read a
-    * partition count. Every current caller passes a scan-only
-    * projection, where the probe is planning-only and cheap.
+    * partition count. On a scan-only plan the probe is planning-only
+    * and cheap.
     */
   def spreadToCores(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    val shuffle = PlanWalk.find(qe.executedPlan)(_.isInstanceOf[ShuffleExchangeLike])
+    require(shuffle.isEmpty,
+      s"spreadToCores takes a scan-side frame; this plan shuffles:\n${qe.executedPlan}")
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= cores) df else df.repartition(cores)
+    if (qe.toRdd.getNumPartitions >= cores) df else df.repartition(cores)
   }
+
+  /** Plan traversal that descends into adaptive plans and query stages. */
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** Gap-based sessionization: assign a per-key session ordinal that
     * increments whenever the gap between consecutive rows (by `orderCol`,

@@ -80,6 +80,10 @@ object TextAnalysis {
     * amplification that IS the bottleneck at corpus scale. (HOFs are
     * interpreted, but md5 dominates per-gram cost either way; measured
     * faster warm at sf0.1 than the explode+window form, and shuffle-free.)
+    *
+    * Precondition: `df` is a scan-side frame (a projection/filter over
+    * a source scan, no shuffle in its plan) — it goes through
+    * [[Relational.spreadToCores]], which rejects anything else.
     */
   def winnowFingerprints(df: org.apache.spark.sql.DataFrame, idCol: String,
                          textCol: String, n: Int = 3, w: Int = 4): org.apache.spark.sql.DataFrame = {

@@ -40,7 +40,7 @@ object ScaleQueries extends QueryModule {
     * reuses [[graft.operators.Dedup.verifyJaccard]] verbatim.
     */
   def dedupMinhashMd5(spark: SparkSession, dir: String): DataFrame = {
-    val grams = Materialize(kmGramFrame(Tables.read(spark, dir, "documents")))
+    val grams = Materialize(spreadKmGramFrame(Tables.read(spark, dir, "documents")))
     // NOT materialized (measured 3.8 -> 4.4 s): the heavy 32-min
     // signature aggregation sits under an Exchange on `id` that
     // canonicalizes identically on both self-join sides, so Spark's
@@ -80,14 +80,17 @@ object ScaleQueries extends QueryModule {
   }
 
   private[queries] def kmGramFrame(d: DataFrame): DataFrame =
-    // spreadToCores: gram STRINGS + two md5s per gram is the heaviest
-    // text map stage on the surface; single-row-group scans ran it on
-    // one core (identity at scale — see Relational.spreadToCores)
-    graft.operators.Relational.spreadToCores(
-        d.select(col("doc_id").as("id"), col("text")))
-      .select(col("id"), explode(kmGramArray(col("text"))).as("gh"))
+    d.select(col("doc_id").as("id"), explode(kmGramArray(col("text"))).as("gh"))
       .withColumn("h1", conv(substring(md5(col("gh")), 1, 8), 16, 10).cast("long"))
       .withColumn("h2", conv(substring(md5(col("gh")), 9, 8), 16, 10).cast("long"))
+
+  /** [[kmGramFrame]] of a scan-side frame, spread over the cores first:
+    * gram STRINGS + two md5s per gram is the heaviest text map stage on
+    * the surface; single-row-group scans ran it on one core (identity
+    * at scale — see Relational.spreadToCores).
+    */
+  private def spreadKmGramFrame(scan: DataFrame): DataFrame =
+    kmGramFrame(graft.operators.Relational.spreadToCores(scan.select("doc_id", "text")))
 
   /** Largest prime < 2^32; h1 + 31·h2 < 2^37, no overflow. */
   private[graft] val MinhashP = 4294967291L
@@ -238,7 +241,7 @@ object ScaleQueries extends QueryModule {
 
   private def writeLedger(spark: SparkSession, dir: String)(root: java.io.File): Unit = {
     val hist = Tables.read(spark, dir, "documents").filter(!ledgerIsBatch)
-    ledger.write(root, kmBandKeys(kmGramFrame(hist)).withColumn("kb", ledgerKbCol)
+    ledger.write(root, kmBandKeys(spreadKmGramFrame(hist)).withColumn("kb", ledgerKbCol)
       .select(col("id"), col("key"), col("band"), col("kb")))()
   }
 
@@ -252,7 +255,7 @@ object ScaleQueries extends QueryModule {
       : (DataFrame, DataFrame, DataFrame) = {
     val root = ledger.ensure(dir)(writeLedger(spark, dir))
     val d = Tables.read(spark, dir, "documents")
-    val batchGrams = Materialize(kmGramFrame(d.filter(ledgerIsBatch)))
+    val batchGrams = Materialize(spreadKmGramFrame(d.filter(ledgerIsBatch)))
     val bb = Materialize(kmBandKeys(batchGrams).withColumn("kb", ledgerKbCol))
     val pairs = bb.select(ledger.packedKey).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -297,6 +300,8 @@ object ScaleQueries extends QueryModule {
         col("l_band") === col("r_band") && col("l_key") === col("r_key"))
       .select("a_id", "b_id").distinct()
     val candIds = cands.select(col("a_id").as("doc_id")).distinct()
+    // not spread: spreadToCores takes scan-side frames only, and this
+    // candidate-sized semi-join is not one
     val histGrams = kmGramFrame(d.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
     Dedup.verifyJaccard(cands, histGrams.unionByName(batchGrams), 0.5)
       .select(col("b_id").as("batch_id"), col("a_id").as("hist_id"),
@@ -402,9 +407,11 @@ object ScaleQueries extends QueryModule {
     * tradeoff curve that picked it.
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
+    simhashPairs(spark, dir).orderBy("a_id", "b_id")
+
+  private def simhashPairs(spark: SparkSession, dir: String): DataFrame =
     Dedup.simhashNearDups(Tables.read(spark, dir, "documents"), "doc_id", "text",
-        maxHamming = SimhashMaxHamming)
-      .orderBy("a_id", "b_id")
+      maxHamming = SimhashMaxHamming)
 
   /** Shipped SimHash accept threshold. The full measured curve
     * (recall/precision vs rare-gram J ≥ 0.5 truth at
@@ -2774,20 +2781,91 @@ object ScaleQueries extends QueryModule {
     ORDER BY rk"""
   }
 
-  /** The corpus ids spread over the session's cores BEFORE the heavy
-    * per-row synth+decode mapPartitions: the sf parquet files are one
-    * row group each, so the scan is ONE partition and everything narrow
-    * above it — including the whole media decode — ran on a single
-    * core. The exchange moves ids only (the payload is synthesized
-    * after), so at cluster scale it stays a trivial linear shuffle;
-    * round-robin is deterministic (sort-before-repartition is on).
-    * Delegates to [[graft.operators.Relational.spreadToCores]] for the
-    * ≥cores identity guard: at cluster scale, where the id scan already
-    * yields more partitions than defaultParallelism, the repartition
-    * would otherwise SHRINK parallelism and always pay a shuffle.
+  /** A synthesized media corpus for the near-dup surfaces: one
+    * `(doc_id, kind, payload)` row per corpus doc, the payload built by
+    * `synth(doc_id)` on the executors. The corpus parquet carries no
+    * real media; the decode paths the fingerprints run through are
+    * real. Each modality plants its near-dups by id residue
+    * ([[plantedPairs]] is the matching truth).
+    *
+    * The ids are spread over the session's cores BEFORE the heavy
+    * per-row synth+decode: the sf parquet files are one row group each,
+    * so the scan is ONE partition and everything narrow above it —
+    * including the whole media decode — would run on a single core.
+    * The exchange moves ids only (the payload is synthesized after), so
+    * at cluster scale it stays a trivial linear shuffle, and
+    * [[graft.operators.Relational.spreadToCores]] is the identity where
+    * the scan already yields ≥ cores partitions.
     */
-  private def spreadIds(spark: SparkSession, d: DataFrame): DataFrame =
-    graft.operators.Relational.spreadToCores(d)
+  private def plantedPayloads(spark: SparkSession, dir: String, kind: String)
+      (synth: Long => Array[Byte]): DataFrame = {
+    import spark.implicits._
+    graft.operators.Relational.spreadToCores(
+        Tables.read(spark, dir, "documents").select(col("doc_id"))).as[Long]
+      .mapPartitions(_.map(id => (id, kind, synth(id))))
+      .toDF("doc_id", "kind", "payload")
+  }
+
+  /** The planted `(a_id, b_id)` pairs of a synthesized media corpus:
+    * every doc with `doc_id % mod = rem` replays doc `doc_id − offset`.
+    * (7, 3, 3) is the near-dup class of all three modalities; (28, 19,
+    * 6) is audio's cover class. [[plantedRecallSql]] counts the first.
+    */
+  private def plantedPairs(spark: SparkSession, dir: String,
+      mod: Int, rem: Int, offset: Int): DataFrame = {
+    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
+    d.select(col("doc_id").as("b_id")).filter(col("b_id") % mod === rem)
+      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - offset)
+      .select("a_id", "b_id")
+  }
+
+  private def plantedDups(spark: SparkSession, dir: String): DataFrame =
+    plantedPairs(spark, dir, mod = 7, rem = 3, offset = 3)
+
+  /** Oracle of a planted-pair audit: the exact count of
+    * [[plantedPairs]]`(mod, rem, offset)` plus the literal floor `flag`.
+    */
+  private def plantedCountSql(flag: String, mod: Int, rem: Int, offset: Int): String = s"""
+    SELECT cast(count(*) AS BIGINT) AS n_true, cast(1 AS BIGINT) AS $flag
+    FROM documents a JOIN documents b ON a.doc_id = b.doc_id - $offset
+    WHERE b.doc_id % $mod = $rem"""
+
+  /** Oracle of every planted near-dup recall companion. */
+  private val plantedRecallSql: String = plantedCountSql("recall_ok", mod = 7, rem = 3, offset = 3)
+
+  /** Groups-shape recall audit for every media modality: a planted pair
+    * counts as recovered when its docs share a signature family or
+    * their family REPS are joined by a near edge of
+    * [[graft.operators.Multimodal.nearDupGroups]] over the same `fp`
+    * frame (`keys` and `band` as there). Near edges are the a_id =!=
+    * b_id rows (exact-family rows are the only a_id == b_id rows). Do
+    * NOT filter on hamming > 0: in audio's two-key space a cross-family
+    * near edge can carry hamming = 0 — same 64-bit share fingerprint
+    * h64, different contour c, exactly what a planted pitch shift that
+    * drifts one contour cell produces — and dropping those would
+    * undercount genuine recoveries. `fp` is decoded once (Materialized
+    * by the caller) and feeds both the edges and the doc→family map.
+    */
+  private def plantedGroupsRecall(spark: SparkSession, dir: String, fp: DataFrame,
+      keys: Seq[String], band: DataFrame => DataFrame, minPct: Int): DataFrame = {
+    val truth = plantedDups(spark, dir)
+    val rep = fp.join(fp.groupBy(keys.map(col): _*).agg(min("doc_id").as("rep_id")), keys)
+      .select(col("doc_id"), col("rep_id"))
+    val t2 = truth
+      .join(rep.select(col("doc_id").as("a_id"), col("rep_id").as("ra")), "a_id")
+      .join(rep.select(col("doc_id").as("b_id"), col("rep_id").as("rb")), "b_id")
+    val edges = Multimodal.nearDupGroups(fp, keys, band, maxHamming = 3)
+      .filter(col("a_id") =!= col("b_id"))
+      .select(col("a_id").as("ea"), col("b_id").as("eb"))
+    val same = t2.filter(col("ra") === col("rb")).select("a_id", "b_id")
+    val nearHit = t2.filter(col("ra") =!= col("rb"))
+      .join(edges,
+        least(col("ra"), col("rb")) === col("ea") &&
+          greatest(col("ra"), col("rb")) === col("eb"),
+        "left_semi")
+      .select("a_id", "b_id")
+    recallRow(truth, same.unionByName(nearHit), minPct = minPct)
+  }
 
   /** Synthesized audio corpus for the near-dup surface: every doc gets
     * a deterministic WAV clip ([[graft.operators.Multimodal.synthToneWav]]
@@ -2815,45 +2893,41 @@ object ScaleQueries extends QueryModule {
     * vibrato 77 %, both-sided chord 93 %, plain 92 %). Corpus recall
     * floors stay ≥ 70 (`audio_neardup_recall`).
     */
-  private def audioPayloads(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spreadIds(spark, Tables.read(spark, dir, "documents").select(col("doc_id"))).as[Long]
-      .mapPartitions(_.map { id =>
-        val dup = id % 7 == 3 && id >= 3
-        val seed = if (dup) id - 3 else id
-        val pitch = if (dup) 1.02 else 1.0
-        val vib = if (dup && id % 21 == 10) 0.02 else 0.0
-        val chord = seed % 21 == 14 // both sides of a 17-class pair chorded
-        // noisy re-recording class (dup side only, amp 0.05 ≈ 21 dB
-        // SNR): measured 91 % admits vs 92 % plain — the FFT peaks the
-        // signature reads sit far above a white-noise floor
-        val noise = if (dup && id % 28 == 24) 0.05 else 0.0
-        // inharmonic-percussive DISTRACTORS (id ≡ 5 mod 28 is never a
-        // dup nor a pair seed): timbre diversity the precision floor
-        // must absorb — rich clips must false-match NOTHING (the
-        // measured cross-timbre admit is 0/100, RichTimbre cases in
-        // VibratoChordSpec)
-        // COVER renditions (id ≡ 19 mod 28, also never dup nor seed):
-        // the same melody as doc id−6 played ×1.05 on the rich
-        // inharmonic timbre — invisible to the near-dup verify (share
-        // bits differ), the planted truth for `audio_cover`
-        val cover = id % 28 == 19 && id >= 6
-        val seed2 = if (cover) id - 6 else seed
-        val pitch2 = if (cover) 1.05 else pitch
-        val chord2 = !cover && chord
-        val rich = id % 28 == 5 || cover
-        val wav = Multimodal.synthToneWav(seed2, pitch2, vib, chord2, rich, noise)
-        // lossy-codec distribution class (round 16, dup side only,
-        // id ≡ 31 mod 35 — ≡ 3 mod 7, so always a dup): the shifted
-        // re-performance circulated as a G.711 μ-law companded file.
-        // Measured ≤ 1 share-bit cost and admit-at-plain-rate
-        // (VibratoChordSpec); may stack with the vibrato/noise classes
-        // at CRT overlaps — realistic compounding the floors absorb.
-        val mulaw = dup && id % 35 == 31
-        (id, "audio", if (mulaw) Multimodal.toMulawWav(wav) else wav)
-      })
-      .toDF("doc_id", "kind", "payload")
-  }
+  private def audioPayloads(spark: SparkSession, dir: String): DataFrame =
+    plantedPayloads(spark, dir, "audio") { id =>
+      val dup = id % 7 == 3 && id >= 3
+      val seed = if (dup) id - 3 else id
+      val pitch = if (dup) 1.02 else 1.0
+      val vib = if (dup && id % 21 == 10) 0.02 else 0.0
+      val chord = seed % 21 == 14 // both sides of a 17-class pair chorded
+      // noisy re-recording class (dup side only, amp 0.05 ≈ 21 dB
+      // SNR): measured 91 % admits vs 92 % plain — the FFT peaks the
+      // signature reads sit far above a white-noise floor
+      val noise = if (dup && id % 28 == 24) 0.05 else 0.0
+      // inharmonic-percussive DISTRACTORS (id ≡ 5 mod 28 is never a
+      // dup nor a pair seed): timbre diversity the precision floor
+      // must absorb — rich clips must false-match NOTHING (the
+      // measured cross-timbre admit is 0/100, RichTimbre cases in
+      // VibratoChordSpec)
+      // COVER renditions (id ≡ 19 mod 28, also never dup nor seed):
+      // the same melody as doc id−6 played ×1.05 on the rich
+      // inharmonic timbre — invisible to the near-dup verify (share
+      // bits differ), the planted truth for `audio_cover`
+      val cover = id % 28 == 19 && id >= 6
+      val seed2 = if (cover) id - 6 else seed
+      val pitch2 = if (cover) 1.05 else pitch
+      val chord2 = !cover && chord
+      val rich = id % 28 == 5 || cover
+      val wav = Multimodal.synthToneWav(seed2, pitch2, vib, chord2, rich, noise)
+      // lossy-codec distribution class (round 16, dup side only,
+      // id ≡ 31 mod 35 — ≡ 3 mod 7, so always a dup): the shifted
+      // re-performance circulated as a G.711 μ-law companded file.
+      // Measured ≤ 1 share-bit cost and admit-at-plain-rate
+      // (VibratoChordSpec); may stack with the vibrato/noise classes
+      // at CRT overlaps — realistic compounding the floors absorb.
+      val mulaw = dup && id % 35 == 31
+      if (mulaw) Multimodal.toMulawWav(wav) else wav
+    }
 
   /** `audio_neardup` — the audio sibling of the image aHash/pHash
     * near-dup joins: per-row signatures
@@ -2881,18 +2955,9 @@ object ScaleQueries extends QueryModule {
     * count) is the exact oracle-checked quantity; curves in
     * SCALING.md's round-14 audio section.
     */
-  def audioNearDupRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
-    val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
-      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
-      .select("a_id", "b_id")
-    recallRow(truth, audioNearDup(spark, dir).select("a_id", "b_id"), minPct = 70)
-  }
-
-  val audioNearDupRecallSql: String = """
-    SELECT cast(count(*) AS BIGINT) AS n_true, cast(1 AS BIGINT) AS recall_ok
-    FROM documents a JOIN documents b ON a.doc_id = b.doc_id - 3
-    WHERE b.doc_id % 7 = 3"""
+  def audioNearDupRecall(spark: SparkSession, dir: String): DataFrame =
+    recallRow(plantedDups(spark, dir), audioNearDup(spark, dir).select("a_id", "b_id"),
+      minPct = 70)
 
   /** `audio_cover` — melody-level (cover) matching
     * ([[graft.operators.Multimodal.audioCoverMatches]]): the contour
@@ -2912,19 +2977,9 @@ object ScaleQueries extends QueryModule {
     * pairs are recovered through the same banded candidates the
     * near-dup join uses — no new join shape, only a different verify.
     */
-  def audioCoverRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
-    val truth = d.select(col("doc_id").as("b_id"))
-      .filter(col("b_id") % 28 === 19 && col("b_id") >= 6)
-      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 6)
-      .select("a_id", "b_id")
-    recallRow(truth, audioCover(spark, dir).select("a_id", "b_id"), minPct = 70)
-  }
-
-  val audioCoverRecallSql: String = """
-    SELECT cast(count(*) AS BIGINT) AS n_true, cast(1 AS BIGINT) AS recall_ok
-    FROM documents a JOIN documents b ON a.doc_id = b.doc_id - 6
-    WHERE b.doc_id % 28 = 19"""
+  def audioCoverRecall(spark: SparkSession, dir: String): DataFrame =
+    recallRow(plantedPairs(spark, dir, mod = 28, rem = 19, offset = 6),
+      audioCover(spark, dir).select("a_id", "b_id"), minPct = 70)
 
   /** `audio_neardup_groups` — the GROUP contract for the audio family
     * ([[graft.operators.Multimodal.audioNearDupGroups]]): identical
@@ -2945,44 +3000,13 @@ object ScaleQueries extends QueryModule {
     * member pair would): a planted pair counts as recovered when its
     * docs share a family or their families are joined by a near edge.
     */
-  def audioNearDupGroupsRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
-    val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
-      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
-      .select("a_id", "b_id")
+  def audioNearDupGroupsRecall(spark: SparkSession, dir: String): DataFrame =
     // ONE decode pass: the Materialized signature frame feeds both the
     // group operator and the doc→family mapping (decode dominates this
     // family's cost; measured 4.8 s → ~2.5 s at bench SF)
-    val fp = Materialize(Multimodal.audioSignatureFrame(audioPayloads(spark, dir)))
-    val rep = fp.join(fp.groupBy("h64", "c").agg(min("doc_id").as("rep_id")),
-        Seq("h64", "c"))
-      .select(col("doc_id"), col("rep_id"))
-    val t2 = truth
-      .join(rep.select(col("doc_id").as("a_id"), col("rep_id").as("ra")), "a_id")
-      .join(rep.select(col("doc_id").as("b_id"), col("rep_id").as("rb")), "b_id")
-    // Near edges are the a_id =!= b_id rows (exact-family rows are the
-    // only a_id == b_id rows). Do NOT filter on hamming > 0: a cross-
-    // family near edge can carry hamming = 0 — same 64-bit share
-    // fingerprint h64, different contour c, exactly what a planted
-    // pitch shift that drifts one contour cell produces — and dropping
-    // those would undercount genuine recoveries.
-    val edges = Multimodal.audioNearDupGroupsFromSignatures(fp, maxHamming = 3)
-      .filter(col("a_id") =!= col("b_id"))
-      .select(col("a_id").as("ea"), col("b_id").as("eb"))
-    val same = t2.filter(col("ra") === col("rb")).select("a_id", "b_id")
-    val nearHit = t2.filter(col("ra") =!= col("rb"))
-      .join(edges,
-        least(col("ra"), col("rb")) === col("ea") &&
-          greatest(col("ra"), col("rb")) === col("eb"),
-        "left_semi")
-      .select("a_id", "b_id")
-    recallRow(truth, same.unionByName(nearHit), minPct = 70)
-  }
-
-  val audioNearDupGroupsRecallSql: String = """
-    SELECT cast(count(*) AS BIGINT) AS n_true, cast(1 AS BIGINT) AS recall_ok
-    FROM documents a JOIN documents b ON a.doc_id = b.doc_id - 3
-    WHERE b.doc_id % 7 = 3"""
+    plantedGroupsRecall(spark, dir,
+      Materialize(Multimodal.audioSignatureFrame(audioPayloads(spark, dir))),
+      Seq("h64", "c"), Multimodal.contourBanded, minPct = 70)
 
   /** `audio_neardup_precision` — the other half of the contour
     * operator's audit (round 14): every found pair must be a PLANTED
@@ -2993,18 +3017,9 @@ object ScaleQueries extends QueryModule {
     * pitch-interval sequences don't collide. Oracle-checked via the
     * planted-count + flag shape the recall companions use.
     */
-  def audioNearDupPrecision(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
-    val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
-      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
-      .select("a_id", "b_id")
-    precisionRow(truth, audioNearDup(spark, dir).select("a_id", "b_id"), minPct = 90)
-  }
-
-  val audioNearDupPrecisionSql: String = """
-    SELECT cast(count(*) AS BIGINT) AS n_true, cast(1 AS BIGINT) AS precision_ok
-    FROM documents a JOIN documents b ON a.doc_id = b.doc_id - 3
-    WHERE b.doc_id % 7 = 3"""
+  def audioNearDupPrecision(spark: SparkSession, dir: String): DataFrame =
+    precisionRow(plantedDups(spark, dir), audioNearDup(spark, dir).select("a_id", "b_id"),
+      minPct = 90)
 
   /** Synthesized image corpus for the near-dup surface: every doc gets
     * a deterministic block-pattern PNG
@@ -3018,19 +3033,13 @@ object ScaleQueries extends QueryModule {
     * (e.g. ids 10→13, 45→48: one side lossless, one lossy) — the
     * re-encode duplicate class the perceptual hash exists for.
     */
-  private def imagePayloads(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spreadIds(spark, Tables.read(spark, dir, "documents").select(col("doc_id"))).as[Long]
-      .mapPartitions(_.map { id =>
-        val dup = id % 7 == 3 && id >= 3
-        val seed = if (dup) id - 3 else id
-        val bytes =
-          if (id % 5 == 1) Multimodal.synthBlockJpeg(seed, jitter = dup)
-          else Multimodal.synthBlockPng(seed, jitter = dup)
-        (id, "image", bytes)
-      })
-      .toDF("doc_id", "kind", "payload")
-  }
+  private def imagePayloads(spark: SparkSession, dir: String): DataFrame =
+    plantedPayloads(spark, dir, "image") { id =>
+      val dup = id % 7 == 3 && id >= 3
+      val seed = if (dup) id - 3 else id
+      if (id % 5 == 1) Multimodal.synthBlockJpeg(seed, jitter = dup)
+      else Multimodal.synthBlockPng(seed, jitter = dup)
+    }
 
   /** `image_neardup` — the registered DCT-pHash near-dup join (the
     * round-12 surface had it spec-only for want of decodable corpus
@@ -3049,18 +3058,9 @@ object ScaleQueries extends QueryModule {
     * audio melody space the block-pattern space admits no coincidental
     * tail at all: found = planted ∩ (h ≤ 3), exactly.
     */
-  def imageNearDupRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
-    val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
-      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
-      .select("a_id", "b_id")
-    recallRow(truth, imageNearDup(spark, dir).select("a_id", "b_id"), minPct = 90)
-  }
-
-  val imageNearDupRecallSql: String = """
-    SELECT cast(count(*) AS BIGINT) AS n_true, cast(1 AS BIGINT) AS recall_ok
-    FROM documents a JOIN documents b ON a.doc_id = b.doc_id - 3
-    WHERE b.doc_id % 7 = 3"""
+  def imageNearDupRecall(spark: SparkSession, dir: String): DataFrame =
+    recallRow(plantedDups(spark, dir), imageNearDup(spark, dir).select("a_id", "b_id"),
+      minPct = 90)
 
   /** `image_neardup_groups` — the dup_clusters-shape GROUP contract for
     * the image modality ([[graft.operators.Multimodal.imageNearDupGroups]]):
@@ -3078,58 +3078,20 @@ object ScaleQueries extends QueryModule {
     * and the doc→family mapping.
     */
   def imageNearDupGroupsRecall(spark: SparkSession, dir: String): DataFrame =
-    hashedGroupsRecall(spark, dir,
-      Materialize(Multimodal.imagePhashFrame(imagePayloads(spark, dir))), minPct = 90)
-
-  val imageNearDupGroupsRecallSql: String = imageNearDupRecallSql
-
-  /** Shared groups-recall audit for the 64-bit hash modalities: a
-    * planted pair counts as recovered when its docs share a hash
-    * family or their family REPS are joined by a near edge (a_id =!=
-    * b_id — exact-family rows are the only a_id == b_id rows; near
-    * edges can carry hamming = 0 only in multi-key spaces, which the
-    * single-key h64 grouping excludes, but the predicate stays the
-    * audio-proven one).
-    */
-  private def hashedGroupsRecall(spark: SparkSession, dir: String,
-      fp: DataFrame, minPct: Int): DataFrame = {
-    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
-    val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
-      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
-      .select("a_id", "b_id")
-    val rep = fp.join(fp.groupBy("h64").agg(min("doc_id").as("rep_id")), Seq("h64"))
-      .select(col("doc_id"), col("rep_id"))
-    val t2 = truth
-      .join(rep.select(col("doc_id").as("a_id"), col("rep_id").as("ra")), "a_id")
-      .join(rep.select(col("doc_id").as("b_id"), col("rep_id").as("rb")), "b_id")
-    val edges = Multimodal.hashedNearDupGroups(fp, maxHamming = 3)
-      .filter(col("a_id") =!= col("b_id"))
-      .select(col("a_id").as("ea"), col("b_id").as("eb"))
-    val same = t2.filter(col("ra") === col("rb")).select("a_id", "b_id")
-    val nearHit = t2.filter(col("ra") =!= col("rb"))
-      .join(edges,
-        least(col("ra"), col("rb")) === col("ea") &&
-          greatest(col("ra"), col("rb")) === col("eb"),
-        "left_semi")
-      .select("a_id", "b_id")
-    recallRow(truth, same.unionByName(nearHit), minPct = minPct)
-  }
+    plantedGroupsRecall(spark, dir,
+      Materialize(Multimodal.hashFrame(imagePayloads(spark, dir), "image", Multimodal.pHash)),
+      Seq("h64"), Dedup.sliceBands(_), minPct = 90)
 
   /** Synthesized Y4M corpus: deterministic 32×32 C420 clips
     * ([[graft.operators.Multimodal.synthY4m]]) with the same planted
     * layout as the image/audio surfaces (doc_id % 7 = 3 replays
     * (d−3)'s clip regraded).
     */
-  private def videoPayloads(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spreadIds(spark, Tables.read(spark, dir, "documents").select(col("doc_id"))).as[Long]
-      .mapPartitions(_.map { id =>
-        val dup = id % 7 == 3 && id >= 3
-        val seed = if (dup) id - 3 else id
-        (id, "video", Multimodal.synthY4m(seed, jitter = dup))
-      })
-      .toDF("doc_id", "kind", "payload")
-  }
+  private def videoPayloads(spark: SparkSession, dir: String): DataFrame =
+    plantedPayloads(spark, dir, "video") { id =>
+      val dup = id % 7 == 3 && id >= 3
+      Multimodal.synthY4m(if (dup) id - 3 else id, jitter = dup)
+    }
 
   /** `video_neardup` — completes the modality symmetry (image pHash,
     * audio FFT fingerprint, now video): 64-bit spatio-temporal
@@ -3146,18 +3108,9 @@ object ScaleQueries extends QueryModule {
     * like the image block patterns, the (segment × band) space admits
     * no coincidental tail.
     */
-  def videoNearDupRecall(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.read(spark, dir, "documents").select(col("doc_id"))
-    val truth = d.select(col("doc_id").as("b_id")).filter(col("b_id") % 7 === 3)
-      .join(d.select(col("doc_id").as("a_id")), col("a_id") === col("b_id") - 3)
-      .select("a_id", "b_id")
-    recallRow(truth, videoNearDup(spark, dir).select("a_id", "b_id"), minPct = 90)
-  }
-
-  val videoNearDupRecallSql: String = """
-    SELECT cast(count(*) AS BIGINT) AS n_true, cast(1 AS BIGINT) AS recall_ok
-    FROM documents a JOIN documents b ON a.doc_id = b.doc_id - 3
-    WHERE b.doc_id % 7 = 3"""
+  def videoNearDupRecall(spark: SparkSession, dir: String): DataFrame =
+    recallRow(plantedDups(spark, dir), videoNearDup(spark, dir).select("a_id", "b_id"),
+      minPct = 90)
 
   /** `video_neardup_groups` — the GROUP contract for the video
     * modality (TIRI-bit families); see [[imageNearDupGroups]].
@@ -3170,10 +3123,10 @@ object ScaleQueries extends QueryModule {
     * [[imageNearDupGroupsRecall]].
     */
   def videoNearDupGroupsRecall(spark: SparkSession, dir: String): DataFrame =
-    hashedGroupsRecall(spark, dir,
-      Materialize(Multimodal.videoHashFrame(videoPayloads(spark, dir))), minPct = 90)
-
-  val videoNearDupGroupsRecallSql: String = videoNearDupRecallSql
+    plantedGroupsRecall(spark, dir,
+      Materialize(Multimodal.hashFrame(videoPayloads(spark, dir), "video",
+        Multimodal.videoFingerprint)),
+      Seq("h64"), Dedup.sliceBands(_), minPct = 90)
 
   /** Cross-modal join: text-side quality metadata joined with the
     * vector-side norm for the overlapping ids — the shape of a curation
@@ -4175,9 +4128,7 @@ object ScaleQueries extends QueryModule {
     // scan — overlapped on two driver threads (guide §2.6)
     val (truth, found) = Materialize.par2(
       raregramTruth(spark, dir)._2,
-      Dedup.simhashNearDups(Tables.read(spark, dir, "documents"), "doc_id", "text",
-          maxHamming = SimhashMaxHamming)
-        .select(col("a_id"), col("b_id")))
+      simhashPairs(spark, dir).select(col("a_id"), col("b_id")))
     recallRow(truth, found, minPct = 40)
   }
 
@@ -4197,9 +4148,7 @@ object ScaleQueries extends QueryModule {
     // inside the background thunk (precisionRow reads it twice)
     val (truth, foundM) = Materialize.par2(
       raregramTruth(spark, dir)._2,
-      Materialize(Dedup.simhashNearDups(Tables.read(spark, dir, "documents"), "doc_id", "text",
-          maxHamming = SimhashMaxHamming)
-        .select(col("a_id"), col("b_id"))))
+      Materialize(simhashPairs(spark, dir).select(col("a_id"), col("b_id"))))
     precisionRowOn(truth, foundM, minPct = 60)
   }
 
@@ -4329,14 +4278,14 @@ object ScaleQueries extends QueryModule {
     "novelty_rate" -> noveltyRateSql,
     "fingerprint_winnow" -> fingerprintWinnowSql,
     "multimodal_join" -> multimodalJoinSql,
-    "audio_neardup_recall" -> audioNearDupRecallSql,
-    "audio_cover_recall"   -> audioCoverRecallSql,
-    "audio_neardup_groups_recall" -> audioNearDupGroupsRecallSql,
-    "audio_neardup_precision" -> audioNearDupPrecisionSql,
-    "image_neardup_recall" -> imageNearDupRecallSql,
-    "image_neardup_groups_recall" -> imageNearDupGroupsRecallSql,
-    "video_neardup_recall" -> videoNearDupRecallSql,
-    "video_neardup_groups_recall" -> videoNearDupGroupsRecallSql,
+    "audio_neardup_recall" -> plantedRecallSql,
+    "audio_cover_recall"   -> plantedCountSql("recall_ok", mod = 28, rem = 19, offset = 6),
+    "audio_neardup_groups_recall" -> plantedRecallSql,
+    "audio_neardup_precision" -> plantedCountSql("precision_ok", mod = 7, rem = 3, offset = 3),
+    "image_neardup_recall" -> plantedRecallSql,
+    "image_neardup_groups_recall" -> plantedRecallSql,
+    "video_neardup_recall" -> plantedRecallSql,
+    "video_neardup_groups_recall" -> plantedRecallSql,
     "knn_brute"    -> knnBruteSql,
     "emb_near_dup" -> embNearDupSql,
     "emb_quantize" -> embQuantizeSql,

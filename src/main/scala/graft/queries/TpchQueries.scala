@@ -471,7 +471,7 @@ object TpchQueries extends QueryModule {
 
   /** TPC-H Q20: NATION_3 suppliers who shipped more than 100 units of
     * PROMO parts during 1997 — aggregate-then-semi-join (the IN
-    * subquery never materializes per-row). part and supplier broadcast.
+    * subquery never materializes per-row). part and nation broadcast.
     * NATION_3 is the one nation with suppliers at every test SF.
     */
   def q20PromoShippers(spark: SparkSession, dir: String): DataFrame = {
@@ -484,9 +484,11 @@ object TpchQueries extends QueryModule {
       .groupBy("l_suppkey")
       .agg(sum("l_quantity").as("qty"))
       .filter(col("qty") > 100)
-    broadcast(Tables.read(spark, dir, "supplier")
-        .join(broadcast(Tables.read(spark, dir, "nation")).filter(col("n_name") === "NATION_3"),
-          col("s_nationkey") === col("n_nationkey"), "left_semi"))
+    // no broadcast hint on supplier: the preserved side of a semi-join
+    // is never its build side
+    Tables.read(spark, dir, "supplier")
+      .join(broadcast(Tables.read(spark, dir, "nation")).filter(col("n_name") === "NATION_3"),
+        col("s_nationkey") === col("n_nationkey"), "left_semi")
       .join(heavy, col("s_suppkey") === col("l_suppkey"), "left_semi")
       .select("s_suppkey", "s_name")
       .orderBy("s_suppkey")

@@ -79,41 +79,24 @@ object MoodleApiSink {
     // parallel shape, matching SmtpSink with strictGlobalOrder off
     val arranged = actions.sortWithinPartitions("course_id", "seat")
     arranged.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val api = factory.create()
-        api.open()
-        var closed = false
-        def closeOnce(): Unit = if (!closed) { closed = true; api.close() }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
+      SessionLoop(rows) { val api = factory.create(); api.open(); api } (_.close()) { (api, a) =>
         // the SHARED retry ladder ([[Retry.attempt]]) — success is the
         // done flag, so an empty-message exception or a zero-retry
         // policy can never be misread as a landed call
-        val out = rows.map { a =>
-          val (ua, uok, uerr) =
-            Retry.attempt(policy, sleeper)(api.upsertUser(a))
-          val res =
-            if (!uok)
-              EnrolResult(a.course_id, a.username, "failed_user", ua, 0, uerr)
-            else {
-              val (ea, eok, eerr) =
-                Retry.attempt(policy, sleeper)(api.enrol(a))
-              if (!eok)
-                EnrolResult(a.course_id, a.username, "failed_enrol", ua, ea, eerr)
-              else EnrolResult(a.course_id, a.username, "enrolled", ua, ea, "")
-            }
-          if (policy.throttleMillis > 0) sleeper(policy.throttleMillis)
-          res
-        }
-        new Iterator[EnrolResult] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h) closeOnce()
-            h
+        val (ua, uok, uerr) =
+          Retry.attempt(policy, sleeper)(api.upsertUser(a))
+        val res =
+          if (!uok)
+            EnrolResult(a.course_id, a.username, "failed_user", ua, 0, uerr)
+          else {
+            val (ea, eok, eerr) =
+              Retry.attempt(policy, sleeper)(api.enrol(a))
+            if (!eok)
+              EnrolResult(a.course_id, a.username, "failed_enrol", ua, ea, eerr)
+            else EnrolResult(a.course_id, a.username, "enrolled", ua, ea, "")
           }
-          def next(): EnrolResult = out.next()
-        }
+        if (policy.throttleMillis > 0) sleeper(policy.throttleMillis)
+        res
       }
     }
   }
@@ -132,7 +115,7 @@ object MoodleApiSink {
                        sleeper: Long => Unit = Thread.sleep): Dataset[EnrolResult] = {
     import actions.sparkSession.implicits._
     val fresh = actions
-      .join(doneLedger.select(col("course_id"), col("username")).distinct(),
+      .join(doneLedger.select(col("course_id"), col("username")),
         Seq("course_id", "username"), "left_anti")
       .as[EnrolAction]
     uploadAll(fresh, factory, policy, sleeper)

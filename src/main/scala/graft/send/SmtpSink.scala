@@ -75,6 +75,37 @@ object Retry {
   }
 }
 
+/** The per-partition session loop both delivery sinks run
+  * ([[SmtpSink]] over a [[MailTransport]], [[MoodleApiSink]] over a
+  * [[MoodleApi]]): a non-empty partition opens ONE session (`open`),
+  * maps every row through `f` on it, and closes it exactly once —
+  * eagerly at exhaustion (so batch callers outside a task context
+  * release it promptly) or at task end, whichever comes first (a
+  * downstream limit can cut the iterator short). An empty partition
+  * opens nothing.
+  */
+private[send] object SessionLoop {
+  def apply[S, A, B](rows: Iterator[A])(open: => S)(close: S => Unit)
+      (f: (S, A) => B): Iterator[B] =
+    if (rows.isEmpty) Iterator.empty
+    else {
+      val session = open
+      var closed = false
+      def closeOnce(): Unit = if (!closed) { closed = true; close(session) }
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
+      val out = rows.map(f(session, _))
+      new Iterator[B] {
+        def hasNext: Boolean = {
+          val h = out.hasNext
+          if (!h) closeOnce()
+          h
+        }
+        def next(): B = out.next()
+      }
+    }
+}
+
 /** S5/E1-E3 — the delivery sink (`send_all`, `app.py:328-377`),
   * re-expressed as a `mapPartitions` over an ordinal-sorted Dataset that
   * RETURNS a result DataFrame (status per message) instead of mutating a
@@ -102,33 +133,12 @@ object SmtpSink {
       else mails.sortWithinPartitions("idx")
 
     arranged.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val transport = factory.create()
-        transport.open()
-        // Close exactly once when the task ends, whether the iterator is
-        // fully drained or cut short downstream (e.g. a limit).
-        var closed = false
-        def closeOnce(): Unit = if (!closed) { closed = true; transport.close() }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-        val out = rows.map { m =>
-          val (attempt, done, lastErr) =
-            Retry.attempt(policy, sleeper)(transport.send(m))
-          if (policy.throttleMillis > 0) sleeper(policy.throttleMillis)
-          if (done) SendResult(m.idx, m.email, "sent", attempt, "")
-          else SendResult(m.idx, m.email, "failed", attempt, lastErr)
-        }
-        // Also close eagerly at exhaustion (idempotent) so batch callers
-        // outside a task context release the connection promptly.
-        new Iterator[SendResult] {
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h) closeOnce()
-            h
-          }
-          def next(): SendResult = out.next()
-        }
+      SessionLoop(rows) { val t = factory.create(); t.open(); t } (_.close()) { (transport, m) =>
+        val (attempt, done, lastErr) =
+          Retry.attempt(policy, sleeper)(transport.send(m))
+        if (policy.throttleMillis > 0) sleeper(policy.throttleMillis)
+        if (done) SendResult(m.idx, m.email, "sent", attempt, "")
+        else SendResult(m.idx, m.email, "failed", attempt, lastErr)
       }
     }
   }
@@ -138,7 +148,9 @@ object SmtpSink {
     * remainder. The ledger is a plain DataFrame — e.g. the accumulated
     * `status = 'sent'` rows of previous runs persisted to parquet — and
     * the exclusion is a LEFT ANTI join (a plan, not a driver loop), so
-    * it scales with the ledger like any other join.
+    * it scales with the ledger like any other join. Duplicate ledger
+    * keys need no `distinct`: an anti join only asks whether a match
+    * exists.
     *
     * This turns crash-and-rerun into effectively-once ACROSS RUNS; task
     * retry WITHIN a run keeps the reference's at-least-once exposure
@@ -151,7 +163,7 @@ object SmtpSink {
                      sleeper: Long => Unit = Thread.sleep): Dataset[SendResult] = {
     import mails.sparkSession.implicits._
     val fresh = mails
-      .join(sentLedger.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+      .join(sentLedger.select(col(keyCol)), Seq(keyCol), "left_anti")
       .as[OutgoingMail]
     sendAll(fresh, factory, policy, strictGlobalOrder, sleeper)
   }

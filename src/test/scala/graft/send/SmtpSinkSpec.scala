@@ -96,4 +96,14 @@ class SmtpSinkSpec extends AnyFunSuite {
     assert(res2.map(_.email).toSeq == Seq("u2@x.cl"))
     assert(FakeTransport.sent.toArray.toSeq == Seq("u2@x.cl"))
   }
+
+  test("the sent-ledger anti join aggregates nothing on the ledger side") {
+    // duplicate ledger keys are harmless to an anti join, so the plan
+    // carries no distinct (an Aggregate) over the ledger
+    val ledger = Seq("u1@x.cl", "u1@x.cl", "u3@x.cl").toDF("email")
+    val plan = SmtpSink.sendAllDeduped(mails(3), new RecordingFactory, ledger)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
+      .isEmpty, plan)
+  }
 }
