@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 
 /** S4 — the Moodle-import CSV sink (`moodle.to_csv(path, index=False,
@@ -13,23 +13,34 @@ import org.apache.spark.sql.DataFrame
   */
 object MoodleCsvSink {
 
-  /** Write and return the path of the single CSV file produced. */
+  /** Write and return the path of the single CSV file produced. Spark
+    * writes into a temporary sibling of the target, so the final move is
+    * a same-filesystem rename; the sibling is removed, also on failure.
+    */
   def write(df: DataFrame, outPath: String): Path = {
-    val tmp = Files.createTempDirectory("moodle_csv").toString
-    df.coalesce(1)
-      .write.option("header", "true").option("encoding", "UTF-8")
-      .mode("overwrite").csv(tmp)
-    val listing = Files.list(Paths.get(tmp))
-    val part = try {
-      listing.toArray.map(_.toString).filter(p => p.endsWith(".csv")) match {
-        case Array(one) => Paths.get(one)
-        case other => throw new IllegalStateException(
-          s"expected exactly one part file, got ${other.length}")
-      }
-    } finally listing.close()
-    val target = Paths.get(outPath)
-    if (target.getParent != null) Files.createDirectories(target.getParent)
-    Files.move(part, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    target
+    val target = Paths.get(outPath).toAbsolutePath
+    Files.createDirectories(target.getParent)
+    val tmp = Files.createTempDirectory(target.getParent, s".${target.getFileName}.")
+    try {
+      df.coalesce(1)
+        .write.option("header", "true").option("encoding", "UTF-8")
+        .mode("overwrite").csv(tmp.toString)
+      val listing = Files.list(tmp)
+      val part = try {
+        listing.toArray.map(_.asInstanceOf[Path]).filter(_.toString.endsWith(".csv")) match {
+          case Array(one) => one
+          case other => throw new IllegalStateException(
+            s"expected exactly one part file, got ${other.length}")
+        }
+      } finally listing.close()
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+      target
+    } finally deleteTree(tmp)
+  }
+
+  private def deleteTree(dir: Path): Unit = {
+    val walk = Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+    finally walk.close()
   }
 }

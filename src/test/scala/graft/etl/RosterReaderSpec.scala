@@ -2,7 +2,7 @@ package graft.etl
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{CostGuard, TestSpark}
 
 /** S2 — positional slice + header promotion (`app.py:236-238`). */
 class RosterReaderSpec extends AnyFunSuite {
@@ -68,6 +68,87 @@ class RosterReaderSpec extends AnyFunSuite {
   test("missing header row fails fast") {
     val path = writeCsv(Seq("only,one,row"))
     intercept[IllegalArgumentException](RosterReader.read(spark, path))
+  }
+
+  private val Header = "Rut (con punto y con guión),Nombres ,Apellidos,Correo electrónico"
+
+  private def rutsAndNames(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+
+  test("a blank preamble line does not eat the first data row") {
+    // the header index counts physical lines, blank ones included, so
+    // the data rows must be counted the same way
+    val path = writeCsv(Seq("Listado oficial,,,", "", ",,,", Header,
+      "1-9,Ana,Soto,a@x.cl", "2-7,Luis,Rojas,l@x.cl"))
+    assert(rutsAndNames(RosterReader.read(spark, path)) == Seq(("1-9", "Ana"), ("2-7", "Luis")))
+  }
+
+  test("a whitespace-only preamble line is a physical line like any other") {
+    val path = writeCsv(Seq("Listado oficial,,,", " \t ", ",,,", Header,
+      "1-9,Ana,Soto,a@x.cl", "2-7,Luis,Rojas,l@x.cl"))
+    assert(rutsAndNames(RosterReader.read(spark, path)) == Seq(("1-9", "Ana"), ("2-7", "Luis")))
+  }
+
+  test("CRLF line ends; blank data lines are skipped as Spark's CSV reader skips them") {
+    val dir = Files.createTempDirectory("roster")
+    val f   = dir.resolve("roster.csv")
+    Files.writeString(f, Seq("p", "p", "p", Header, "1-9,Ana,Soto,a@x.cl", "", "  ",
+      "2-7,Luis,Rojas,l@x.cl", "").mkString("\r\n"))
+    assert(rutsAndNames(RosterReader.read(spark, f.toString)) ==
+      Seq(("1-9", "Ana"), ("2-7", "Luis")))
+  }
+
+  test("a UTF-8 BOM on line 0 is stripped before the header is promoted") {
+    val path = writeCsv(Seq("\uFEFF" + Header, "1-9,Ana,Soto,a@x.cl"))
+    val df = RosterReader.read(spark, path, headerRow = 0)
+    assert(df.columns.toSeq == Seq("rut", "nombres", "apellidos", "email"))
+    assert(rutsAndNames(df) == Seq(("1-9", "Ana")))
+  }
+
+  test("narrow rows pad, wide rows truncate, duplicate and blank headers get unique names") {
+    val path = writeCsv(Seq("p", "p", "p", "a,a,,b", "1,2,3,4,5,6", "x", "\"q,1\",r"))
+    val df = RosterReader.read(spark, path)
+    assert(df.columns.toSeq == Seq("a", "a_1", "_c2", "b"))
+    val rows = df.collect().map(_.toSeq).toSeq
+    assert(rows == Seq(Seq("1", "2", "3", "4"), Seq("x", null, null, null),
+      Seq("q,1", "r", null, null)))
+  }
+
+  test("a roster spanning several input splits keeps every row in file order") {
+    val data = (1 to 300).map(i => s"$i-0,N$i,S$i,n$i@x.cl")
+    val path = writeCsv(Seq("p", "p", "p", Header) ++ data)
+    val tiny = spark.newSession()
+    tiny.conf.set("spark.sql.files.maxPartitionBytes", "256")
+    tiny.conf.set("spark.sql.files.openCostInBytes", "0")
+    assert(tiny.read.text(path).rdd.getNumPartitions > 1, "the file must span several splits")
+    val ruts = RosterReader.read(tiny, path).collect().map(_.getString(0)).toSeq
+    assert(ruts == (1 to 300).map(i => s"$i-0"))
+  }
+
+  test("a file shorter than the header row names the row it wanted") {
+    val path = writeCsv(Seq("p", "p", "p"))
+    val e = intercept[IllegalArgumentException](RosterReader.read(spark, path))
+    assert(e.getMessage.contains("no row 3 to promote"), e.getMessage)
+  }
+
+  test("building the frame launches no Spark job and plans no RDD") {
+    val path = writeCsv(Seq("p", "p", "p", Header, "1-9,Ana,Soto,a@x.cl"))
+    val (df, jobs) = CostGuard.jobsIn(RosterReader.read(spark, path))
+    assert(jobs == 0, s"RosterReader.read launched $jobs Spark jobs")
+    assert(CostGuard.rddLeaves(df).isEmpty, df.queryExecution.analyzed)
+    // every call re-reads the file: nothing about it is remembered
+    Files.writeString(java.nio.file.Paths.get(path),
+      Seq("p", "p", "p", Header, "2-7,Luis,Rojas,l@x.cl").mkString("\n"))
+    assert(rutsAndNames(RosterReader.read(spark, path)) == Seq(("2-7", "Luis")))
+  }
+
+  test("each line is parsed once, also under a downstream filter") {
+    val path = writeCsv(Seq("p", "p", "p", Header, "1-9,Ana,Soto,a@x.cl"))
+    // MoodleNormalize filters on rut and nombres; pushed below the parse,
+    // that filter would run from_csv again for every line
+    val plan = MoodleNormalize(RosterReader.read(spark, path)).queryExecution.optimizedPlan
+    assert(plan.flatMap(_.expressions.flatMap(_.collect {
+      case e: org.apache.spark.sql.catalyst.expressions.CsvToStructs => e })).size == 1, plan)
   }
 
   // ------------------------------------------------------------- xlsx
@@ -146,6 +227,13 @@ class RosterReaderSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("legacy .xls") &&
       e.getMessage.contains("re-save the roster as .xlsx"))
+  }
+
+  test("xlsx: the frame is a local relation, built without a Spark job") {
+    val path = writeXlsx()
+    val (df, jobs) = CostGuard.jobsIn(RosterReader.readXlsx(spark, path))
+    assert(jobs == 0, s"RosterReader.readXlsx launched $jobs Spark jobs")
+    assert(CostGuard.rddLeaves(df).isEmpty, df.queryExecution.analyzed)
   }
 
   test("xlsx column reference math") {

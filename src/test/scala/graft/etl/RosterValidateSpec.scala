@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{CostGuard, TestSpark}
 
 /** Planted-collision tests for the pre-upload validation report (the
   * reference's README.md:73-74 roadmap item): required-field classes
@@ -74,5 +74,16 @@ class RosterValidateSpec extends AnyFunSuite {
     assert(ok.getAs[Long]("duplicate_rut") == 0L)
     assert(ok.getAs[Long]("missing_required") == 0L)
     assert(ok.getAs[Long]("ok") == 1L)
+  }
+
+  test("two shuffle exchanges: one on rut_t, one on uname shared by both uname windows") {
+    val plan = RosterValidate(roster(
+      ("1-1", "Ana", "Soto", "a@x.cl"), ("2-2", "Eva", "Rojas", "e@x.cl")))
+    val keys = CostGuard.shuffles(plan).map(_.outputPartitioning).map {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name))
+      case other => fail(s"expected a hash exchange, got $other")
+    }
+    assert(keys.sortBy(_.mkString) == Seq(Seq("rut_t"), Seq("uname")), plan.queryExecution.executedPlan)
   }
 }

@@ -2,7 +2,7 @@ package graft.send
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{CostGuard, TestSpark}
 
 /** Recording fake transport: failure schedule keyed by email, static
   * journals so executor-side state is visible to the test (local mode =
@@ -105,5 +105,16 @@ class SmtpSinkSpec extends AnyFunSuite {
       .queryExecution.optimizedPlan
     assert(plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
       .isEmpty, plan)
+  }
+
+  test("withOrdinals computes idx and total over one single-partition exchange") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val rendered = spark.range(0, 40, 1, 4).select(concat(lit("u"), col("id"), lit("@x.cl")).as("email"))
+    val withOrd = SmtpSink.withOrdinals(rendered, "email")
+    val parts = CostGuard.shuffles(withOrd).map(_.outputPartitioning)
+    assert(parts == Seq(org.apache.spark.sql.catalyst.plans.physical.SinglePartition),
+      withOrd.queryExecution.executedPlan)
+    assert(withOrd.select("idx", "total").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      (1 to 40).map(i => (i.toLong, 40L)))
   }
 }
