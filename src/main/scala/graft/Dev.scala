@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -15,7 +16,8 @@ import graft.sources.Tables
   *   sbt "runMain graft.Dev profile q1,q2,..."
   *     warm, then split wall-clock into CONSTRUCTION (the `fn(spark, dir)`
   *     call — blocking Materialize jobs land here), PLANNING and
-  *     EXECUTION, printing every job and stage observed
+  *     EXECUTION, printing every job and stage observed; the PROFILE
+  *     line ends with the query's job count and its construction share
   *   sbt "runMain graft.Dev audit"
   *     physical-plan operator counts of every query at sf0.001
   *   sbt "runMain graft.Dev detsweep [sfDir]"
@@ -89,13 +91,20 @@ object Dev {
   private def profile(spark: SparkSession, qs: Seq[String]): Unit = {
     val dir = sfDir
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]
+    // every job carries the phase that launched it (a local property,
+    // inherited by threads the query spawns), so the counts are per phase
+    val phaseKey = "graft.dev.phase"
+    val (phaseJobs, constructJobs) = (new AtomicInteger, new AtomicInteger)
     @volatile var collect = false
     val sb = new StringBuilder
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit = {
-        val desc = Option(s.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        jobs.put(s.jobId, (s.time, desc))
+        def prop(k: String) = Option(s.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.put(s.jobId, (s.time, prop("spark.job.description").getOrElse("")))
+        prop(phaseKey).foreach { ph =>
+          phaseJobs.incrementAndGet()
+          if (ph == "construct") constructJobs.incrementAndGet()
+        }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (collect) {
         Option(jobs.get(e.jobId)).foreach { case (t0, desc) =>
@@ -115,20 +124,25 @@ object Dev {
           }
         }
     })
+    val sc = spark.sparkContext
     for (name <- qs) {
       val fn = SparkEntry.queries(name)
       warm(spark, name, dir)
-      sb.clear(); collect = true
+      sb.clear(); phaseJobs.set(0); constructJobs.set(0); collect = true
       val t0 = System.nanoTime()
+      sc.setLocalProperty(phaseKey, "construct")
       val df = fn(spark, dir)
       val t1 = System.nanoTime()
+      sc.setLocalProperty(phaseKey, "plan")
       df.queryExecution.executedPlan // force planning
       val t2 = System.nanoTime()
+      sc.setLocalProperty(phaseKey, "exec")
       df.count()
       val t3 = System.nanoTime()
-      collect = false
+      sc.setLocalProperty(phaseKey, null)
       Thread.sleep(200) // let listener drain
-      println(f"PROFILE $name total=${(t3 - t0) / 1e9}%.3f construct=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f")
+      collect = false
+      println(f"PROFILE $name total=${(t3 - t0) / 1e9}%.3f construct=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f jobs=${phaseJobs.get} construct_jobs=${constructJobs.get}")
       print(sb.toString)
     }
   }

@@ -38,8 +38,9 @@ object DupClusters {
     *                     which would copy the same rows into a second
     *                     pinned RDD for nothing. Default false keeps the
     *                     safe behavior for arbitrary edge plans.
-    * @param smallGraphMaxEdges edge-count ceiling for the driver-side
-    *                union-find fast path. Driver cost is explicit and
+    * @param smallGraphMaxEdges DISTINCT-edge ceiling for the driver-side
+    *                union-find fast path (duplicate edges never count
+    *                toward it nor reach the driver). Driver cost is explicit and
     *                linear: collect() materializes one boxed (Long,Long)
     *                per edge (~56 B each, freed after the fold) and the
     *    	          union-find LongMap holds ≤ 2·edges entries (~24 B
@@ -68,19 +69,29 @@ object DupClusters {
     // collect, the loop after its final labels checkpoint
     val releaseEdges = if (edgesStable) () => () else Materialize.releaseHandle(e)
 
-    // Size gate on the CHECKPOINTED edges (the count is a cheap cached
-    // scan): small graphs pay ~10 Spark jobs of pure scheduling overhead
-    // in the iterative loop — union-find on the driver plus one broadcast
-    // join back is 8× faster measured, and exact either way.
+    // Size gate on the CHECKPOINTED edges: small graphs pay ~10 Spark
+    // jobs of pure scheduling overhead in the iterative loop — union-find
+    // on the driver plus one broadcast join back is 8× faster measured,
+    // and exact either way. One action both gates and collects: the
+    // DISTINCT pairs, at most cap + 1 of them, so an edge a caller
+    // repeats (keep_best's union of up to three evidence families)
+    // neither pushes a small graph over the cap nor multiplies the
+    // driver collect.
     val integralIds = e.schema.fields.forall(f =>
       f.dataType == org.apache.spark.sql.types.LongType ||
         f.dataType == org.apache.spark.sql.types.IntegerType)
-    if (integralIds && smallGraphMaxEdges > 0 && e.count() <= smallGraphMaxEdges) {
-      // the fast path's collect is the last read of e; the returned
-      // frame is nodes ⋈ a driver-built broadcast map
-      val out = smallGraphComponents(nodes, e)
-      releaseEdges()
-      return out
+    if (integralIds && smallGraphMaxEdges > 0) {
+      val spark = nodes.sparkSession
+      import spark.implicits._
+      val pairs = e.select(col("src").cast("long"), col("dst").cast("long"))
+        .distinct().limit(math.min(smallGraphMaxEdges + 1, Int.MaxValue).toInt)
+        .as[(Long, Long)].collect()
+      if (pairs.length <= smallGraphMaxEdges) {
+        // the gate's collect was the last read of e; the returned frame
+        // is nodes ⋈ a driver-built broadcast map
+        releaseEdges()
+        return smallGraphComponents(nodes, pairs)
+      }
     }
 
     val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -156,7 +167,8 @@ object DupClusters {
     * labeling returns as a broadcast map joined onto the full node set,
     * isolated nodes labeling themselves via the coalesce.
     */
-  private def smallGraphComponents(nodes: DataFrame, e: DataFrame): DataFrame = {
+  private def smallGraphComponents(nodes: DataFrame,
+                                   pairs: Array[(Long, Long)]): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
     // LongMap: unboxed open-addressed keys, no per-entry Entry objects —
@@ -169,11 +181,10 @@ object DupClusters {
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    e.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].collect().foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
+    pairs.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
     // keys snapshotted first: find() path-compresses (mutates values)
     // and iterating a mutable map while writing it is undefined
     val roots = parent.keys.toArray.map(k => k -> find(k)).toSeq

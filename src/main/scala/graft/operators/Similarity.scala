@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.functions.VectorKernels
 
 /** Embedding similarity: brute-force cosine top-k (the correctness
@@ -156,107 +158,109 @@ object Similarity {
     (if (affs.length == 1) affs.head else greatest(affs: _*)).getField("c_id")
   }
 
-  /** Distributed Lloyd k-means over a prepped vector frame, cosine
-    * affinity. Init = the k lowest-id vectors (deterministic); each
-    * round assigns every vector to its best centroid ROW-LOCALLY against
-    * the literal centroid bank (map-only — the only shuffle per round is
-    * the posexplode mean recompute) and collects the k new centroids
-    * back to the driver. Cells that lose all members drop out (classic
-    * Lloyd).
+  /** The k-means assignment objective: cosine argmax ([[bestCell]]) or
+    * L2 argmin ([[nearestL2]], i.e. argmax v·c − ‖c‖²/2 — the objective
+    * ADC's inner-product tables assume; run it on NORMALIZED vectors for
+    * cosine search). Ties take the highest c_id either way. The SQL
+    * mirror (`ScaleQueries.lloydChainSql`) reads the same value.
+    */
+  sealed trait Objective
+  object Objective {
+    case object Cosine extends Objective
+    case object L2 extends Objective
+  }
+
+  /** Cosine k-means over the prepped vector `v`: the coarse quantizer
+    * of the IVF cells, sem_dedup and the k-means reports.
     *
     * @return centroid frame (c_id, cv, cn) for [[knnIvf]] — zero
     *         lineage, safe to reference any number of times
     */
-  def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int): DataFrame =
-    lloyd(corpus, k, iters, bestCell(col("v"), col("nrm"), _))
+  def kmeansCentroids(corpus: DataFrame, k: Int): DataFrame =
+    kmeans(corpus, Seq(col("v")), k, Objective.Cosine).head
 
-  /** L2-objective Lloyd k-means — the PQ sub-quantizer trainer.
-    * Identical loop to [[kmeansCentroids]] (deterministic lowest-id
-    * init, exact-decimal mean recompute, empty cells drop) but
-    * assignment minimizes ‖v − c‖², i.e. argmax (v·c − ‖c‖²/2) — the
-    * objective ADC's inner-product tables assume. Run it on NORMALIZED
-    * vectors for cosine search ([[knnPq]]).
-    */
-  def kmeansCentroidsL2(corpus: DataFrame, k: Int, iters: Int): DataFrame =
-    lloyd(corpus, k, iters, nearestL2(col("v"), _))
-
-  /** Every PQ sub-quantizer trained in ONE distributed pass per Lloyd
-    * round, instead of one full job chain per subspace. The per-round
-    * pipeline — posexplode the row into (s, slice_s), assign each
-    * slice against its subspace's literal bank (a when-chain on s),
-    * one (s, c_id, pos)-keyed exact-decimal mean, one collect — is
-    * VALUE-IDENTICAL to running [[kmeansCentroidsL2]] per slice:
-    * means, norms (same [[norm]] kernel, applied before the collect)
-    * and tie-breaks are all per-(s, cell) and unaffected by the
-    * batching, so the generated SQL oracles mirror it chain-by-chain
-    * unchanged. What changes is the job count: 8 subspaces × (assign +
-    * recompute + collect) collapses to 1× — measured 10.9 → ~2.5 s on
-    * knn_pq at the bench SF, where fixed per-job scheduling + codegen
-    * cost dominated the tiny model frames.
+  /** The one k-means trainer: ONE Lloyd round, every slice trained in
+    * the same pass. Per slice s:
+    *   - init = the slice of the k lowest-id rows, c_id = position in
+    *     id order (deterministic);
+    *   - every row's slice is assigned ROW-LOCALLY against the literal
+    *     bank s (`objective`), so assignment is map-only;
+    *   - a cell's new centroid is the exact-decimal mean of its members
+    *     (the sum is associative, so the values are partition- and
+    *     merge-order independent; a plain double avg() is not, and a
+    *     boundary vector flipping cells would make the index
+    *     nondeterministic); cells that lose every member drop.
+    * The update is one (s, c_id, pos)-keyed aggregation, collected —
+    * slices·k·dim doubles, never corpus data, the same move MLlib's
+    * KMeans makes every round. The cell arrays and their norms (the
+    * same left-to-right [[VectorKernels.dot]] the [[norm]] column
+    * runs) are put together on the driver. Means, norms and tie-breaks
+    * are all per (s, cell), so batching the slices changes no value:
+    * the SQL mirror replays it one chain per slice.
     *
-    * @param slices slice expression per subspace, evaluated against
-    *               `corpus` rows (e.g. [[unitSlice]] of v, or a slice
-    *               of a residual column)
-    * @return one (c_id, cv, cn) bank frame per subspace (local
-    *         relations — zero lineage, safe to reference repeatedly)
+    * @param slices vector expression per slice, evaluated against
+    *               `corpus` rows (`col("v")`, a [[unitSlice]] of v, a
+    *               slice of a residual column)
+    * @return one (c_id, cv, cn) bank per slice, as local relations —
+    *         zero lineage, safe to reference any number of times
     */
-  def kmeansCentroidsL2Multi(corpus: DataFrame, slices: Seq[Column],
-                             k: Int, iters: Int): Seq[DataFrame] = {
+  def kmeans(corpus: DataFrame, slices: Seq[Column], k: Int,
+             objective: Objective): Seq[DataFrame] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val nS = slices.length
-    // init: the k lowest-id rows carry EVERY subspace's init centroid —
-    // one collect; cn via the same norm kernel as the per-slice path.
-    // c_id is the row's POSITION in the id-sorted collect (the
-    // TakeOrderedAndProject output is ordered by the sort key), not a
-    // global window: the k-row row_number() window planned a
-    // single-partition WindowExec — value-identical, but a partition-
-    // less window node in every training plan and a warning per run
+    // the k lowest-id rows carry every slice's init centroid — one
+    // collect; c_id is the row's position in the id-sorted collect
+    // (TakeOrderedAndProject returns it in sort order), which spares
+    // the k-row window a single-partition WindowExec
     val initRows = corpus.orderBy("id").limit(k)
-      .select(array(slices: _*).as("svs"),
+      .select(array(slices.map(_.cast("array<double>")): _*).as("svs"),
         array(slices.map(norm): _*).as("cns"))
       .collect()
-    // .toVector: Row.getSeq hands back mutable ArraySeq, which the
-    // local-relation encoder (toDF below) refuses — force immutable
-    var banks: Seq[Seq[(Long, Seq[Double], Double)]] = (0 until nS).map { s =>
+    // .toVector: Row.getSeq hands back a mutable ArraySeq, which the
+    // local-relation encoder (toDF below) refuses
+    val init = slices.indices.map { s =>
       initRows.toSeq.zipWithIndex.map { case (r, i) =>
-        (i.toLong,
-          r.getSeq[scala.collection.Seq[Double]](0)(s).toVector: Seq[Double],
+        (i.toLong, r.getSeq[scala.collection.Seq[Double]](0)(s).toVector: Seq[Double],
           r.getSeq[Double](1)(s))
       }
     }
-    val ex = corpus.select(posexplode(array(slices: _*)).as(Seq("s", "sv")))
-    for (_ <- 0 until iters) {
-      // interpreted fold-argmin, NOT the codegen'd greatest-chain: the
-      // when-chain over nS banks × k cells blows janino's 64 KB method
-      // limit (the compile attempt is pure waste before the fallback),
-      // and training work is MODEL-sized — nS·k dot products per row
-      // over a bounded training frame — so the interpreted path costs
-      // nothing that scales with the corpus. Same argmax + highest-c_id
-      // tie-break as [[bestCellL2]].
-      val cExpr = (1 until nS).foldLeft(
-          when(col("s") === 0, nearestL2(col("sv"), banks(0)))) {
-        (acc, s) => acc.when(col("s") === s, nearestL2(col("sv"), banks(s)))
-      }
-      val recomputed = ex.select(col("s"), cExpr.as("c_id"), col("sv"))
-        .select(col("s"), col("c_id"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy("s", "c_id", "pos")
-        .agg((sum(col("x").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
-          .cast("double") / count(lit(1)).cast("double")).as("m"))
-        .groupBy("s", "c_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("s"), col("c_id"),
-          transform(col("pm"), p => p.getField("m")).as("cv"))
-        .withColumn("cn", norm(col("cv")))
-        .collect()
-      banks = (0 until nS).map { s =>
-        recomputed.filter(_.getInt(0) == s)
-          .map(r => (r.getLong(1), r.getSeq[Double](2).toVector: Seq[Double],
-            r.getDouble(3)))
-          .sortBy(_._1).toSeq
-      }
+    val cells = lloydUpdate(corpus, slices, init, objective).collect()
+      .groupBy(r => (r.getInt(0), r.getLong(1)))
+    slices.indices.map { s =>
+      cells.toSeq.collect { case ((`s`, cid), rs) =>
+        val cv = rs.sortBy(_.getInt(2)).map(_.getDouble(3))
+        val ad = new GenericArrayData(cv)
+        (cid, cv.toVector: Seq[Double],
+          math.sqrt(VectorKernels.dot(ad, ad, aFloat = false, bFloat = false)))
+      }.sortBy(_._1).toDF("c_id", "cv", "cn")
     }
-    banks.map(b => b.toDF("c_id", "cv", "cn"))
+  }
+
+  /** The Lloyd round's update as one aggregation: (s, c_id, pos, m),
+    * the exact-decimal mean m of element `pos` over the rows whose
+    * slice s was assigned to cell c_id of `banks(s)`.
+    */
+  private[operators] def lloydUpdate(corpus: DataFrame, slices: Seq[Column],
+                                     banks: Seq[Seq[(Long, Seq[Double], Double)]],
+                                     objective: Objective): DataFrame = {
+    def assign(s: Int) = objective match {
+      case Objective.Cosine => bestCell(col("sv"), col("sn"), banks(s))
+      case Objective.L2 => nearestL2(col("sv"), banks(s))
+    }
+    val cell = slices.indices.tail.foldLeft(when(col("s") === 0, assign(0))) {
+      (acc, s) => acc.when(col("s") === s, assign(s))
+    }
+    // each step in its own projection: the slice norm once per row (not
+    // once per cell of the cosine argmax; pruned under L2), the cell once
+    // per row (a projection that holds the generator would evaluate it
+    // once per exploded element)
+    corpus.select(posexplode(array(slices: _*)).as(Seq("s", "sv")))
+      .withColumn("sn", norm(col("sv")))
+      .select(col("s"), cell.as("c_id"), col("sv"))
+      .select(col("s"), col("c_id"), posexplode(col("sv")).as(Seq("pos", "x")))
+      .groupBy("s", "c_id", "pos")
+      .agg((sum(col("x").cast(DecimalType(28, 12))).cast("double") /
+        count(lit(1)).cast("double")).as("m"))
   }
 
   /** Argmin-L2 cell id via the unrolled greatest-chain — kept ONLY as
@@ -294,40 +298,6 @@ object Similarity {
     map_from_arrays(
       array(cents.map(c => lit(c._1)): _*),
       graft.functions.CellKernels.dotTable(v, cents.map(_._2.toArray).toArray))
-
-  private def lloyd(corpus: DataFrame, k: Int, iters: Int,
-                    assign: Seq[(Long, Seq[Double], Double)] => Column): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // c_id = position in the id-sorted collect (same ids, same order as
-    // the former k-row row_number() window — minus its single-partition
-    // WindowExec node and warning)
-    var cents = corpus.orderBy("id").limit(k)
-      .select(col("v").cast("array<double>"), col("nrm"))
-      .collect().toSeq.zipWithIndex
-      .map { case (r, i) => (i.toLong, r.getSeq[Double](0), r.getDouble(1)) }
-    for (_ <- 0 until iters) {
-      val assigned = corpus.select(
-        assign(cents).as("c_id"), col("v"))
-      cents = centArrays(assigned
-        .select(col("c_id"), posexplode(col("v")))
-        .groupBy(col("c_id"), col("pos"))
-        // exact-decimal mean: the sum is associative, so centroid values
-        // are partition/merge-order independent (plain avg() over doubles
-        // is not, and a boundary vector flipping cells would make the
-        // whole index nondeterministic)
-        .agg((sum(col("col").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
-          .cast("double") / count(lit(1)).cast("double")).as("m"))
-        .groupBy("c_id")
-        // struct sort on (pos, m): pos is unique per cell, so the array
-        // comes back in element order; the tiny transform (k·dim
-        // elements total) unwraps it
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("c_id"), transform(col("pm"), p => p.getField("m")).as("cv"))
-        .withColumn("cn", norm(col("cv"))))
-    }
-    cents.toDF("c_id", "cv", "cn")
-  }
 
   /** IVF-flat ANN: partition the corpus into `nCentroids` Voronoi cells
     * (assignment = highest cosine affinity), probe the query's `nProbe`
@@ -394,7 +364,7 @@ object Similarity {
     * Cosine-correct construction (the FAISS `IndexPQ` + inner-product
     * recipe): both sides are first projected to the UNIT SPHERE
     * (û = v/‖v‖), sub-quantizers are trained with the L2 objective on
-    * the normalized slices ([[kmeansCentroidsL2]]), and the ADC score
+    * the normalized slices ([[kmeans]], [[Objective.L2]]), and the ADC score
     * is then a pure inner-product sum
     *   cos(q, x) = û_q · û_x ≈ Σ_s qtab_s[code_s]
     * with NO norm-denominator approximation at all (‖û_x‖ = 1 by
@@ -414,7 +384,7 @@ object Similarity {
     * on n_id in both lanes.
     *
     * @param subspaces (lo 1-based, len, trained sub-centroid frame) per
-    *                  subspace — [[kmeansCentroidsL2]] output on the
+    *                  subspace — [[kmeans]] L2 output on the
     *                  matching NORMALIZED slice of the corpus
     * @param rerank    ADC candidates kept per query for the exact pass
     */
@@ -514,7 +484,7 @@ object Similarity {
     *
     * @param coarse    coarse centroid frame ([[kmeansCentroids]])
     * @param subspaces (lo 1-based, len, sub-centroid frame) trained by
-    *                  [[kmeansCentroidsL2]] on the matching SLICE of
+    *                  [[kmeans]] (L2) on the matching SLICE of
     *                  [[residualFrame]]'s r column
     */
   def knnIvfPq(queries: DataFrame, corpus: DataFrame, k: Int, rerank: Int,

@@ -272,10 +272,9 @@ object ExtendedQueries extends QueryModule {
         col("source") === col("bsource") && col("fp") === col("bfp") &&
           col("id") < col("bid"))
       .select(col("id").as("src"), col("bid").as("dst")).distinct()
-      // distinct kept: a pair sharing f fingerprints emits f rows, and
-      // the multiplicity would inflate BOTH the small-graph gate's edge
-      // count and the driver collect — unlike keep_best's union, where
-      // dropping the dedup only removed an exchange
+      // distinct kept: a pair sharing f fingerprints emits f rows; the
+      // small-graph gate dedups on its own, but the distributed loop
+      // would carry the multiplicity through every hop
     // opt-in above the 100k default: this harness drives a 128 GiB
     // single-JVM driver, so 2M edges (~200 MB peak per the operator's
     // documented bound) is comfortably affordable and keeps the 8×

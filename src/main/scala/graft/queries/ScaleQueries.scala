@@ -641,23 +641,24 @@ object ScaleQueries extends QueryModule {
       .orderBy("q_id", "rk")
   }
 
-  /** IVF-flat ANN over the same query set, cells from a 1-round
-    * distributed k-means. One Lloyd round is the measured knee: the
-    * second round costs a full extra assignment+recompute job pair
-    * (~40% of the query's wall time) and moved recall by less than the
-    * spec's noise floor — `SimilaritySpec` pins iters=1 recall against
-    * the untrained skeleton so a regression can't land silently.
+  /** IVF-flat ANN over the same query set, cells from the one-round
+    * distributed k-means ([[Similarity.kmeans]]). One Lloyd round is the
+    * measured knee: a second round cost a full extra assignment +
+    * recompute pass (~40% of the query's wall time) and moved recall by
+    * less than the spec's noise floor — `SimilaritySpec` pins the
+    * trained recall against the untrained skeleton so a regression
+    * can't land silently.
     */
   def knnIvf(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % 50 === 0)
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val cent = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     Similarity.knnIvf(queries, prepped, k = 5, nProbe = 6, centroids = Some(cent))
       .orderBy("q_id", "rk")
   }
 
   /** High-recall IVF operating point: same 16-cell index, 12 probes.
-    * The measured curve (nProbe → recall at k=16/iters=1):
+    * The measured curve (nProbe → recall at k=16, one Lloyd round):
     * 4→50-68%, 6→66-82%, 8→76-88%, 12→94.5-98% across the three SFs —
     * and a 32-cell index is strictly WORSE at equal corpus fraction
     * here (cells of ~15 vectors scatter true neighbors), so the ≥90%
@@ -669,7 +670,7 @@ object ScaleQueries extends QueryModule {
   def knnIvfHi(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % 50 === 0)
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val cent = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     Similarity.knnIvf(queries, prepped, k = 5, nProbe = 12, centroids = Some(cent))
       .orderBy("q_id", "rk")
   }
@@ -691,11 +692,11 @@ object ScaleQueries extends QueryModule {
     *   standard grid: subK=16 r=50 → 64/68/47, subK=32 r=100 →
     *     96/92/68.5 (sf0.001/0.01/0.1) — recall at fixed (subK, rerank)
     *     DEGRADES with corpus size, so the bench SF binds the config
-    *   deep grid: subK=64 it=1 r=100 → 98/98/80.5;
+    *   deep grid: subK=64 r=100 → 98/98/80.5;
     *     r=200 → 100/100/93.5; 3 Lloyd rounds ≈ +0-2pp (not worth a
-    *     3-round SQL mirror)
-    * Shipped (subK=64, iters=1, rerank=200) = 100/100/93.5 ⇒ floor 70
-    * holds at every SF with ≥23pp margin.
+    *     3-round SQL mirror, so every codebook trains one round)
+    * Shipped (subK=64, rerank=200) = 100/100/93.5 ⇒ floor 70 holds at
+    * every SF with ≥23pp margin.
     */
   private[graft] val PqSubLen = 8
   private[graft] val PqSubK = 64
@@ -709,8 +710,6 @@ object ScaleQueries extends QueryModule {
     */
   private[graft] val PqMinPct = 70
   private[graft] val IvfPqMinPct = 70
-  /** Lloyd rounds for the PQ sub-quantizers (both paths). */
-  private[graft] val PqSubIters = 1
   private[graft] val pqLos: Seq[Int] = (0 until Dim / PqSubLen).map(1 + _ * PqSubLen)
 
   /** The search codebooks as [[Similarity.knnPq]] inputs — kept as a
@@ -719,9 +718,9 @@ object ScaleQueries extends QueryModule {
     * (the cosine-correct PQ construction; see [[Similarity.knnPq]]).
     */
   private[graft] def pqSubspaces(corpus: DataFrame): Seq[(Int, Int, DataFrame)] = {
-    val banks = Similarity.kmeansCentroidsL2Multi(corpus,
+    val banks = Similarity.kmeans(corpus,
       pqLos.map(lo => Similarity.unitSlice(col("v"), col("nrm"), lo, PqSubLen)),
-      k = PqSubK, iters = PqSubIters)
+      PqSubK, Similarity.Objective.L2)
     pqLos.zip(banks).map { case (lo, b) => (lo, PqSubLen, b) }
   }
 
@@ -739,7 +738,7 @@ object ScaleQueries extends QueryModule {
   }
 
   /** IVF+PQ probe count — 12 of 16 cells. Recall sweep, measured
-    * 2026-08-14 at the shipped residual codebooks (iters=1 coarse,
+    * 2026-08-14 at the shipped residual codebooks (one-round coarse,
     * subK=64, rerank=200):
     *   shipped point → 98/96/82 at sf0.001/0.01/0.1 ⇒ floor 70 holds
     *   at every SF with ≥12pp margin
@@ -748,37 +747,40 @@ object ScaleQueries extends QueryModule {
     *   ceiling at 12 probes is 98/96/94.5)
     * A 3-round coarse or sub-quantizer moves the shipped point ≤2pp
     * (deep grid) and would cost a 3-round unrolled SQL mirror, so the
-    * composed index shares knn_ivf's 1-round coarse chain.
+    * composed index shares knn_ivf's one-round coarse chain.
     */
   private[graft] val IvfPqNProbe = 12
 
-  /** Coarse cell count of the composed IVF+PQ index — shared by the
-    * inline-trained [[knnIvfPq]], the persisted index ([[annIndexBuild]]
-    * trains and writes one directory per cell) and its streaming
-    * compaction, so `ann_index_search` stays result-identical to
-    * `knn_ivfpq`.
+  /** Cell count of the coarse k-means quantizer — the one 16-cell
+    * index under knn_ivf(_hi), knn_ivfpq, the persisted index
+    * ([[annIndexBuild]] writes one directory per cell) and its streaming
+    * compaction, knn_filtered, ann_index_stats/health, sem_dedup,
+    * cluster_purity and kmeans_quality. The Spark trainers and the
+    * coarse SQL chain ([[coarseChainSql]]) both read it, so
+    * `ann_index_search` stays result-identical to `knn_ivfpq` and no
+    * oracle can drift from its query.
     */
-  private[graft] val IvfPqCells = 16
+  private[graft] val CoarseCells = 16
 
   /** The persisted IVF+PQ index ([[Artifact]]): (n_id, code0..7, label)
     * rows under `codes/c_id=…`, one directory per coarse cell, plus the
     * `coarse/` and `subs/` codebook sidecars.
     */
   private[graft] val annIndex = Artifact("graft-ann-index", "embeddings", "codes",
-    Seq("c_id" -> IvfPqCells))
+    Seq("c_id" -> CoarseCells))
 
-  /** Residual sub-codebooks for the composed IVF+PQ index — trained by
-    * [[Similarity.kmeansCentroidsL2]] on SLICES of
-    * [[Similarity.residualFrame]]'s r column (û − ĉ(cell)), sharing
-    * the flat-PQ layout constants so the two PQ paths differ ONLY in
-    * what they quantize.
+  /** Residual sub-codebooks for the composed IVF+PQ index — every
+    * subspace trained in one [[Similarity.kmeans]] pass (L2 objective)
+    * on SLICES of [[Similarity.residualFrame]]'s r column (û − ĉ(cell)),
+    * sharing the flat-PQ layout constants so the two PQ paths differ
+    * ONLY in what they quantize.
     */
   private[graft] def ivfPqSubspaces(corpus: DataFrame,
                                     coarse: DataFrame): Seq[(Int, Int, DataFrame)] = {
     val resid = Similarity.residualFrame(corpus, coarse)
-    val banks = Similarity.kmeansCentroidsL2Multi(resid,
+    val banks = Similarity.kmeans(resid,
       pqLos.map(lo => slice(col("r"), lo, PqSubLen)),
-      k = PqSubK, iters = PqSubIters)
+      PqSubK, Similarity.Objective.L2)
     pqLos.zip(banks).map { case (lo, b) => (lo, PqSubLen, b) }
   }
 
@@ -792,7 +794,7 @@ object ScaleQueries extends QueryModule {
   def knnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
     val queries = prepped.filter(col("id") % PqQueryMod === 0)
-    val coarse = Similarity.kmeansCentroids(prepped, k = IvfPqCells, iters = 1)
+    val coarse = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     Similarity.knnIvfPq(queries, prepped, k = PqK, rerank = PqRerank,
       nProbe = IvfPqNProbe, coarse = coarse,
       subspaces = ivfPqSubspaces(prepped, coarse)).orderBy("q_id", "rk")
@@ -847,7 +849,7 @@ object ScaleQueries extends QueryModule {
   private def writeAnnIndex(spark: SparkSession, dir: String)(root: java.io.File): Unit = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding",
       keep = Seq("label"))
-    val coarse = Similarity.kmeansCentroids(prepped, k = IvfPqCells, iters = 1)
+    val coarse = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     val subs = ivfPqSubspaces(prepped, coarse)
     annIndex.write(root, Similarity.ivfPqCodes(prepped, coarse, subs, keep = Seq("label"))) {
       coarse.write.mode("overwrite")
@@ -1142,7 +1144,7 @@ object ScaleQueries extends QueryModule {
     */
   def annIndexHealth(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val cent = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     val isNew = col("id") % HealthNewMod === 0
     Similarity.assignCellsWithAffinity(prepped, cent)
       .withColumn("is_new", isNew)
@@ -1169,7 +1171,7 @@ object ScaleQueries extends QueryModule {
     */
   def annIndexStats(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val cent = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     val counts = Similarity.assignCells(prepped, cent)
       .groupBy("c_id").agg(count(lit(1)).as("n_vecs"))
     val tot = counts.agg(
@@ -1183,7 +1185,7 @@ object ScaleQueries extends QueryModule {
       .orderBy("c_id")
   }
 
-  lazy val annIndexStatsSql: String = s"""$kmeansCtePrefix,
+  val annIndexStatsSql: String = s"""WITH $coarseChainSql,
     counts AS (SELECT c_id, CAST(count(*) AS BIGINT) AS n_vecs FROM a2 GROUP BY c_id),
     tot AS (
       SELECT CAST(sum(n_vecs) AS BIGINT) AS n,
@@ -1195,9 +1197,7 @@ object ScaleQueries extends QueryModule {
       round(CAST(k AS DOUBLE) * s2 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS imbalance
     FROM counts, tot ORDER BY c_id"""
 
-  // lazy: kmeansCtePrefix is declared later in the file, and a strict
-  // val here would read null during object init
-  lazy val annIndexHealthSql: String = s"""$kmeansCtePrefix,
+  val annIndexHealthSql: String = s"""WITH $coarseChainSql,
     aff AS (
       SELECT a.vec_id, a.c_id,
         list_inner_product(a.v, c.cv) / (a.nrm * c.cn) AS aff,
@@ -3180,44 +3180,60 @@ object ScaleQueries extends QueryModule {
     */
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val cent = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     Similarity.semDedup(prepped, cent, tau = 0.35).orderBy("vec_id")
   }
 
-  /** Shared unrolled k-means CTE prefix (init from the 16 lowest ids,
-    * ONE Lloyd round with exact-decimal means, final assignment with
-    * the (aff desc, c_id desc) tie-break) — the exact mirror of
-    * `Similarity.kmeansCentroids(k=16, iters=1)` + `assignCells`, used
-    * by the sem_dedup AND knn_ivf oracles.
+  /** The SQL mirror of [[Similarity.kmeans]] for ONE slice, as a CTE
+    * chain suffixed by `suffix`: `e` = `source` (vec_id, v, any carried
+    * columns) plus its norm; `c0` = the k lowest-id vectors (init);
+    * `a1` = first assignment under `objective` (ties to the highest
+    * c_id); `m1`/`c1` = the exact-decimal member means, i.e. the trained
+    * bank (empty cells drop); `a2` = every `e` row with its final cell.
+    * Every k-means oracle is built from it: the coarse chain
+    * ([[coarseChainSql]]) under sem_dedup, cluster_purity,
+    * kmeans_quality, knn_ivf(_hi), the IVF+PQ family and
+    * ann_index_stats/health; one chain per subspace under emb_pq,
+    * knn_pq and the IVF+PQ residual codebooks. Each CTE header starts
+    * its own line, as [[materializeCtes]] requires.
     */
-  private val kmeansCtePrefix: String = """
-    WITH e AS (
-      SELECT vec_id, label, cast(embedding AS DOUBLE[]) AS v,
-        sqrt(list_inner_product(cast(embedding AS DOUBLE[]), cast(embedding AS DOUBLE[]))) AS nrm
-      FROM embeddings),
-    c0 AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c_id, v AS cv, nrm AS cn
-      FROM (SELECT * FROM e ORDER BY vec_id LIMIT 16)),
-    a1 AS (
-      SELECT e.vec_id, e.v, c.c_id,
+  private def lloydChainSql(suffix: String, k: Int, source: String,
+                            objective: Similarity.Objective): String = {
+    val score = objective match {
+      case Similarity.Objective.Cosine => "list_inner_product(e.v, c.cv) / (e.nrm * c.cn)"
+      case Similarity.Objective.L2 => "(list_inner_product(e.v, c.cv) - c.cn * c.cn / 2)"
+    }
+    def assign(name: String, bank: String, cols: String) = s"""$name$suffix AS (
+      SELECT $cols, c.c_id,
         row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY list_inner_product(e.v, c.cv) / (e.nrm * c.cn) DESC, c.c_id DESC) AS rn
-      FROM e, c0 c
-      QUALIFY rn = 1),
-    m1 AS (
+          ORDER BY $score DESC, c.c_id DESC) AS rn
+      FROM e$suffix e, $bank$suffix c
+      QUALIFY rn = 1)"""
+    s"""e$suffix AS (
+      SELECT *, sqrt(list_inner_product(v, v)) AS nrm FROM ($source)),
+    c0$suffix AS (
+      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c_id, v AS cv, nrm AS cn
+      FROM (SELECT * FROM e$suffix ORDER BY vec_id LIMIT $k)),
+    ${assign("a1", "c0", "e.vec_id, e.v")},
+    m1$suffix AS (
       SELECT c_id, i,
         cast(sum(cast(v[i] AS DECIMAL(28,12))) AS DOUBLE) / cast(count(*) AS DOUBLE) AS m
-      FROM a1, unnest(range(1, len(v) + 1)) AS u(i)
+      FROM a1$suffix, unnest(range(1, len(v) + 1)) AS u(i)
       GROUP BY c_id, i),
-    c1 AS (
+    c1$suffix AS (
       SELECT c_id, cv, sqrt(list_inner_product(cv, cv)) AS cn
-      FROM (SELECT c_id, list(m ORDER BY i) AS cv FROM m1 GROUP BY c_id)),
-    a2 AS (
-      SELECT e.vec_id, e.label, e.v, e.nrm, c.c_id,
-        row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY list_inner_product(e.v, c.cv) / (e.nrm * c.cn) DESC, c.c_id DESC) AS rn
-      FROM e, c1 c
-      QUALIFY rn = 1)"""
+      FROM (SELECT c_id, list(m ORDER BY i) AS cv FROM m1$suffix GROUP BY c_id)),
+    ${assign("a2", "c1", "e.*")}"""
+  }
+
+  /** The coarse chain (no suffix): cosine k-means with [[CoarseCells]]
+    * cells over the whole embedding, `a2` carrying (vec_id, label, v,
+    * nrm, c_id) — the mirror of `Similarity.kmeansCentroids(k =
+    * CoarseCells)` + `assignCells`.
+    */
+  private def coarseChainSql: String = lloydChainSql("", CoarseCells,
+    "SELECT vec_id, label, cast(embedding AS DOUBLE[]) AS v FROM embeddings",
+    Similarity.Objective.Cosine)
 
   /** Clustering-vs-labels agreement report: purity (share of vectors
     * under their cell's majority label) and the Adjusted Rand Index of
@@ -3234,7 +3250,7 @@ object ScaleQueries extends QueryModule {
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.read(spark, dir, "embeddings")
     val prepped = Similarity.prep(raw, "vec_id", "embedding")
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val cent = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     val lab = Similarity.assignCells(prepped, cent)
       .select(col("id"), col("c_id"))
       .join(raw.select(col("vec_id").as("id"), col("label")), Seq("id"))
@@ -3260,7 +3276,7 @@ object ScaleQueries extends QueryModule {
             - lit(2) * col("a2") * col("b2")).cast("double"), 6).as("ari"))
   }
 
-  val clusterPuritySql: String = s"""$kmeansCtePrefix,
+  val clusterPuritySql: String = s"""WITH $coarseChainSql,
     lab AS (
       SELECT a.vec_id, a.c_id, emb.label
       FROM a2 a JOIN embeddings emb ON a.vec_id = emb.vec_id),
@@ -3289,7 +3305,7 @@ object ScaleQueries extends QueryModule {
     * JVM-specific hashing anywhere — centroids, probes and scores are
     * pure arithmetic.
     */
-  private def knnIvfOracleSql(nProbe: Int): String = s"""$kmeansCtePrefix,
+  private def knnIvfOracleSql(nProbe: Int): String = s"""WITH $coarseChainSql,
     probe AS (
       SELECT q.vec_id AS q_id, q.v AS qv, q.nrm AS qn, c.c_id
       FROM e q, c1 c
@@ -3310,62 +3326,6 @@ object ScaleQueries extends QueryModule {
 
   val knnIvfSql: String = knnIvfOracleSql(nProbe = 6)
   val knnIvfHiSql: String = knnIvfOracleSql(nProbe = 12)
-
-  /** Exact SQL mirror of [[knnPq]], GENERATED from the same constants
-    * the Spark query reads (`PqSubLen`/`PqSubK`/`PqK`/`PqRerank`/
-    * `PqQueryMod`/`pqLos`), so the two sides cannot desync: one
-    * codebook chain per subspace, per-query ADC tables as a query ×
-    * sub-centroid join, the ADC cut at rank `PqRerank` with the
-    * (a desc, n_id) tie-break, then the exact re-rank — every score
-    * pure arithmetic, so the whole search path hash-checks like the
-    * IVF family. Addition order matches the Spark side's left-assoc
-    * reduce exactly.
-    */
-  /** One L2-k-means CTE chain over a NORMALIZED sub-vector slice —
-    * the SQL mirror of [[pqSubspaces]]'s training + [[Similarity
-    * .knnPq]]'s code assignment for subspace `s`: unit-sphere
-    * projection, deterministic lowest-id init, L2 assignment
-    * (argmax v·c − ‖c‖²/2, ties to highest c_id), exact-decimal mean
-    * recompute, final assignment (a2\$s = the code column). Distinct
-    * from [[pqChainCore]], which mirrors the emb_pq REPORT's
-    * cosine-trained codebooks.
-    */
-  private def pqL2ChainCore(lo: Int, hi: Int, s: Int, k: Int): String =
-    pqL2Chain(s, k, s"""
-      SELECT vec_id, list_transform(cast(embedding[$lo:$hi] AS DOUBLE[]),
-        x -> x / sqrt(list_inner_product(cast(embedding AS DOUBLE[]),
-                                         cast(embedding AS DOUBLE[])))) AS v
-      FROM embeddings""")
-
-  /** The same L2 chain over an arbitrary (vec_id, v) source — the
-    * residual-slice variant feeds the IVF+PQ oracle.
-    */
-  private def pqL2Chain(s: Int, k: Int, srcSql: String): String = s"""
-    e$s AS ($srcSql),
-    c0$s AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c_id, v AS cv,
-        sqrt(list_inner_product(v, v)) AS cn
-      FROM (SELECT * FROM e$s ORDER BY vec_id LIMIT $k)),
-    a1$s AS (
-      SELECT e.vec_id, e.v, c.c_id,
-        row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY (list_inner_product(e.v, c.cv) - c.cn * c.cn / 2) DESC, c.c_id DESC) AS rn
-      FROM e$s e, c0$s c
-      QUALIFY rn = 1),
-    m1$s AS (
-      SELECT c_id, i,
-        cast(sum(cast(v[i] AS DECIMAL(28,12))) AS DOUBLE) / cast(count(*) AS DOUBLE) AS m
-      FROM a1$s, unnest(range(1, len(v) + 1)) AS u(i)
-      GROUP BY c_id, i),
-    c1$s AS (
-      SELECT c_id, cv, sqrt(list_inner_product(cv, cv)) AS cn
-      FROM (SELECT c_id, list(m ORDER BY i) AS cv FROM m1$s GROUP BY c_id)),
-    a2$s AS (
-      SELECT e.vec_id, c.c_id,
-        row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY (list_inner_product(e.v, c.cv) - c.cn * c.cn / 2) DESC, c.c_id DESC) AS rn
-      FROM e$s e, c1$s c
-      QUALIFY rn = 1)"""
 
   /** DuckDB planner guard for the generated many-CTE oracles: mark
     * every CTE `AS MATERIALIZED`. Without it DuckDB 1.0 INLINES each
@@ -3394,10 +3354,28 @@ object ScaleQueries extends QueryModule {
     out
   }
 
+  /** Exact SQL mirror of [[knnPq]], GENERATED from the same constants
+    * the Spark query reads (`PqSubLen`/`PqSubK`/`PqK`/`PqRerank`/
+    * `PqQueryMod`/`pqLos`), so the two sides cannot desync: one L2
+    * [[lloydChainSql]] per NORMALIZED subspace slice (the mirror of
+    * [[pqSubspaces]]'s training + [[Similarity.knnPq]]'s code
+    * assignment, a2\$s = the code column), per-query ADC tables as a
+    * query × sub-centroid join, the ADC cut at rank `PqRerank` with the
+    * (a desc, n_id) tie-break, then the exact re-rank — every score
+    * pure arithmetic, so the whole search path hash-checks like the
+    * IVF family. Addition order matches the Spark side's left-assoc
+    * reduce exactly.
+    */
   val knnPqSql: String = materializeCtes {
     val ss = pqLos.indices
-    val chains = ss.map(s =>
-      pqL2ChainCore(pqLos(s), pqLos(s) + PqSubLen - 1, s, PqSubK).trim)
+    val chains = ss.map { s =>
+      val (lo, hi) = (pqLos(s), pqLos(s) + PqSubLen - 1)
+      lloydChainSql(s.toString, PqSubK, s"""SELECT vec_id,
+        list_transform(cast(embedding[$lo:$hi] AS DOUBLE[]),
+          x -> x / sqrt(list_inner_product(cast(embedding AS DOUBLE[]),
+                                           cast(embedding AS DOUBLE[])))) AS v
+        FROM embeddings""", Similarity.Objective.L2)
+    }
     val codeCols = ss.map(s => s"a2$s.c_id AS code$s").mkString(", ")
     val codeJoins = ss.tail.map(s => s"JOIN a2$s USING (vec_id)").mkString("\n      ")
     val qds = ss.map(s => s"""qd$s AS (
@@ -3444,8 +3422,8 @@ object ScaleQueries extends QueryModule {
 
   /** Shared CTE block for the IVF+PQ coding chain — the residual frame
     * (û − ĉ(cell), element divisions in the same order as
-    * `Similarity.residualFrame`), one residual-slice L2 chain per
-    * subspace ([[pqL2Chain]]) and the final `codes` CTE. `withLabel`
+    * `Similarity.residualFrame`), one residual-slice L2
+    * [[lloydChainSql]] per subspace and the final `codes` CTE. `withLabel`
     * mirrors [[Similarity.ivfPqCodes]]'s `keep = Seq("label")`: the
     * attribute column rides IN the codes rows, exactly as the
     * persisted index stores it.
@@ -3460,8 +3438,9 @@ object ScaleQueries extends QueryModule {
         list_transform(range(1, len(a.v) + 1),
           i -> a.v[i] / a.nrm - c.cv[i] / c.cn) AS r
       FROM a2 a JOIN c1 c ON a.c_id = c.c_id)"""
-    val chains = ss.map(s => pqL2Chain(s, PqSubK,
-      s"SELECT vec_id, r[${pqLos(s)}:${pqLos(s) + PqSubLen - 1}] AS v FROM resid").trim)
+    val chains = ss.map(s => lloydChainSql(s.toString, PqSubK,
+      s"SELECT vec_id, r[${pqLos(s)}:${pqLos(s) + PqSubLen - 1}] AS v FROM resid",
+      Similarity.Objective.L2))
     val codeCols = ss.map(s => s"a2$s.c_id AS code$s").mkString(", ")
     val codeJoins = ss.map(s => s"JOIN a2$s USING (vec_id)").mkString("\n      ")
     s"""${residSql.trim},
@@ -3475,7 +3454,7 @@ object ScaleQueries extends QueryModule {
     * persisted-index `ann_index_search`, which CellIndexSpec/
     * AnnIndexSpec prove value-identical), generated from the shared PQ
     * constants plus [[IvfPqNProbe]]: the coarse k-means chain
-    * (`kmeansCtePrefix`), the coding chain ([[ivfPqCodesCtes]]), probes
+    * ([[coarseChainSql]]), the coding chain ([[ivfPqCodesCtes]]), probes
     * with the (aff desc, c_id ASC) tie-break carrying the exact
     * affinity term, ADC = aff + Σ d_s in the Spark side's left-assoc
     * order, rank cuts tie-broken on n_id in both lanes.
@@ -3501,7 +3480,7 @@ object ScaleQueries extends QueryModule {
     val dSum = ss.map(s => s"q$s.d").mkString(" + ")
     val qlab = if (labelFiltered) ", q.label AS qlab" else ""
     val labFilter = if (labelFiltered) " AND x.label = p.qlab" else ""
-    s"""$kmeansCtePrefix,
+    s"""WITH $coarseChainSql,
     ${ivfPqCodesCtes(labelFiltered)},
     probe AS (
       SELECT q.vec_id AS q_id, c.c_id$qlab,
@@ -3554,14 +3533,14 @@ object ScaleQueries extends QueryModule {
     */
   val annIndexBuildSql: String = materializeCtes {
     val codeCols = pqLos.indices.map(s => s"code$s").mkString(", ")
-    s"""$kmeansCtePrefix,
+    s"""WITH $coarseChainSql,
     ${ivfPqCodesCtes(withLabel = true)}
     SELECT vec_id AS n_id, $codeCols, label, cast(c_id AS BIGINT) AS c_id
     FROM codes
     ORDER BY n_id"""
   }
 
-  val semDedupSql: String = s"""$kmeansCtePrefix,
+  val semDedupSql: String = s"""WITH $coarseChainSql,
     dropped AS (
       SELECT DISTINCT b.vec_id
       FROM a2 a JOIN a2 b ON a.c_id = b.c_id AND a.vec_id < b.vec_id
@@ -3582,7 +3561,7 @@ object ScaleQueries extends QueryModule {
     */
   def kmeansQuality(spark: SparkSession, dir: String): DataFrame = {
     val prepped = Similarity.prep(Tables.read(spark, dir, "embeddings"), "vec_id", "embedding")
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val cent = Similarity.kmeansCentroids(prepped, k = CoarseCells)
     Similarity.assignCells(prepped, cent)
       .join(broadcast(cent), "c_id")
       .select(col("c_id"),
@@ -3595,7 +3574,7 @@ object ScaleQueries extends QueryModule {
       .orderBy("c_id")
   }
 
-  val kmeansQualitySql: String = s"""$kmeansCtePrefix
+  val kmeansQualitySql: String = s"""WITH $coarseChainSql
     SELECT cast(a.c_id AS BIGINT) AS c_id, count(*) AS n_members,
       round(cast(sum(cast(list_inner_product(a.v, c.cv) / (a.nrm * c.cn)
           AS DECIMAL(28,12))) AS DOUBLE) / cast(count(*) AS DOUBLE), 6) AS mean_aff
@@ -3612,23 +3591,25 @@ object ScaleQueries extends QueryModule {
     * vector's code is its pair of cell ids (here 2×3 bits vs 64×32-bit
     * floats), distances decompose per subspace, and this report is the
     * codebook-health check run after training. Everything reuses the
-    * [[Similarity]] machinery — map-only assignment against literal
-    * sub-centroid banks, one aggregation per subspace; the whole
+    * [[Similarity]] machinery — both codebooks trained in one
+    * [[Similarity.kmeans]] pass, map-only assignment against literal
+    * sub-centroid banks, one aggregation for the report; the whole
     * pipeline (slices included) unrolls into SQL like `sem_dedup`.
     */
   def embPq(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.read(spark, dir, "embeddings")
-    def subReport(lo: Int, len: Int, space: Int): DataFrame = {
-      val prepped = raw.select(col("vec_id").as("id"),
-          slice(col("embedding"), lit(lo), lit(len)).as("v"))
-        .withColumn("nrm", Similarity.norm(col("v")))
-      val cent = Similarity.kmeansCentroids(prepped, k = 8, iters = 1)
-      Similarity.assignCells(prepped, cent)
-        .join(broadcast(cent), "c_id")
-        .select(lit(space.toLong).as("subspace"), col("c_id"),
-          Similarity.cosine(col("v"), col("nrm"), col("cv"), col("cn")).as("aff"))
-    }
-    subReport(1, 32, 0).union(subReport(33, 32, 1))
+    def sliced(lo: Int) = slice(col("embedding"), lit(lo), lit(EmbPqSubLen))
+    val banks = Similarity.kmeans(raw.select(col("vec_id").as("id") +:
+        EmbPqLos.zipWithIndex.map { case (lo, s) => sliced(lo).as(s"v$s") }: _*),
+      EmbPqLos.indices.map(s => col(s"v$s")), k = EmbPqSubK, Similarity.Objective.Cosine)
+    EmbPqLos.zip(banks).zipWithIndex.map { case ((lo, cent), space) =>
+        val prepped = raw.select(col("vec_id").as("id"), sliced(lo).as("v"))
+          .withColumn("nrm", Similarity.norm(col("v")))
+        Similarity.assignCells(prepped, cent)
+          .join(broadcast(cent), "c_id")
+          .select(lit(space.toLong).as("subspace"), col("c_id"),
+            Similarity.cosine(col("v"), col("nrm"), col("cv"), col("cn")).as("aff"))
+      }.reduce(_ union _)
       .groupBy("subspace", "c_id")
       .agg(count(lit(1)).as("n_members"),
         round(sum(col("aff").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
@@ -3638,44 +3619,20 @@ object ScaleQueries extends QueryModule {
       .orderBy("subspace", "c_id")
   }
 
-  /** One k-means CTE chain over a sub-vector slice, tables suffixed by
-    * subspace — the [[kmeansCtePrefix]] shape parameterized for PQ.
-    * [[pqChainCore]] ends at the trained codebook (c1\$s) + final
-    * assignment (a2\$s) — shared by the emb_pq report and the knn_pq
-    * search oracle; [[pqChain]] appends the report aggregate.
+  /** emb_pq's report layout: 2 subspaces of 32 dims (1-based starts),
+    * 8 cells each — read by the query and its oracle.
     */
-  private def pqChainCore(lo: Int, hi: Int, s: Int, k: Int = 8): String = s"""
-    e$s AS (
-      SELECT vec_id, cast(embedding[$lo:$hi] AS DOUBLE[]) AS v,
-        sqrt(list_inner_product(cast(embedding[$lo:$hi] AS DOUBLE[]),
-          cast(embedding[$lo:$hi] AS DOUBLE[]))) AS nrm
-      FROM embeddings),
-    c0$s AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c_id, v AS cv, nrm AS cn
-      FROM (SELECT * FROM e$s ORDER BY vec_id LIMIT $k)),
-    a1$s AS (
-      SELECT e.vec_id, e.v, c.c_id,
-        row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY list_inner_product(e.v, c.cv) / (e.nrm * c.cn) DESC, c.c_id DESC) AS rn
-      FROM e$s e, c0$s c
-      QUALIFY rn = 1),
-    m1$s AS (
-      SELECT c_id, i,
-        cast(sum(cast(v[i] AS DECIMAL(28,12))) AS DOUBLE) / cast(count(*) AS DOUBLE) AS m
-      FROM a1$s, unnest(range(1, len(v) + 1)) AS u(i)
-      GROUP BY c_id, i),
-    c1$s AS (
-      SELECT c_id, cv, sqrt(list_inner_product(cv, cv)) AS cn
-      FROM (SELECT c_id, list(m ORDER BY i) AS cv FROM m1$s GROUP BY c_id)),
-    a2$s AS (
-      SELECT e.vec_id, e.v, e.nrm, c.c_id,
-        row_number() OVER (PARTITION BY e.vec_id
-          ORDER BY list_inner_product(e.v, c.cv) / (e.nrm * c.cn) DESC, c.c_id DESC) AS rn
-      FROM e$s e, c1$s c
-      QUALIFY rn = 1)"""
+  private val EmbPqLos = Seq(1, 33)
+  private val EmbPqSubLen = 32
+  private val EmbPqSubK = 8
 
-  private def pqChain(lo: Int, hi: Int, s: Int): String =
-    pqChainCore(lo, hi, s) + s""",
+  /** One cosine [[lloydChainSql]] per emb_pq subspace plus its report
+    * aggregate q\$s.
+    */
+  private def pqChain(lo: Int, s: Int): String =
+    lloydChainSql(s.toString, EmbPqSubK,
+      s"SELECT vec_id, cast(embedding[$lo:${lo + EmbPqSubLen - 1}] AS DOUBLE[]) AS v FROM embeddings",
+      Similarity.Objective.Cosine) + s""",
     q$s AS (
       SELECT cast($s AS BIGINT) AS subspace, cast(a.c_id AS BIGINT) AS c_id,
         count(*) AS n_members,
@@ -3685,8 +3642,7 @@ object ScaleQueries extends QueryModule {
       GROUP BY a.c_id)"""
 
   val embPqSql: String = s"""
-    WITH ${pqChain(1, 32, 0).trim},
-    ${pqChain(33, 64, 1).trim}
+    WITH ${EmbPqLos.zipWithIndex.map { case (lo, s) => pqChain(lo, s) }.mkString(",\n    ")}
     SELECT * FROM (SELECT * FROM q0 UNION ALL SELECT * FROM q1)
     ORDER BY subspace, c_id"""
 
@@ -3901,7 +3857,7 @@ object ScaleQueries extends QueryModule {
   def knnIvfRecall(spark: SparkSession, dir: String): DataFrame =
     annRecall(spark, dir, (q, c) =>
       Similarity.knnIvf(q, c, k = 5, nProbe = 6,
-        centroids = Some(Similarity.kmeansCentroids(c, k = 16, iters = 1))),
+        centroids = Some(Similarity.kmeansCentroids(c, k = CoarseCells))),
       minPct = 50)
 
   /** The ≥90%-recall configuration a production consumer expects to
@@ -3910,7 +3866,7 @@ object ScaleQueries extends QueryModule {
   def knnIvfHiRecall(spark: SparkSession, dir: String): DataFrame =
     annRecall(spark, dir, (q, c) =>
       Similarity.knnIvf(q, c, k = 5, nProbe = 12,
-        centroids = Some(Similarity.kmeansCentroids(c, k = 16, iters = 1))),
+        centroids = Some(Similarity.kmeansCentroids(c, k = CoarseCells))),
       minPct = 90)
 
   /** Recall floor for the PQ/ADC path at the search-grade codebooks
@@ -3932,7 +3888,7 @@ object ScaleQueries extends QueryModule {
     */
   def knnIvfPqRecall(spark: SparkSession, dir: String): DataFrame =
     annRecall(spark, dir, (q, c) => {
-      val coarse = Similarity.kmeansCentroids(c, k = IvfPqCells, iters = 1)
+      val coarse = Similarity.kmeansCentroids(c, k = CoarseCells)
       Similarity.knnIvfPq(q, c, k = PqK, rerank = PqRerank,
         nProbe = IvfPqNProbe, coarse = coarse,
         subspaces = ivfPqSubspaces(c, coarse))

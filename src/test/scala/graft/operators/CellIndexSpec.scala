@@ -17,7 +17,7 @@ class CellIndexSpec extends AnyFunSuite {
   private lazy val prepped = Similarity.prep(
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"),
     "vec_id", "embedding")
-  private lazy val coarse = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+  private lazy val coarse = Similarity.kmeansCentroids(prepped, k = 16)
   private lazy val subs =
     graft.queries.ScaleQueries.ivfPqSubspaces(prepped, coarse)
   private lazy val indexDir = {

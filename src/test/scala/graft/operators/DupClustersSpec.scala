@@ -53,5 +53,21 @@ class DupClustersSpec extends AnyFunSuite {
     }
   }
 
+  test("the small-graph gate counts distinct edges: a graph under the cap stays on the driver however often its edges repeat") {
+    val nodes = (1L to 7L).toDF("id")
+    val distinct = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L))
+    // 12 edge rows, 4 distinct: the raw count is over a cap of 6
+    val edges = Seq.fill(3)(distinct).flatten.toDF("src", "dst")
+    val driver = DupClusters.connectedComponents(nodes, edges, smallGraphMaxEdges = 6L)
+    val loop = DupClusters.connectedComponents(nodes, edges, smallGraphMaxEdges = 0L)
+    // the driver path joins the nodes to a local map; the loop's labels
+    // are checkpointed RDDs
+    assert(graft.CostGuard.rddLeaves(driver).isEmpty)
+    assert(graft.CostGuard.rddLeaves(loop).nonEmpty)
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L, 7L -> 6L)
+    assert(driver.as[(Long, Long)].collect().toMap == expected)
+    assert(loop.as[(Long, Long)].collect().toMap == expected)
+  }
+
   private implicit def rangeToSeq(r: scala.collection.immutable.NumericRange[Long]): Seq[Long] = r.toSeq
 }

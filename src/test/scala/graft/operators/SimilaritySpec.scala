@@ -71,8 +71,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(recall >= 0.3, s"IVF recall too low: $recall")
 
     // trained cells must not LOSE recall vs the untrained sample skeleton
-    // — at iters=1, the training depth the knn_ivf query actually runs
-    val cent = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    // — at the one Lloyd round the knn_ivf query actually runs
+    val cent = Similarity.kmeansCentroids(prepped, k = 16)
     val trained = Similarity.knnIvf(queries, prepped, k = 5, nProbe = 4,
         centroids = Some(cent))
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
@@ -107,7 +107,7 @@ class SimilaritySpec extends AnyFunSuite {
     val brute = Similarity.knnBrute(queries, prepped, k = 5)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val sq = graft.queries.ScaleQueries
-    val coarse = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val coarse = Similarity.kmeansCentroids(prepped, k = 16)
     val ivfpq = Similarity.knnIvfPq(queries, prepped, k = sq.PqK,
         rerank = sq.PqRerank, nProbe = sq.IvfPqNProbe, coarse = coarse,
         subspaces = sq.ivfPqSubspaces(prepped, coarse))
@@ -127,9 +127,8 @@ class SimilaritySpec extends AnyFunSuite {
     val prepped = Similarity.prep(embs, "vec_id", "embedding")
     val sub = prepped.select(col("id"),
       Similarity.unitSlice(col("v"), col("nrm"), 1, 8).as("sv"))
-    val bankDf = Similarity.kmeansCentroidsL2(
-      sub.select(col("id"), col("sv").as("v"))
-        .withColumn("nrm", Similarity.norm(col("v"))), k = 64, iters = 1)
+    val bankDf = Similarity.kmeans(sub, Seq(col("sv")), k = 64,
+      Similarity.Objective.L2).head
     val bank = bankDf.select(col("c_id").cast("long"), col("cv").cast("array<double>"), col("cn"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))).toSeq
     val mism = sub.select(
@@ -152,7 +151,7 @@ class SimilaritySpec extends AnyFunSuite {
     // centroid must reproduce v/‖v‖ to double round-off
     val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val prepped = Similarity.prep(embs, "vec_id", "embedding")
-    val coarse = Similarity.kmeansCentroids(prepped, k = 16, iters = 1)
+    val coarse = Similarity.kmeansCentroids(prepped, k = 16)
     val resid = Similarity.residualFrame(prepped, coarse)
     val cents = coarse.select(col("c_id"), col("cv"), col("cn")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).map(_ / r.getDouble(2))))

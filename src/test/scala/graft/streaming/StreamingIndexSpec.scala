@@ -30,7 +30,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     val queries = corpus.filter(col("id") % 50 === 0)
     // frozen model: trained ONCE on the full corpus (the add-after-train
     // contract — appends never retrain)
-    val coarse = Similarity.kmeansCentroids(corpus, k = 16, iters = 1)
+    val coarse = Similarity.kmeansCentroids(corpus, k = 16)
     val subs = ScaleQueries.ivfPqSubspaces(corpus, coarse)
     val fullCodes = Similarity.ivfPqCodes(corpus, coarse, subs)
 
