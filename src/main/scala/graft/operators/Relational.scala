@@ -35,8 +35,10 @@ object Relational {
     * side gets `salt = hash(spreadBy) % salts` row-locally, the dim
     * replicates `salts`× via a literal salt frame, and the join runs on
     * (keys :+ salt) — so a hot key's fact rows spread over `salts`
-    * reducers BY CONSTRUCTION. This is the [[graft.queries
-    * .CorpusQueries.pagerankOn]] defense extracted: AQE's skew split
+    * reducers BY CONSTRUCTION. It is the one salting path: the
+    * co-purchase rounds ([[graft.queries.CorpusQueries.pagerankOn]],
+    * [[graft.queries.CommunityQueries.labelPropOn]]), `hits_rank` and
+    * the LM queries all join through it. AQE's skew split
     * cannot fire on these joins because the dim child is
     * Sort(HashAggregate(ShuffleQueryStage)), never the bare
     * Sort(ShuffleQueryStage) the OptimizeSkewedJoin pattern requires

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.Materialize
+import graft.operators.{Graph, Materialize, Relational}
 import graft.sources.Tables
 
 /** Community/mixture operators: synchronous label propagation over the
@@ -22,22 +22,18 @@ object CommunityQueries extends QueryModule {
   val LpIters = 3
 
   /** Synchronous label propagation (community detection) on the BULK
-    * part co-purchase graph (same subgraph as `triangle_count`): seed
-    * label = node id; each round every node adopts its neighbors' MODE
-    * label, smallest label on ties — fully deterministic, so the final
-    * labeling is oracle-checkable (the oracle unrolls the same rounds
-    * as CTEs).
+    * part co-purchase graph ([[Graph]]): seed label = node id; each
+    * round every node adopts its neighbors' MODE label, smallest label
+    * on ties — fully deterministic, so the final labeling is
+    * oracle-checkable (the oracle unrolls the same rounds as CTEs).
     *
-    * Scale shape: edges expand ROW-LOCALLY from per-order part sets
-    * (one aggregation exchange, no orderkey self-join) and materialize
-    * once; each round is one join keyed by dst + one (node, label)
-    * aggregation + a per-node window — all hash-partitioned by node,
-    * nothing global, no driver state. The standard distributed LPA
-    * step.
+    * Scale shape: the mirrored edge frame materializes once; each round
+    * is one join keyed by dst + one (node, label) aggregation + a
+    * per-node window — all hash-partitioned by node, nothing global, no
+    * driver state. The standard distributed LPA step.
     */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
-    labelPropOn(Tables.read(spark, dir, "lineitem")
-      .filter(col("l_quantity") >= 45))
+    labelPropOn(Graph.bulk(Tables.read(spark, dir, "lineitem")))
 
   /** [[labelProp]] core over an (l_orderkey, l_partkey) co-purchase
     * frame — factored so `GraphSkewSpec` can plant a power-law hub.
@@ -45,47 +41,24 @@ object CommunityQueries extends QueryModule {
     * @param salts hub fan-out for the per-round adoption join, same
     *   contract as `CorpusQueries.pagerankOn`: 1 (default) joins on
     *   plain `dst` (label side auto-broadcastable — optimal while the
-    *   node set fits the threshold); > 1 salts edges by hash(src) and
-    *   replicates the label side via a literal crossJoin, splitting a
-    *   hub DST across `salts` reducers in the SMJ regime. Results are
-    *   salt-invariant.
+    *   node set fits the threshold); > 1 routes the join through
+    *   [[Relational.saltedDimJoin]], salting edges by hash(src) and
+    *   replicating the label side, which splits a hub DST across
+    *   `salts` reducers in the SMJ regime. Results are salt-invariant.
     */
-  def labelPropOn(li: DataFrame, salts: Int = 1): DataFrame = {
-    val perOrder = li
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-    // oriented dedup then mirror: the distinct shuffles half the pairs
-    // (same trick as pagerank's edge build)
-    val oriented = perOrder
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .distinct()
-    labelPropOnOriented(oriented, salts)
-  }
+  def labelPropOn(li: DataFrame, salts: Int = 1): DataFrame =
+    propagate(Materialize(Graph.mirrored(Graph.oriented(li))), salts)
 
-  /** [[labelPropOn]] over a PREBUILT oriented (src < dst, distinct)
-    * edge frame — lets [[modularity]] reuse its materialized edge build
-    * instead of recomputing the pair expansion (one full edge-build
-    * scan saved; at corpus scale the edge build dominates the LPA
-    * rounds).
+  /** The [[LpIters]] rounds over a materialized mirrored edge frame —
+    * [[modularity]] hands in the mirror of its own oriented build.
     */
-  private[queries] def labelPropOnOriented(oriented: DataFrame, salts: Int = 1): DataFrame = {
-    val edges = Materialize {
-      val e = oriented.union(oriented.select(col("dst"), col("src")))
-      if (salts == 1) e
-      else e.withColumn("salt", pmod(hash(col("src")), lit(salts)))
-    }
+  private def propagate(edges: DataFrame, salts: Int = 1): DataFrame = {
     var lbl = edges.select(col("src").as("node")).distinct()
       .withColumn("lab", col("node"))
-    val saltDf = oriented.sparkSession.range(0, salts.toLong)
-      .select(col("id").cast("int").as("salt"))
-    val joinKeys = if (salts == 1) Seq("dst") else Seq("dst", "salt")
-    def lblSide(df: DataFrame): DataFrame =
-      if (salts == 1) df else df.crossJoin(saltDf)
     val w = Window.partitionBy("node").orderBy(col("c").desc, col("lab"))
     for (_ <- 1 to LpIters) {
-      lbl = edges
-        .join(lblSide(lbl.select(col("node").as("dst"), col("lab"))), joinKeys)
+      lbl = Relational.saltedDimJoin(edges,
+          lbl.select(col("node").as("dst"), col("lab")), Seq("dst"), col("src"), salts)
         .groupBy(col("src").as("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(w))
@@ -95,18 +68,12 @@ object CommunityQueries extends QueryModule {
     lbl.orderBy("node")
   }
 
-  /** Shared unrolled-LPA CTE chain (`li`, `e` mirrored edge list, `l0`
-    * … `l{LpIters}`) — the oracle prefix for [[labelProp]] AND the
+  /** Shared unrolled-LPA CTE chain ([[Graph.edgeCtes]], `l0` …
+    * `l{LpIters}`) — the oracle prefix for [[labelProp]] AND the
     * community input of [[modularity]].
     */
   private val lpCtes: String = {
-    val base = """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_quantity >= 45),
-    e AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+    val base = s"""${Graph.edgeCtes(bulk = true)},
     l0 AS (SELECT DISTINCT src AS node, src AS lab FROM e)"""
     val iters = (1 to LpIters).map { k =>
       s"""
@@ -279,37 +246,29 @@ object CommunityQueries extends QueryModule {
     * Scale shape: the mirrored edge frame materializes ONCE; each round
     * is two semi-joins (src/dst membership) + one degree aggregation,
     * all keyed — active sets only shrink, so per-round cost is
-    * monotone non-increasing.
+    * monotone non-increasing. A round's active set is released once the
+    * next one has materialized, so the call leaves two frames pinned
+    * (the edges and the last active set, both read by the result).
     */
   def kCore(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.read(spark, dir, "lineitem")
-      .filter(col("l_quantity") >= 45)
-    val perOrder = li.groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-    val oriented = perOrder
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .distinct()
-    val edges = Materialize(oriented.union(oriented.select(col("dst"), col("src"))))
+    val edges = Materialize(Graph.mirrored(
+      Graph.oriented(Graph.bulk(Tables.read(spark, dir, "lineitem")))))
     def degreeIn(active: DataFrame): DataFrame = edges
       .join(active.select(col("node").as("src")), Seq("src"), "left_semi")
       .join(active.select(col("node").as("dst")), Seq("dst"), "left_semi")
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     var active = edges.select(col("src").as("node")).distinct()
-    for (_ <- 1 to KcoreRounds)
+    for (_ <- 1 to KcoreRounds) {
+      val release = Materialize.releaseHandle(active)
       active = Materialize(degreeIn(active)
         .filter(col("deg") >= KcoreK).select("node"))
+      release()
+    }
     degreeIn(active).orderBy("node")
   }
 
   val kCoreSql: String = {
-    val base = """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_quantity >= 45),
-    e AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+    val base = s"""${Graph.edgeCtes(bulk = true)},
     a0 AS (SELECT DISTINCT src AS node FROM e)"""
     val iters = (1 to KcoreRounds).map { r =>
       s"""
@@ -340,21 +299,14 @@ object CommunityQueries extends QueryModule {
     * semi-join (frontier ⋈ edges), one distinct, one anti-join against
     * the settled set — all hash-partitioned by node, no driver state;
     * the settled frame materializes per round so the 4-round lineage
-    * stays linear. Unvisited nodes are simply absent (no infinity
-    * sentinel to disagree on).
+    * stays linear, and the superseded one is released. The result reads
+    * only the last settled frame, so the edges are released too and the
+    * call leaves one frame pinned. Unvisited nodes are simply absent (no
+    * infinity sentinel to disagree on).
     */
   def bfsHops(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.read(spark, dir, "lineitem")
-      .filter(col("l_quantity") >= 45)
-    val perOrder = li.groupBy("l_orderkey")
-      .agg(collect_set(col("l_partkey")).as("ps"))
-    val oriented = perOrder
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .distinct()
-    val edges = Materialize(
-      oriented.union(oriented.select(col("dst"), col("src"))))
+    val edges = Materialize(Graph.mirrored(
+      Graph.oriented(Graph.bulk(Tables.read(spark, dir, "lineitem")))))
     var dist = Materialize(
       edges.agg(min("src").as("node")).withColumn("d", lit(0L)))
     for (r <- 1 to BfsRounds) {
@@ -364,19 +316,16 @@ object CommunityQueries extends QueryModule {
         .select(col("dst").as("node")).distinct()
         .join(dist.select("node"), Seq("node"), "left_anti")
         .withColumn("d", lit(r.toLong))
+      val release = Materialize.releaseHandle(dist)
       dist = Materialize(dist.union(frontier))
+      release()
     }
+    Materialize.releaseHandle(edges)()
     dist.orderBy("node")
   }
 
   val bfsHopsSql: String = {
-    val base = """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_quantity >= 45),
-    e AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+    val base = s"""${Graph.edgeCtes(bulk = true)},
     d0 AS (SELECT min(src) AS node, 0 AS d FROM e)"""
     val iters = (1 to BfsRounds).map { r =>
       s"""
@@ -392,24 +341,6 @@ object CommunityQueries extends QueryModule {
   }
 
   // ---------------------------------------------------- graph structure
-
-  /** Oriented (src < dst, distinct) and mirrored co-purchase edge
-    * frames for the BULK subgraph — the build every graph query here
-    * shares (row-local pair expansion, oriented distinct, map-side
-    * mirror).
-    */
-  private def bulkEdges(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val li = Tables.read(spark, dir, "lineitem")
-      .filter(col("l_quantity") >= 45)
-    val perOrder = li.groupBy("l_orderkey")
-      .agg(collect_set(col("l_partkey")).as("ps"))
-    val oriented = Materialize(perOrder
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .distinct())
-    (oriented, oriented.union(oriented.select(col("dst"), col("src"))))
-  }
 
   /** Newman modularity of the [[labelProp]] communities, decomposed per
     * community: Q_c = e_c/m − (d_c/2m)² with e_c = intra-community
@@ -428,10 +359,13 @@ object CommunityQueries extends QueryModule {
     */
   def modularity(spark: SparkSession, dir: String): DataFrame = {
     val dec: Column => Column = _.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    val (oriented, edges) = bulkEdges(spark, dir)
-    val lbl = Materialize(labelPropOnOriented(oriented))
+    // the label rounds reuse this oriented build: one edge-build scan
+    // instead of two (at corpus scale the build dominates the rounds)
+    val oriented = Materialize(Graph.oriented(Graph.bulk(Tables.read(spark, dir, "lineitem"))))
+    val edges = Graph.mirrored(oriented)
+    val lbl = Materialize(propagate(Materialize(edges)))
     val m = oriented.agg(count(lit(1)).as("m"))
-    val dsum = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    val dsum = Graph.degree(edges)
       .join(lbl, "node")
       .groupBy("lab").agg(count(lit(1)).as("n_nodes"), sum("deg").as("d_sum"))
     val ein = oriented
@@ -453,9 +387,7 @@ object CommunityQueries extends QueryModule {
   }
 
   val modularitySql: String = s"""$lpCtes,
-    und AS (SELECT src, dst FROM e WHERE src < dst),
     m AS (SELECT count(*) AS m FROM und),
-    deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
     ds AS (
       SELECT lab, count(*) AS n_nodes, cast(sum(deg) AS BIGINT) AS d_sum
       FROM deg JOIN l$LpIters USING (node) GROUP BY 1),
@@ -485,9 +417,9 @@ object CommunityQueries extends QueryModule {
     */
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
     val dec: Column => Column = _.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    val (_, edges0) = bulkEdges(spark, dir)
-    val edges = Materialize(edges0)
-    val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    val edges = Materialize(Graph.mirrored(
+      Graph.oriented(Graph.bulk(Tables.read(spark, dir, "lineitem")))))
+    val deg = Graph.degree(edges)
     val pairs = edges
       .join(deg.select(col("node").as("src"), col("deg").as("x")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("y")), "dst")
@@ -509,14 +441,7 @@ object CommunityQueries extends QueryModule {
         .as("r"))
   }
 
-  val assortativitySql: String = """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_quantity >= 45),
-    e AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-    deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
+  val assortativitySql: String = s"""${Graph.edgeCtes(bulk = true)},
     p AS (
       SELECT dx.deg AS x, dy.deg AS y
       FROM e JOIN deg dx ON e.src = dx.node JOIN deg dy ON e.dst = dy.node),

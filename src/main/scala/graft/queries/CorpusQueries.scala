@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.operators.{Dedup, Materialize, TextAnalysis}
+import graft.operators.{Dedup, Graph, Materialize, Relational, TextAnalysis}
 import graft.sources.Tables
 
 /** Corpus-scale operators, round-6 continuation: exact duplicated-span
@@ -495,54 +495,23 @@ object CorpusQueries extends QueryModule {
     *   broadcast the join becomes an SMJ whose hub partition no plan
     *   rewrite can split (AQE's skew rule needs bare shuffle-stage
     *   children; the rank side is always a join output) — THERE, set
-    *   salts > 1: edges salt by hash(dst) % salts, ranks replicate,
-    *   and a hub spreads over `salts` reducers by construction.
+    *   salts > 1: [[Relational.saltedDimJoin]] salts edges by
+    *   hash(dst) % salts and replicates ranks, so a hub spreads over
+    *   `salts` reducers by construction.
     *   Results are salt-invariant (`GraphSkewSpec` pins ranks at
     *   salts = 8 against a planted hub and the driver replay).
     */
   def pagerankOn(li: DataFrame, nodes: DataFrame, salts: Int = 1): DataFrame = {
-    // NOT a self-join: group each order's (distinct) parts and expand
-    // the directed pairs ROW-LOCALLY — one aggregation exchange instead
-    // of reshuffling both join sides by orderkey, bounded by the per-
-    // order part count (the cross_source_overlap shape). collect_set
-    // also absorbs the (order, part) dedup a self-join would need a
-    // separate distinct() for.
-    // pair expansion via two codegen'd explodes (nested transform/filter
-    // HOFs are CodegenFallback — interpreted per element)
-    val perOrder = li
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-    // dedup ORIENTED pairs (src < dst — half the rows through the
-    // distinct's shuffle), then mirror map-side: same symmetric edge
-    // set, half the exchange volume on the build's dominant stage
-    val oriented = perOrder
-      .select(col("ps"), explode(col("ps")).as("src"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") < col("dst"))
-      .distinct()
-    val edges = oriented.union(oriented.select(col("dst"), col("src")))
     // out-degree as a window count over the SAME src partitioning (a
     // groupBy+join would read the un-materialized edge plan twice and
     // recompute the whole build); materialized once for the 3
-    // iterations, with the row-local dst-hash salt column when salted
-    val esrc = Materialize {
-      val od = edges.withColumn("od",
-        count(lit(1)).over(Window.partitionBy("src")))
-      if (salts == 1) od
-      else od.withColumn("salt", pmod(hash(col("dst")), lit(salts)))
-    }
-    // replication via crossJoin with a literal salts-row frame: ONE
-    // copy of the rank lineage (a per-replica union would re-plan the
-    // whole rank subtree per salt per iteration, compounding across
-    // iterations) and a multiplicative size estimate
-    val saltDf = nodes.sparkSession.range(0, salts.toLong)
-      .select(col("id").cast("int").as("salt"))
-    val joinKeys = if (salts == 1) Seq("src") else Seq("src", "salt")
-    def rankSide(df: DataFrame): DataFrame =
-      if (salts == 1) df else df.crossJoin(saltDf)
+    // iterations
+    val esrc = Materialize(Graph.mirrored(Graph.oriented(li))
+      .withColumn("od", count(lit(1)).over(Window.partitionBy("src"))))
     var pr = nodes.withColumn("pr", lit(1000000L))
     for (_ <- 1 to PrIters) {
-      val contrib = esrc
-        .join(rankSide(pr.select(col("node").as("src"), col("pr"))), joinKeys)
+      val contrib = Relational.saltedDimJoin(esrc,
+          pr.select(col("node").as("src"), col("pr")), Seq("src"), col("dst"), salts)
         .select(col("dst").as("node"), expr("pr div od").as("c"))
         .groupBy("node").agg(sum("c").as("cs"))
       pr = nodes.join(contrib, Seq("node"), "left")
@@ -554,19 +523,13 @@ object CorpusQueries extends QueryModule {
   }
 
   val pagerankSql: String = {
-    val base = """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    e AS (
-      SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
-    od AS (SELECT src, count(*) AS od FROM e GROUP BY src),
+    val base = s"""${Graph.edgeCtes(bulk = false)},
     p0 AS (SELECT p_partkey AS node, cast(1000000 AS BIGINT) AS pr FROM part)"""
     val iters = (1 to PrIters).map { k =>
       s"""
     c$k AS (
-      SELECT e.dst AS node, sum(p.pr // o.od) AS cs
-      FROM e JOIN od o ON e.src = o.src JOIN p${k - 1} p ON e.src = p.node
+      SELECT e.dst AS node, sum(p.pr // o.deg) AS cs
+      FROM e JOIN deg o ON e.src = o.node JOIN p${k - 1} p ON e.src = p.node
       GROUP BY e.dst),
     p$k AS (
       SELECT n.node,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{DupClusters, Materialize, Relational, TextAnalysis, ZOrder}
+import graft.operators.{DupClusters, Graph, Materialize, Relational, TextAnalysis, ZOrder}
 import graft.sources.Tables
 
 /** Graph, warehouse-ops, and corpus-insight operators: triangle
@@ -22,76 +22,30 @@ object InsightQueries extends QueryModule {
 
   // ----------------------------------------------------- triangle count
 
-  /** Triangle count on the BULK part co-purchase graph (parts sharing
-    * an order with quantity ≥ 45 on both lines), via degree-ordered
-    * orientation: each undirected edge points from its lower-(degree,
-    * id) endpoint to the higher one, making the graph acyclic with
-    * out-degrees bounded by O(√m) on skewed graphs — the standard
-    * distributed-triangle trick (wedge fan-out is bounded by
-    * out-degree, so one boilerplate hub node cannot go quadratic).
-    * Each triangle u<v<w (in the orientation order) is counted exactly
-    * once: as the wedge u→v→w closed by the edge u→w.
-    *
-    * The quantity filter is the operator's selectivity knob, not a
-    * dodge: co-occurrence graphs densify quadratically with basket
-    * size, and the wedge count — the true cost driver — grows ~m^1.5
-    * even oriented. Thresholding to the analytically interesting
-    * subgraph (bulk co-purchases) is exactly what a 100 TB deployment
-    * does before an all-triangles pass.
+  /** Triangle count on the BULK part co-purchase graph ([[Graph]]:
+    * parts sharing an order with quantity ≥ 45 on both lines), via
+    * [[Graph.degreeOrdered]] orientation. Each triangle u<v<w (in the
+    * orientation order) is counted exactly once: as the wedge u→v→w
+    * closed by the edge u→w. The quantity filter bounds the wedge
+    * count — the true cost driver, which grows ~m^1.5 even oriented.
     */
   def triangleCount(spark: SparkSession, dir: String): DataFrame = {
-    // row-local pair expansion from per-order part sets (the pagerank
-    // edge-build shape): one aggregation exchange instead of reshuffling
-    // both sides of an orderkey self-join, and collect_set absorbs the
-    // (order, part) dedup
-    val perOrder = Tables.read(spark, dir, "lineitem")
-      .filter(col("l_quantity") >= 45)
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-    val und = Materialize(perOrder
-      .select(col("ps"), explode(col("ps")).as("a"))
-      .select(col("a"), explode(col("ps")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct())
-    val deg = und.select(explode(array(col("a"), col("b"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-    val aFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
-    val oriented = Materialize(withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("v")))
-    val e2 = oriented.select(col("u").as("v2"), col("v").as("w"))
-    val wedges = Materialize(
-      oriented.join(e2, col("v") === col("v2")).select(col("u"), col("v"), col("w")))
-    val e3 = oriented.select(col("u").as("u3"), col("v").as("w3"))
-    val tri = wedges.join(e3, col("u") === col("u3") && col("w") === col("w3"))
+    val und = Materialize(
+      Graph.oriented(Graph.bulk(Tables.read(spark, dir, "lineitem")), "a", "b"))
+    val deg = Graph.endpointDegree(und)
+    val dag = Materialize(Graph.degreeOrdered(und, deg))
+    val wedges = Materialize(Graph.wedges(dag))
     deg.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(und.agg(count(lit(1)).as("n_edges")))
       .crossJoin(wedges.agg(count(lit(1)).as("n_wedges")))
-      .crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
+      .crossJoin(Graph.triangles(wedges, dag).agg(count(lit(1)).as("n_triangles")))
   }
 
-  val triangleCountSql: String = """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_quantity >= 45),
-    und AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    deg AS (
-      SELECT n, count(*) AS d
-      FROM (SELECT a AS n FROM und UNION ALL SELECT b FROM und)
-      GROUP BY n),
-    o AS (
-      SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND a < b) THEN a ELSE b END AS u,
-             CASE WHEN da.d < db.d OR (da.d = db.d AND a < b) THEN b ELSE a END AS v
-      FROM und JOIN deg da ON und.a = da.n JOIN deg db ON und.b = db.n),
-    w AS (SELECT e1.u, e1.v, e2.v AS w FROM o e1 JOIN o e2 ON e1.v = e2.u)
+  val triangleCountSql: String = s"""${Graph.edgeCtes(bulk = true)},${Graph.triangleCtes}
     SELECT (SELECT count(*) FROM deg) AS n_nodes,
            (SELECT count(*) FROM und) AS n_edges,
            (SELECT count(*) FROM w) AS n_wedges,
-           (SELECT count(*) FROM w JOIN o ON w.u = o.u AND w.w = o.v) AS n_triangles"""
+           (SELECT n_triangles FROM t) AS n_triangles"""
 
   // ---------------------------------------------------- entity resolve
 
@@ -425,9 +379,9 @@ object InsightQueries extends QueryModule {
   /** Ranked candidate count for the link-prediction report. */
   val LinkTopK = 30
 
-  /** Link prediction on the BULK co-purchase graph (same subgraph as
-    * `triangle_count`): for every NON-adjacent part pair sharing at
-    * least one (non-hub) neighbor, the common-neighbor count plus the
+  /** Link prediction on the BULK co-purchase graph ([[Graph]]): for
+    * every NON-adjacent part pair sharing at least one (non-hub)
+    * neighbor, the common-neighbor count plus the
     * preferential-attachment score deg(x)·deg(y), ranked. The "which
     * products will be bought together next" / "which docs will link"
     * primitive.
@@ -439,16 +393,9 @@ object InsightQueries extends QueryModule {
     * cross-engine total with the (x, y) tiebreak.
     */
   def linkPredict(spark: SparkSession, dir: String): DataFrame = {
-    val perOrder = Tables.read(spark, dir, "lineitem")
-      .filter(col("l_quantity") >= 45)
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-    val und = Materialize(perOrder
-      .select(col("ps"), explode(col("ps")).as("a"))
-      .select(col("a"), explode(col("ps")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct())
-    val deg = und.select(explode(array(col("a"), col("b"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+    val und = Materialize(
+      Graph.oriented(Graph.bulk(Tables.read(spark, dir, "lineitem")), "a", "b"))
+    val deg = Graph.endpointDegree(und)
     // mirrored incidence list, then keep only low-degree wedge centers
     val m = und.select(col("a").as("z"), col("b").as("x"))
       .union(und.select(col("b").as("z"), col("a").as("x")))
@@ -469,29 +416,18 @@ object InsightQueries extends QueryModule {
       .limit(LinkTopK)
   }
 
-  val linkPredictSql: String = s"""
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_quantity >= 45),
-    und AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    deg AS (
-      SELECT n, count(*) AS d
-      FROM (SELECT a AS n FROM und UNION ALL SELECT b FROM und)
-      GROUP BY n),
-    m AS (SELECT a AS z, b AS x FROM und UNION ALL SELECT b, a FROM und),
-    lz AS (SELECT m.z, m.x FROM m JOIN deg ON m.z = deg.n
-           WHERE deg.d <= $LinkDegCap),
+  val linkPredictSql: String = s"""${Graph.edgeCtes(bulk = true)},
+    lz AS (SELECT e.src AS z, e.dst AS x FROM e JOIN deg ON e.src = deg.node
+           WHERE deg.deg <= $LinkDegCap),
     cn AS (
       SELECT p.x AS x, q.x AS y, count(*) AS cn
       FROM lz p JOIN lz q ON p.z = q.z AND p.x < q.x
       GROUP BY 1, 2),
     na AS (
       SELECT cn.* FROM cn
-      WHERE NOT EXISTS (SELECT 1 FROM und WHERE und.a = cn.x AND und.b = cn.y))
-    SELECT na.x, na.y, na.cn, cast(dx.d * dy.d AS BIGINT) AS pa
-    FROM na JOIN deg dx ON na.x = dx.n JOIN deg dy ON na.y = dy.n
+      WHERE NOT EXISTS (SELECT 1 FROM und WHERE und.src = cn.x AND und.dst = cn.y))
+    SELECT na.x, na.y, na.cn, cast(dx.deg * dy.deg AS BIGINT) AS pa
+    FROM na JOIN deg dx ON na.x = dx.node JOIN deg dy ON na.y = dy.node
     ORDER BY cn DESC, pa DESC, x, y LIMIT $LinkTopK"""
 
   // ------------------------------------------------- frequent itemsets
@@ -586,37 +522,20 @@ object InsightQueries extends QueryModule {
   /** Global clustering coefficient of the BULK co-purchase graph:
     * C = 3·triangles / Σ_v C(d_v, 2) — the transitivity number that
     * separates a clustered product catalog from a random one of the
-    * same degree sequence. Triangles reuse the degree-ordered
-    * enumeration shape of [[triangleCount]] (wedge fan-out bounded by
-    * orientation degree); the wedge denominator is one exact moment
-    * over the degree frame, with d(d−1) in DECIMAL(38,0)/HUGEINT (a
-    * 10⁹-degree hub squares past 2⁶³). The division is one agreed
-    * double expression.
+    * same degree sequence. Triangles come from the same degree-ordered
+    * enumeration as [[triangleCount]] ([[Graph.degreeOrdered]]: wedge
+    * fan-out bounded by orientation degree); the wedge denominator is
+    * one exact moment over the degree frame, with d(d−1) in
+    * DECIMAL(38,0)/HUGEINT (a 10⁹-degree hub squares past 2⁶³). The
+    * division is one agreed double expression.
     */
   def clusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
     val dec: Column => Column = _.cast(DecimalType(38, 0))
-    val perOrder = Tables.read(spark, dir, "lineitem")
-      .filter(col("l_quantity") >= 45)
-      .groupBy("l_orderkey").agg(collect_set(col("l_partkey")).as("ps"))
-    val und = Materialize(perOrder
-      .select(col("ps"), explode(col("ps")).as("a"))
-      .select(col("a"), explode(col("ps")).as("b"))
-      .filter(col("a") < col("b"))
-      .distinct())
-    val deg = und.select(explode(array(col("a"), col("b"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val withDeg = und
-      .join(deg.select(col("n").as("a"), col("d").as("da")), "a")
-      .join(deg.select(col("n").as("b"), col("d").as("db")), "b")
-    val aFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
-    val oriented = Materialize(withDeg.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("v")))
-    val e2 = oriented.select(col("u").as("v2"), col("v").as("w"))
-    val wedges = oriented.join(e2, col("v") === col("v2"))
-      .select(col("u"), col("v"), col("w"))
-    val e3 = oriented.select(col("u").as("u3"), col("v").as("w3"))
-    val tri = wedges.join(e3, col("u") === col("u3") && col("w") === col("w3"))
+    val und = Materialize(
+      Graph.oriented(Graph.bulk(Tables.read(spark, dir, "lineitem")), "a", "b"))
+    val deg = Graph.endpointDegree(und)
+    val dag = Materialize(Graph.degreeOrdered(und, deg))
+    val tri = Graph.triangles(Graph.wedges(dag), dag)
     // w2 = Σ d(d−1) = 2·wedges-centered; C = 3T/W = 6T/w2
     deg.agg(count(lit(1)).as("n_nodes"),
         sum(dec(col("d")) * dec(col("d") - 1)).as("w2"))
@@ -628,25 +547,9 @@ object InsightQueries extends QueryModule {
           / col("w2").cast("double"), 6) + lit(0.0)).as("global_cc"))
   }
 
-  val clusteringCoeffSql: String = """
-    WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-                WHERE l_quantity >= 45),
-    und AS (
-      SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-    deg AS (
-      SELECT n, count(*) AS d
-      FROM (SELECT a AS n FROM und UNION ALL SELECT b FROM und)
-      GROUP BY n),
-    o AS (
-      SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND a < b) THEN a ELSE b END AS u,
-             CASE WHEN da.d < db.d OR (da.d = db.d AND a < b) THEN b ELSE a END AS v
-      FROM und JOIN deg da ON und.a = da.n JOIN deg db ON und.b = db.n),
-    w AS (SELECT e1.u, e1.v, e2.v AS w FROM o e1 JOIN o e2 ON e1.v = e2.u),
-    t AS (SELECT count(*) AS n_triangles FROM w JOIN o ON w.u = o.u AND w.w = o.v),
+  val clusteringCoeffSql: String = s"""${Graph.edgeCtes(bulk = true)},${Graph.triangleCtes},
     dm AS (SELECT count(*) AS n_nodes,
-             cast(sum(cast(d AS HUGEINT) * (d - 1)) AS HUGEINT) AS w2 FROM deg)
+             cast(sum(cast(deg.deg AS HUGEINT) * (deg.deg - 1)) AS HUGEINT) AS w2 FROM deg)
     SELECT dm.n_nodes, (SELECT count(*) FROM und) AS n_edges, t.n_triangles,
       cast(dm.w2 // 2 AS BIGINT) AS n_centered_wedges,
       round(cast(cast(6 AS HUGEINT) * t.n_triangles AS DOUBLE)
@@ -682,8 +585,8 @@ object InsightQueries extends QueryModule {
       .distinct())
     // both score joins are fact × per-key-single-row frames where a hot
     // part (or a whale customer) concentrates one SMJ reducer and AQE's
-    // skew split structurally can't fire (QuerySkewSpec) — salted like
-    // pagerank: physical distribution only, exact sums unchanged
+    // skew split structurally can't fire (QuerySkewSpec) — salted:
+    // physical distribution only, exact sums unchanged
     val a1 = e.groupBy("p").agg(count(lit(1)).as("a1"))
     val h1 = Relational.saltedDimJoin(e, a1, Seq("p"), col("c"), HitsSalt)
       .groupBy("c").agg(sum(dec(col("a1"))).as("h1"))

@@ -103,4 +103,43 @@ class CheckpointReleaseSpec extends AnyFunSuite {
       case _ => ()
     }
   }
+
+  /** A bulk co-purchase corpus of overlapping 4-part orders (a chain of
+    * cliques) in a fresh directory: every k_core round keeps nodes, and
+    * bfs_hops settles a new hop every round. */
+  private lazy val graphDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-release").toString
+    (0L until 24L).flatMap(o => (o until o + 4).map(p => (o, p)))
+      .toDF("l_orderkey", "l_partkey")
+      .withColumn("l_quantity", org.apache.spark.sql.functions.lit(50.0))
+      .coalesce(1).write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  test("k_core releases every superseded round's active set") {
+    val dir = graphDir // written before the pinned-RDD baseline
+    val ((core, peak), leaked) = leakedAfter(withPeak {
+      val out = graft.queries.CommunityQueries.kCore(spark, dir)
+      out.count()
+      out
+    })
+    assert(core.count() > 0)
+    // the result reads the edges and the last active set
+    assert(leaked.size <= 2, s"k_core left ${leaked.size} RDDs pinned: $leaked")
+    // mid-loop: edges + previous + next active set (+1 slack), never O(rounds)
+    assert(peak <= 4, s"k_core pinned $peak frames concurrently (O(1) contract)")
+  }
+
+  test("bfs_hops releases its edges and every superseded settled set") {
+    val dir = graphDir // written before the pinned-RDD baseline
+    val ((dist, peak), leaked) = leakedAfter(withPeak {
+      val out = graft.queries.CommunityQueries.bfsHops(spark, dir)
+      out.count()
+      out
+    })
+    assert(dist.filter($"d" === 4L).count() > 0)
+    // the result reads only the last settled set
+    assert(leaked.size <= 1, s"bfs_hops left ${leaked.size} RDDs pinned: $leaked")
+    assert(peak <= 4, s"bfs_hops pinned $peak frames concurrently (O(1) contract)")
+  }
 }
