@@ -17,7 +17,8 @@ import graft.sources.Tables
   *     warm, then split wall-clock into CONSTRUCTION (the `fn(spark, dir)`
   *     call — blocking Materialize jobs land here), PLANNING and
   *     EXECUTION, printing every job and stage observed; the PROFILE
-  *     line ends with the query's job count and its construction share
+  *     line ends with the query's job count, its construction share and
+  *     its parquet schema-inference jobs
   *   sbt "runMain graft.Dev audit"
   *     physical-plan operator counts of every query at sf0.001
   *   sbt "runMain graft.Dev detsweep [sfDir]"
@@ -94,7 +95,8 @@ object Dev {
     // every job carries the phase that launched it (a local property,
     // inherited by threads the query spawns), so the counts are per phase
     val phaseKey = "graft.dev.phase"
-    val (phaseJobs, constructJobs) = (new AtomicInteger, new AtomicInteger)
+    val (phaseJobs, constructJobs, schemaJobs) =
+      (new AtomicInteger, new AtomicInteger, new AtomicInteger)
     @volatile var collect = false
     val sb = new StringBuilder
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -104,6 +106,7 @@ object Dev {
         prop(phaseKey).foreach { ph =>
           phaseJobs.incrementAndGet()
           if (ph == "construct") constructJobs.incrementAndGet()
+          if (isSchemaJob(s)) schemaJobs.incrementAndGet()
         }
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = if (collect) {
@@ -128,7 +131,7 @@ object Dev {
     for (name <- qs) {
       val fn = SparkEntry.queries(name)
       warm(spark, name, dir)
-      sb.clear(); phaseJobs.set(0); constructJobs.set(0); collect = true
+      sb.clear(); phaseJobs.set(0); constructJobs.set(0); schemaJobs.set(0); collect = true
       val t0 = System.nanoTime()
       sc.setLocalProperty(phaseKey, "construct")
       val df = fn(spark, dir)
@@ -142,10 +145,25 @@ object Dev {
       sc.setLocalProperty(phaseKey, null)
       Thread.sleep(200) // let listener drain
       collect = false
-      println(f"PROFILE $name total=${(t3 - t0) / 1e9}%.3f construct=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f jobs=${phaseJobs.get} construct_jobs=${constructJobs.get}")
+      println(f"PROFILE $name total=${(t3 - t0) / 1e9}%.3f construct=${(t1 - t0) / 1e9}%.3f plan=${(t2 - t1) / 1e9}%.3f exec=${(t3 - t2) / 1e9}%.3f jobs=${phaseJobs.get} construct_jobs=${constructJobs.get} schema_jobs=${schemaJobs.get}")
       print(sb.toString)
     }
   }
+
+  /** A job's short call site, or its last stage's name when the job
+    * carries none.
+    */
+  private[graft] def callSite(s: SparkListenerJobStart): String =
+    Option(s.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+      .getOrElse(s.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name))
+
+  /** A parquet schema-inference job: a `parquet at` call site outside any
+    * SQL execution (a parquet write carries an execution id). The rule
+    * perfbench's `JobLog` applies.
+    */
+  private[graft] def isSchemaJob(s: SparkListenerJobStart): Boolean =
+    callSite(s).startsWith("parquet at") &&
+      Option(s.properties).forall(_.getProperty("spark.sql.execution.id") == null)
 
   private def audit(spark: SparkSession): Unit =
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {

@@ -1,7 +1,14 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Typed readers for the test corpus. The one normalization that matters:
   * `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4 refuses to read
@@ -10,6 +17,15 @@ import org.apache.spark.sql.functions._
   * microsecond-precision `ts` (matching DuckDB's ns→us cast truncation)
   * and an exact `ts_us` long, in ONE place so every query sees the same
   * clock.
+  *
+  * Every table is read with its schema given, so building a frame runs no
+  * Spark job: without one, `spark.read.parquet` launches a schema-
+  * inference job per read, a fixed cost that dominates cheap queries.
+  * The schema comes from the table's footer, read on the driver with the
+  * code that job runs per file, so it is the schema inference would give.
+  * There is no schema memo: the footer read is one small driver-side file
+  * read, and a memo could serve a stale schema for a table rewritten in
+  * place.
   */
 object Tables {
 
@@ -33,8 +49,33 @@ object Tables {
 
   val NanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
 
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema Spark's inference job would give `path`: Spark-written
+    * files keep their embedded Spark schema, others are converted under
+    * the session's `nanosAsLong`, `binaryAsString` and `int96AsTimestamp`.
+    * A directory table (as Spark writes one) takes the schema of its first
+    * data file by path, skipping `_`- and `.`-prefixed names as Spark's
+    * listing does.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    def isData(f: FileStatus) = f.isFile && !f.getPath.getName.startsWith("_") &&
+      !f.getPath.getName.startsWith(".")
+    val file = if (st.isFile) st else fs.listStatus(p).filter(isData)
+      .sortBy(_.getPath.toString).headOption
+      .getOrElse(throw new FileNotFoundException(s"no parquet data file in $path"))
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** Events with `ts` normalized to microsecond TimestampType and `ts_us`
     * as epoch-micros long, whatever the file's physical clock type:

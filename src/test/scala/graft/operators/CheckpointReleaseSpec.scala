@@ -1,8 +1,11 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{CostGuard, TestSpark}
 
 /** The iterative operators' storage contract (guide §5): every greedy /
   * label-propagation round re-materializes a corpus-sized frame, and the
@@ -40,11 +43,29 @@ class CheckpointReleaseSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(l)
   }
 
+  /** Runs `body` and returns its result with the RDDs it persisted that
+    * are still persisted after it. Every RDD persisted during the call is
+    * held strongly from the first job start that sees it: Spark's
+    * `getPersistentRDDs` holds RDDs weakly, and `ContextCleaner`
+    * unpersists a collected one, so a GC mid-test would otherwise hide a
+    * leak. Exact: [[CostGuard.jobsOf]]'s marker job arrives only after
+    * every job start of the call has reached this listener too.
+    */
   private def leakedAfter[A](body: => A): (A, Set[Int]) = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val out = body
-    (out, (sc.getPersistentRDDs.keySet -- before).toSet)
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, RDD[_]]
+    def hold(): Unit =
+      (sc.getPersistentRDDs -- before).foreach { case (id, r) => held.put(id, r) }
+    val l = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = hold()
+    }
+    sc.addSparkListener(l)
+    val out = try CostGuard.jobsOf(body)._1 finally sc.removeSparkListener(l)
+    hold()
+    (out, held.asScala.collect {
+      case (id, r) if r.getStorageLevel != StorageLevel.NONE => id
+    }.toSet)
   }
 
   test("kCenter releases every superseded round's checkpoint (and the last)") {

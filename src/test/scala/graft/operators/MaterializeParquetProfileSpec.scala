@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{array, col, lit, struct}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{SparkEntry, TestSpark}
+import graft.{CostGuard, SparkEntry, TestSpark}
 
 /** The cluster-scale Materialize deployment profile, executed end to
   * end: `spark.graft.materialize=parquet` stages every operator-internal
@@ -37,4 +39,20 @@ class MaterializeParquetProfileSpec extends AnyFunSuite {
         s"$q diverged between eager and parquet materialization")
       assert(eager.nonEmpty)
     }
+
+  test("parquet mode reads its frame back with the written schema, no schema job") {
+    // non-nullable, nested and string columns: the read-back schema must be
+    // the one inference gives the written files, not the frame's own
+    val df = spark.range(0, 40).select(col("id"), (col("id") % 3).cast("int").as("g"),
+      array(col("id"), col("id") * 2).as("arr"),
+      struct(col("id").as("a"), lit("x").as("b")).as("s"))
+    val (back, jobs) = CostGuard.jobsOf(withStrategy("parquet")(Materialize(df)))
+    val schemaJobs = jobs.filter(j => j.schema && j.site.startsWith("parquet at Materialize"))
+    assert(schemaJobs.isEmpty, s"read-back ran schema jobs: $schemaJobs")
+    assert(jobs.nonEmpty, "the frame was never written")
+    val dir = new Path(back.inputFiles.head).getParent.toString
+    assert(back.schema == spark.read.parquet(dir).schema)
+    assert(back.collect().map(_.toString).sorted.toSeq ==
+      df.collect().map(_.toString).sorted.toSeq)
+  }
 }
